@@ -142,15 +142,6 @@ class EngineConfig:
     # (~8 B/key + LongHashedRelation overhead ≈ 100 MB per 6M keys; 16M keys
     # ≈ 270 MB — comfortably under a 4 GB executor's broadcast headroom)
     lww_broadcast_key_budget: int = 16_000_000
-    # run_streaming_stateful payload routing. False (default): winner payload
-    # columns ride through the applyInPandasWithState Arrow boundary with the
-    # ordinals — fastest while payloads are modest (≲1 KB avg), zero extra
-    # jobs per trigger. True: the state op sees/emits ONLY keys + ordinals and
-    # each trigger joins the winners back to an offset-pushdown WAL re-scan
-    # JVM-side — the at-scale setting when payloads are whole source files
-    # (KBs-MBs), where Arrow-round-tripping every event's payload through
-    # Python dominates the trigger wall time.
-    stateful_payload_join_back: bool = False
 
     # --- target layout ---
     target_buckets: int = 16            # bucket(16, repo) partitioning (FIXTURES.md §4)

@@ -7,6 +7,8 @@ has a matching ANSI-SQL oracle in __spark_entry__.py so DuckDB can verify it.
 
 from __future__ import annotations
 
+from decimal import Decimal
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -999,35 +1001,50 @@ def pmi_bigrams(
 
 
 def _exact_root_pow_q(n: Column, m: int) -> Column:
-    """``floor(n^(1/m) * 1e6)`` EXACTLY for integer ``1 <= m <= 4`` and a
-    non-negative BIGINT column (the check arithmetic must fit
-    DECIMAL(38,0): ``n * 10^(6m)`` needs ``n <= 1e14`` at m=4 — a 100 T
-    token corpus): a float ``pow`` only SEEDS the guess, and
-    the answer is pinned as the largest candidate ``k`` in guess±2 with
-    ``k^m <= n * 10^(6m)`` — checked in DECIMAL(38,0), so a 1-ulp
-    JVM-vs-libm ``pow`` divergence can shift the guess but never the
-    result (the r4 transcendental-boundary gate risk, closed)."""
+    """``floor(n^(1/m) * 1e6)`` EXACTLY, as DECIMAL(21,0), for integer
+    ``1 <= m <= 4`` and a non-negative BIGINT column ``n <= 1e14`` (a 100 T
+    token corpus; the result reaches 1e20 at m=1, past BIGINT).
+
+    m=1 is the exact decimal product ``n * 1e6``. For m >= 2 a float ``pow``
+    only SEEDS the guess, and the answer is pinned as the largest candidate
+    ``k`` in guess±2 with ``k^m <= n * 10^(6m)``, checked in decimals sized
+    per m — so a 1-ulp JVM-vs-libm ``pow`` divergence can shift the guess
+    but never the result (the r4 transcendental-boundary gate risk, closed).
+    ``n * 10^(6m)`` itself can reach 1e38 (m=4, n=1e14), one digit past
+    DECIMAL(38,0), so the check compares ``ceil(k^m / 10^(6m)) <= n``
+    instead, and a candidate whose ``k^m`` would pass DECIMAL(38,0) (past
+    ``k_max``) exceeds every in-range target and is never formed."""
+    out = "decimal(21,0)"
+    if m == 1:
+        return (n.cast("decimal(20,0)") * F.lit(10**6).cast("decimal(7,0)")).cast(out)
     g = F.floor(F.pow(n.cast("double"), F.lit(1.0 / m)) * F.lit(1e6)).cast(
         "long"
     )
-    target = n.cast("decimal(20,0)") * F.lit(10 ** (6 * m)).cast(
-        f"decimal({6 * m + 1},0)"
-    )
+    k_max = int(round((10**38) ** (1.0 / m)))
+    while k_max**m >= 10**38:
+        k_max -= 1
+    dec = f"decimal({len(str(k_max))},0)"
+    k_max = min(k_max, 2**63 - 1)  # candidates are BIGINT
+    scale = F.lit(Decimal(10 ** (6 * m))).cast(f"decimal({6 * m + 1},0)")
 
-    def powm(k: Column) -> Column:
-        p = k.cast("decimal(12,0)")
+    def fits(k: Column) -> Column:
+        p = k.cast(dec)
         r = p
         for _ in range(m - 1):
             r = r * p
-        return r
+        rem = r % scale
+        # (r - rem) is a multiple of scale, so this division is exact
+        q = (r - rem) / scale
+        return (q < n) | ((q == n) & (rem == 0))
 
     cands = F.array(
         *[
-            F.when((c >= 0) & (powm(c) <= target), c)
+            # CASE keeps k^m unformed past k_max (no DECIMAL overflow)
+            F.when((c >= 0) & (c <= k_max), F.when(fits(c), c))
             for c in (g + F.lit(d) for d in (-2, -1, 0, 1, 2))
         ]
     )
-    return F.coalesce(F.array_max(cands), F.lit(0)).cast("long")
+    return F.coalesce(F.array_max(cands), F.lit(0)).cast(out)
 
 
 def temperature_weights(
@@ -1064,9 +1081,9 @@ def temperature_weights(
         F.sum(token_count(F.col(text_col))).cast("long").alias("n_tokens")
     )
     m = round(temperature)
-    # m <= 4 keeps k^m and n*10^(6m) inside DECIMAL(38,0) for corpus-scale
-    # token counts (n <= 1e14 at m=4); larger/non-integer T uses the float
-    # path with its documented boundary caveat
+    # m <= 4 keeps the exact root's decimal check inside DECIMAL(38,0) for
+    # corpus-scale token counts (n <= 1e14); larger/non-integer T uses the
+    # float path with its documented boundary caveat
     if abs(temperature - m) < 1e-12 and 1 <= m <= 4:
         pow_q = _exact_root_pow_q(F.col("n_tokens"), int(m))
     else:

@@ -23,7 +23,7 @@ All pure DataFrame ops — no Python in the row path.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 # Resolved-action codes consumed by LakeTable.merge().
@@ -145,6 +145,24 @@ def split_pk_changes(
     )
 
 
+def lww_rank(env: DataFrame) -> tuple[Column, Column]:
+    """``(ordinal, is_delete)`` of an envelope row — the last-writer-wins
+    order every resolver shares (batch ``resolve_lww`` and the streaming
+    state store), so all drive modes resolve identically, PK-split ties
+    included.
+
+    ordinal = ``offset * 128 + seq`` as one LONG (WAL/LSN offsets are
+    non-negative and the per-offset sub-sequence is < 128 — PK-split emits
+    seq 0/1). is_delete = ``value.op IS NULL OR value.op = 'd'``: a tombstone
+    or a delete. value IS NULL <=> op IS NULL, as op is a required envelope
+    field (Envelope.java:224-237 builder validation), and testing the FIELD
+    keeps nested-schema pruning alive — IsNull(value) references the whole
+    struct and would force a key-only scan to read every payload column."""
+    seq = (F.col("seq") if "seq" in env.columns else F.lit(0)).cast("long")
+    op = F.col("value").getField("op")
+    return F.col("offset").cast("long") * 128 + seq, op.isNull() | (op == "d")
+
+
 def resolve_lww(
     env: DataFrame,
     *,
@@ -159,10 +177,9 @@ def resolve_lww(
     """Reduce envelope rows to one action per key: the last writer by (offset, seq).
 
     Tombstones (value IS NULL) and deletes both resolve to ACTION_DELETE; everything
-    else upserts its ``after`` image. The ordering key is one LONG ordinal
-    ``offset * 128 + seq`` (WAL/LSN offsets are non-negative and the per-offset
-    sub-sequence is < 128 — PK-split emits seq 0/1), and the carried value is a
-    slim (after, is_delete, ts_ms, offset) struct.
+    else upserts its ``after`` image. The ordering key is the LONG ordinal of
+    :func:`lww_rank`, and the carried value is a slim (after, is_delete,
+    ts_ms, offset) struct.
 
     Three strategy values, two physical plans, same result:
 
@@ -232,21 +249,15 @@ def resolve_lww(
 
     Returns: key_cols*, action, after(payload struct), _offset, _ts_ms.
     """
-    seq = (F.col("seq") if "seq" in env.columns else F.lit(0)).cast("long")
     val0 = F.col("value")
-    # value IS NULL <=> op IS NULL: op is a required envelope field
-    # (Envelope.java:224-237 builder validation), and checking the FIELD keeps
-    # nested-schema pruning alive — IsNull(value) references the whole struct
-    # and forces the scan to read every payload column even in the phase-1
-    # winner aggregation that only needs the key.
-    is_del0 = val0.getField("op").isNull() | (val0.getField("op") == "d")
+    ordinal, is_del0 = lww_rank(env)
+    ordinal = ordinal.alias("_ord")
     slim = F.struct(
         F.when(~is_del0, val0.getField("after")).alias("after"),
         is_del0.alias("is_delete"),
         val0.getField("ts_ms").alias("ts_ms"),  # null propagates from null value
         F.col("offset").cast("long").alias("offset"),
     )
-    ordinal = (F.col("offset").cast("long") * 128 + seq).alias("_ord")
     key_refs = [F.col("key").getField(c).alias(c) for c in key_cols]
     chosen = strategy
     if strategy in ("ordinal", "auto"):
@@ -257,10 +268,8 @@ def resolve_lww(
         # (content included); the payload-bearing ``env`` is read only by the
         # broadcast-filtered phase 2.
         wsrc = winner_source if winner_source is not None else env
-        wseq = (F.col("seq") if "seq" in wsrc.columns else F.lit(0)).cast("long")
-        wordinal = (F.col("offset").cast("long") * 128 + wseq).alias("_ord")
         win = (
-            wsrc.select(*key_refs, wordinal)
+            wsrc.select(*key_refs, lww_rank(wsrc)[0].alias("_ord"))
             .groupBy(*key_cols)
             .agg(F.max("_ord").alias("_ord"))
         )

@@ -20,11 +20,16 @@ analogue), continue from the next offset. Lineage rows in ``_checkpoints`` are
 observability, not the recovery source — they can trail the manifest after a crash
 and the engine still recovers exactly.
 
-Two drive modes sharing the same batch function:
+Three drive modes over one micro-batch core:
   * run(): deterministic offset-range batch replay (Trigger.AvailableNow analogue,
     what the bench measures);
   * run_streaming(): Structured Streaming file source over the WAL directory with
-    foreachBatch + checkpointLocation (the production shape).
+    foreachBatch + checkpointLocation (the production shape);
+  * run_streaming_stateful(): the same stream through a per-key LWW state store,
+    merging only the keys whose winner changed.
+run() and run_streaming() slice batches through ``_step`` and drain pending
+snapshot chunks through ``_drain_snapshot``; the two streaming drives share the
+stream starter ``_run_stream``; every drive commits through ``_commit_batch``.
 """
 
 from __future__ import annotations
@@ -879,7 +884,7 @@ class CdcEngine:
         # Malformed events (unresolvable key) flow through the resolver under
         # their null key and surface as action rows with a null key column —
         # detected for free in the lineage aggregation (no dedicated scan job)
-        # and excluded from the merge; see _apply_batch for the P18 modes.
+        # and excluded from the merge; see _commit_batch for the P18 modes.
         # No dropDuplicates here: duplicate offsets are identical re-deliveries and
         # the per-key max_by((offset,seq)) reduce is invariant to them, so the LWW
         # phase subsumes dedup-by-offset (S8) without its full-width shuffle.
@@ -1075,49 +1080,26 @@ class CdcEngine:
         )
 
     # ------------------------------------------------------------- batch apply
-    def _apply_batch(
-        self, lake: LakeTable, slice_df: DataFrame, *, batch_id: int, lo: int, hi: int
-    ) -> dict[str, Any]:
-        t0 = time.time()
-        cfg = self.config
-        truncate_below = self._truncates_in(lo, hi)
-        reg = self.registry()
-        for change in reg.pending_upto(hi):
-            reg.apply_to_lake(lake, change)      # Iceberg-DDL analogue, idempotent
-            if change.table_changes != "create":
-                # The base CREATE is implicit in the registry's base schema;
-                # durable history (B5) records only lake-mutating deltas.
-                self.history.record(change)
-        if not lake.manifest(refresh=True)["files"]:
-            # Empty target (initial snapshot / whole-log replay / post-truncate):
-            # one pipeline execution, bucket-clustered end-to-end, staged first
-            # and committed only after lineage + failure handling ran against
-            # the staged files (so 'fail' aborts pre-commit and the warn-mode
-            # DLQ is written before the batch becomes visible, same ordering
-            # as the join path).
-            return self._apply_initial_batch(
-                lake, slice_df, batch_id=batch_id, lo=lo, hi=hi,
-                truncate_below=truncate_below, t0=t0,
-            )
-        # The resolved actions feed three consumers (lineage aggregation, the
-        # merge's touched-bucket probe, and the merge join itself); persist so the
-        # WAL-scan -> dedup -> envelope -> LWW pipeline runs once, not three times.
-        actions = self._transform(
-            slice_df, upto_offset=hi, offset_span=max(hi - lo, 0)
-        ).persist()
-        nb = lake.n_buckets
+    def _key_null(self) -> F.Column:
+        """True where a key column is null: a malformed event (P18)."""
+        null = F.lit(False)
+        for c in self.config.key_columns:
+            null = null | F.col(c).isNull()
+        return null
+
+    def _lineage(self, actions: DataFrame, n_buckets: int) -> list:
+        """Per-lake-bucket lineage of resolved actions in ONE aggregation job:
+        max offset, upserts and deletes per bucket. Actions whose key has a
+        null column land in the null ``_bucket`` row (P18,
+        EventDispatcher.java:244-258), so malformed keys are detected without
+        a dedicated scan job."""
         from debezium_spark.plans.lake import bucket_expr
 
-        # Per-partition lineage + batch metrics + malformed detection in ONE
-        # aggregation pass (a dedicated malformed-scan job per batch costs more
-        # driver-serial time than the whole check is worth).
-        key_null = F.lit(False)
-        for c in cfg.key_columns:
-            key_null = key_null | F.col(c).isNull()
-        lineage_all = (
+        first_key = F.col(self.config.key_columns[0])
+        return (
             actions.withColumn(
                 "_bucket",
-                F.when(~key_null, bucket_expr(F.col(cfg.key_columns[0]), nb)),
+                F.when(~self._key_null(), bucket_expr(first_key, n_buckets)),
             )
             .groupBy("_bucket")
             .agg(
@@ -1131,9 +1113,35 @@ class CdcEngine:
             )
             .collect()
         )
-        # _bucket NULL row = resolved actions whose key had a null column (P18,
-        # EventDispatcher.java:244-258). Count is per distinct malformed key.
-        lineage_rows = [r for r in lineage_all if r["_bucket"] is not None]
+
+    def _commit_batch(
+        self,
+        lake: LakeTable,
+        lineage_all: list,
+        *,
+        batch_id: int,
+        lo: int | None,
+        hi: int,
+        t0: float,
+        malformed,
+        commit,
+    ) -> dict[str, Any]:
+        """Commit epilogue of every drive mode.
+
+        ``lineage_all``: per-bucket rows (``_bucket``, max_offset,
+        rows_applied, rows_deleted) whose null-``_bucket`` row counts the
+        malformed keys; ``malformed()``: the rows quarantined under
+        failure_handling='warn'; ``commit(stats, touched_buckets)``: the lake
+        commit of the well-keyed rows (a merge, or the staged-file commit).
+
+        The malformed-key policy runs BEFORE the commit: 'fail' leaves the
+        table unchanged (staged files stay orphaned, the same crash contract
+        as a mid-write failure) and the 'warn' DLQ is written before the
+        batch becomes visible. A committed batch then appends its
+        ``_checkpoints`` lineage and ``_metrics`` rows and runs the
+        bounded-storage sweep."""
+        cfg = self.config
+        lineage = [r for r in lineage_all if r["_bucket"] is not None]
         n_bad = sum(
             r["rows_applied"] + r["rows_deleted"]
             for r in lineage_all
@@ -1141,42 +1149,25 @@ class CdcEngine:
         )
         if n_bad:
             if cfg.failure_handling == "fail":
-                actions.unpersist()
                 raise ValueError(
                     f"batch {batch_id}: {n_bad} malformed key(s) (null key column); "
                     "set failure_handling='warn'|'skip' to quarantine/drop"
                 )
             if cfg.failure_handling == "warn":
-                invalid_src = F.lit(False)
-                for c in cfg.key_columns:
-                    invalid_src = invalid_src | F.col(c).isNull()
                 # Batch-scoped overwrite => replaying a crashed batch rewrites
-                # (not duplicates) its quarantine; _prefilter keeps rows the
-                # pipeline would have excluded anyway out of the DLQ.
-                (
-                    self._prefilter(slice_df).where(invalid_src)
-                    .write.mode("overwrite")
-                    .parquet(os.path.join(self.work_dir, "_dlq", f"batch_id={batch_id}"))
+                # (not duplicates) its quarantine.
+                malformed().write.mode("overwrite").parquet(
+                    os.path.join(self.work_dir, "_dlq", f"batch_id={batch_id}")
                 )
             self._append_jsonl(
                 self._metrics_path,
                 [{"batch_id": batch_id, "malformed_skipped": int(n_bad)}],
             )
-            actions_valid = actions.where(~key_null)
-        else:
-            actions_valid = actions
         stats = {
-            "rows_applied": int(sum(r["rows_applied"] for r in lineage_rows)),
-            "rows_deleted": int(sum(r["rows_deleted"] for r in lineage_rows)),
+            "rows_applied": int(sum(r["rows_applied"] for r in lineage)),
+            "rows_deleted": int(sum(r["rows_deleted"] for r in lineage)),
         }
-        try:
-            res = lake.merge(
-                actions_valid, batch_id=batch_id, max_offset=hi, stats=stats,
-                touched_buckets=[int(r["_bucket"]) for r in lineage_rows],
-                truncate_below=truncate_below,
-            )
-        finally:
-            actions.unpersist()
+        res = commit(stats, [int(r["_bucket"]) for r in lineage])
         wall_ms = int((time.time() - t0) * 1000)
         if res.get("applied"):
             self._append_jsonl(
@@ -1190,7 +1181,7 @@ class CdcEngine:
                         "rows_deleted": int(r["rows_deleted"]),
                         "wall_ms": wall_ms,
                     }
-                    for r in lineage_rows
+                    for r in lineage
                 ],
             )
             self._append_jsonl(
@@ -1207,7 +1198,48 @@ class CdcEngine:
                     }
                 ],
             )
+            self._maybe_expire(lake, batch_id + 1)
         return {**res, **stats, "wall_ms": wall_ms}
+
+    def _apply_batch(
+        self, lake: LakeTable, slice_df: DataFrame, *, batch_id: int, lo: int, hi: int
+    ) -> dict[str, Any]:
+        t0 = time.time()
+        truncate_below = self._truncates_in(lo, hi)
+        reg = self.registry()
+        for change in reg.pending_upto(hi):
+            reg.apply_to_lake(lake, change)      # Iceberg-DDL analogue, idempotent
+            if change.table_changes != "create":
+                # The base CREATE is implicit in the registry's base schema;
+                # durable history (B5) records only lake-mutating deltas.
+                self.history.record(change)
+        if not lake.manifest(refresh=True)["files"]:
+            # Empty target (initial snapshot / whole-log replay / post-truncate):
+            # one pipeline execution, bucket-clustered end-to-end.
+            return self._apply_initial_batch(
+                lake, slice_df, batch_id=batch_id, lo=lo, hi=hi,
+                truncate_below=truncate_below, t0=t0,
+            )
+        # The resolved actions feed the lineage aggregation and the merge join;
+        # persist so the WAL-scan -> envelope -> LWW pipeline runs once, not
+        # twice. The lineage also yields the merge's touched buckets.
+        actions = self._transform(
+            slice_df, upto_offset=hi, offset_span=max(hi - lo, 0)
+        ).persist()
+        try:
+            return self._commit_batch(
+                lake,
+                self._lineage(actions, lake.n_buckets),
+                batch_id=batch_id, lo=lo, hi=hi, t0=t0,
+                malformed=lambda: self._prefilter(slice_df).where(self._key_null()),
+                commit=lambda stats, touched: lake.merge(
+                    actions.where(~self._key_null()),
+                    batch_id=batch_id, max_offset=hi, stats=stats,
+                    touched_buckets=touched, truncate_below=truncate_below,
+                ),
+            )
+        finally:
+            actions.unpersist()
 
     def _apply_initial_batch(
         self,
@@ -1221,13 +1253,12 @@ class CdcEngine:
         t0: float,
     ) -> dict[str, Any]:
         """Empty-target batch: transform -> stage (one job) -> lineage from a
-        narrow scan of the staged files -> failure handling -> atomic commit.
+        narrow scan of the staged files -> commit epilogue.
 
         vs the generic path this runs ONE pipeline execution with ONE payload
         shuffle (resolver ``bucket_into``), no persist/columnar cache, no
         merge join — the per-event cost that dominates a 10^10-event replay.
         """
-        cfg = self.config
         actions = self._transform(
             slice_df,
             upto_offset=hi,
@@ -1260,72 +1291,13 @@ class CdcEngine:
             )
         else:  # empty batch: nothing staged beyond the _SUCCESS marker
             lineage_all = []
-        lineage_rows = [r for r in lineage_all if r["_bucket"] is not None]
-        n_bad = sum(
-            r["rows_applied"] + r["rows_deleted"]
-            for r in lineage_all
-            if r["_bucket"] is None
+        return self._commit_batch(
+            lake, lineage_all, batch_id=batch_id, lo=lo, hi=hi, t0=t0,
+            malformed=lambda: self._prefilter(slice_df).where(self._key_null()),
+            commit=lambda stats, _touched: lake.commit_staged(
+                staged, batch_id=batch_id, max_offset=hi, stats=stats
+            ),
         )
-        if n_bad:
-            if cfg.failure_handling == "fail":
-                # abort BEFORE commit: staging files stay orphaned (the same
-                # crash contract as a mid-write failure), table unchanged
-                raise ValueError(
-                    f"batch {batch_id}: {n_bad} malformed key(s) (null key "
-                    "column); set failure_handling='warn'|'skip' to "
-                    "quarantine/drop"
-                )
-            if cfg.failure_handling == "warn":
-                invalid_src = F.lit(False)
-                for c in cfg.key_columns:
-                    invalid_src = invalid_src | F.col(c).isNull()
-                (
-                    self._prefilter(slice_df).where(invalid_src)
-                    .write.mode("overwrite")
-                    .parquet(os.path.join(self.work_dir, "_dlq", f"batch_id={batch_id}"))
-                )
-            self._append_jsonl(
-                self._metrics_path,
-                [{"batch_id": batch_id, "malformed_skipped": int(n_bad)}],
-            )
-        stats = {
-            "rows_applied": int(sum(r["rows_applied"] for r in lineage_rows)),
-            "rows_deleted": int(sum(r["rows_deleted"] for r in lineage_rows)),
-        }
-        res = lake.commit_staged(
-            staged, batch_id=batch_id, max_offset=hi, stats=stats
-        )
-        wall_ms = int((time.time() - t0) * 1000)
-        if res.get("applied"):
-            self._append_jsonl(
-                self._ckpt_path,
-                [
-                    {
-                        "batch_id": batch_id,
-                        "partition_id": int(r["_bucket"]),
-                        "max_offset": int(r["max_offset"]),
-                        "rows_applied": int(r["rows_applied"]),
-                        "rows_deleted": int(r["rows_deleted"]),
-                        "wall_ms": wall_ms,
-                    }
-                    for r in lineage_rows
-                ],
-            )
-            self._append_jsonl(
-                self._metrics_path,
-                [
-                    {
-                        "batch_id": batch_id,
-                        "lo": lo,
-                        "hi": hi,
-                        "keys_touched": stats["rows_applied"] + stats["rows_deleted"],
-                        "rows_applied": stats["rows_applied"],
-                        "rows_deleted": stats["rows_deleted"],
-                        "wall_ms": wall_ms,
-                    }
-                ],
-            )
-        return {**res, **stats, "wall_ms": wall_ms}
 
     @staticmethod
     def _append_jsonl(path: str, rows: list[dict]) -> None:
@@ -1380,6 +1352,64 @@ class CdcEngine:
                 )
                 time.sleep(self.config.retriable_restart_wait_ms / 1000.0)
 
+    # ------------------------------------------------------- micro-batch core
+    def _step(
+        self,
+        lake: LakeTable,
+        src: DataFrame,
+        lo: int,
+        hi: int,
+        sig: tuple[int, dict[str, Any]] | None = None,
+    ) -> tuple[dict[str, Any], bool]:
+        """One micro-batch of run() and run_streaming(): the rows of ``src``
+        (the whole WAL, or one streaming epoch) in offsets (lo, hi] plus the
+        next window of an in-flight ad-hoc snapshot (the reference's
+        incremental snapshot runs WHILE streaming) -> side-channel topics ->
+        apply + commit -> durable snapshot position -> the in-band signal
+        ``sig`` the batch ends at, applied only after the commit (every event
+        before the signal is processed pre-action, every event after it
+        post-action). Returns (apply result, pause requested by ``sig``)."""
+        batch_id = lake.committed_batch_id + 1
+        slice_df = src.where((F.col("offset") > lo) & (F.col("offset") <= hi))
+        self._publish_side_channels(slice_df, batch_id=batch_id)
+        chunks = self._snapshot_chunk_rows(src.schema, lo)
+        if chunks is not None:
+            slice_df = slice_df.unionByName(chunks, allowMissingColumns=True)
+        res = self._apply_batch(lake, slice_df, batch_id=batch_id, lo=lo, hi=hi)
+        if chunks is not None:
+            self._save_incr_state(self._incr_pending_state)
+        if sig is None:
+            return res, False
+        pause = self._apply_signal_action(sig[1], at_offset=sig[0])["pause"]
+        self._save_inband_marker(sig[0])
+        return res, pause
+
+    def _drain_snapshot(
+        self,
+        lake: LakeTable,
+        results: list[dict[str, Any]],
+        max_batches: int | None = None,
+    ) -> None:
+        """The log is exhausted but an in-flight ad-hoc snapshot may still
+        have chunk windows left: emit chunk-only batches until it completes,
+        a pause signal arrives or ``results`` reaches ``max_batches``."""
+        lo = lake.committed_max_offset
+        while (
+            self._incr_state()["active"]
+            and self.snapshot_source
+            and (max_batches is None or len(results) < max_batches)
+            and not self._poll_signals()["pause"]
+        ):
+            chunks = self._snapshot_chunk_rows(self._wal().schema, lo)
+            if chunks is None:
+                break
+            results.append(
+                self._apply_batch(
+                    lake, chunks, batch_id=lake.committed_batch_id + 1, lo=lo, hi=lo
+                )
+            )
+            self._save_incr_state(self._incr_pending_state)
+
     # -------------------------------------------------------------- run modes
     def run(self, *, max_batches: int | None = None) -> list[dict[str, Any]]:
         """Deterministic offset-range batch replay until the WAL is exhausted.
@@ -1414,15 +1444,10 @@ class CdcEngine:
                 ):
                     self.history.record(c)
         wal = self._wal()
-        bounds = wal.agg(
-            F.min("offset").alias("lo"), F.max("offset").alias("hi")
-        ).collect()[0]
-        if bounds["hi"] is None:
+        wal_hi = wal.agg(F.max("offset")).collect()[0][0]
+        if wal_hi is None:
             return
-        step = self.config.max_offsets_per_batch
         lo = lake.committed_max_offset
-        batch_id = lake.committed_batch_id + 1
-        n = len(results)  # committed batches surviving a retriable restart
         if self.config.signal_data_collection:
             # Crash-window recovery: in-band signals whose batch committed but
             # whose action never applied (crash between commit and marker
@@ -1434,65 +1459,41 @@ class CdcEngine:
                     self._apply_signal_action(sig, at_offset=off)
                     self._save_inband_marker(off)
         pause = False
-        while lo < bounds["hi"] and not pause:
+        while lo < wal_hi and (max_batches is None or len(results) < max_batches):
             if self._poll_signals()["pause"]:
                 pause = True  # P17 pause signal; resume = call run() again
                 break
-            hi = lo + step
-            pending_sig: tuple[int, dict[str, Any]] | None = None
+            if results and results[-1]["rows_applied"] + results[-1]["rows_deleted"] == 0:
+                # The last batch was empty: jump the offset gap at once rather
+                # than commit one empty batch per max_offsets_per_batch step.
+                nxt = wal.where(F.col("offset") > lo).agg(F.min("offset")).first()[0]
+                if nxt is not None:
+                    lo = max(lo, min(int(nxt), wal_hi) - 1)
+            # Never past the last offset read: the committed max_offset is the
+            # resume point, so a batch ending beyond the log's end would skip
+            # events appended to the WAL after this run.
+            hi = min(lo + self.config.max_offsets_per_batch, wal_hi)
+            sig = None
             if self.config.signal_data_collection:
                 sigs = self._inband_signals_in(wal, lo, hi)
                 if sigs:
                     # Exact-offset semantics (Signal.java — signals are totally
-                    # ordered with data): the batch ends AT the first signal's
-                    # offset; its action applies after that batch commits, so
-                    # every event before the signal is processed pre-action and
-                    # every event after it post-action.
-                    hi = sigs[0][0]
-                    pending_sig = sigs[0]
-            slice_df = wal.where((F.col("offset") > lo) & (F.col("offset") <= hi))
-            self._publish_side_channels(slice_df, batch_id=batch_id)
-            chunks = self._snapshot_chunk_rows(wal.schema, lo)
-            if chunks is not None:
-                slice_df = slice_df.unionByName(chunks, allowMissingColumns=True)
-            results.append(
-                self._apply_batch(lake, slice_df, batch_id=batch_id, lo=lo, hi=hi)
-            )
-            if chunks is not None:
-                self._save_incr_state(self._incr_pending_state)
-            if pending_sig is not None:
-                off, sig = pending_sig
-                pause = self._apply_signal_action(sig, at_offset=off)["pause"]
-                self._save_inband_marker(off)
-            lo, batch_id, n = hi, batch_id + 1, n + 1
-            self._maybe_expire(lake, n)
-            if max_batches is not None and n >= max_batches:
+                    # ordered with data): the batch ends AT the first signal.
+                    hi, sig = sigs[0][0], sigs[0]
+            res, pause = self._step(lake, wal, lo, hi, sig)
+            results.append(res)
+            lo = hi
+            if pause:
                 break
-        # WAL exhausted but an ad-hoc snapshot may still have chunks to drain —
-        # keep emitting chunk-only batches until the snapshot completes.
-        while (
-            not pause  # a pause consumed by the replay loop halts the drain too
-            and self._incr_state()["active"]
-            and self.snapshot_source
-            and (max_batches is None or n < max_batches)
-            and not self._poll_signals()["pause"]
-        ):
-            chunks = self._snapshot_chunk_rows(wal.schema, lo)
-            if chunks is None:
-                break
-            results.append(
-                self._apply_batch(lake, chunks, batch_id=batch_id, lo=lo, hi=lo)
-            )
-            self._save_incr_state(self._incr_pending_state)
-            batch_id, n = batch_id + 1, n + 1
-            self._maybe_expire(lake, n)
-        self._maybe_expire(lake, None)  # drain: bound storage before returning
+        if not pause:
+            self._drain_snapshot(lake, results, max_batches)
+        self._maybe_expire(lake, None)  # bound storage before returning
 
     def _maybe_expire(self, lake: LakeTable, n: int | None) -> None:
-        """Bounded-storage maintenance inside the replay loop: expire lake
+        """Bounded-storage maintenance inside the drive loops: expire lake
         snapshots past ``snapshot_retention`` every ``expire_every_batches``
-        applied batches (n = batches so far; None forces a sweep). Off by
-        default — see config.py. Failure to expire must never fail the
+        committed batches (n = committed batch count; None forces a sweep).
+        Off by default — see config.py. Failure to expire must never fail the
         replay: expiry is garbage collection, the data path owns correctness."""
         cfg = self.config
         if cfg.snapshot_retention is None:
@@ -1515,40 +1516,79 @@ class CdcEngine:
                 }],
             )
 
-    def run_streaming(self, *, max_files_per_trigger: int | None = None) -> None:
-        """Structured Streaming drive: file-source over the WAL directory,
-        foreachBatch -> same batch function, availableNow trigger, Spark checkpoint
-        for source progress (offset store B3 analogue). WAL segments are written in
-        offset order (sources/wal.write_wal), matching binlog segment ordering.
-        """
-        self._resolve_message_key()
-        lake = self.target()
-        wal_schema = self._wal().schema
-        if self._wal_projection is not None:
-            # stream the RAW log schema; the typed per-table shape is a pure
-            # projection applied inside the streaming query (from_json +
-            # filter are streaming-safe column algebra)
-            raw_schema = self.spark.read.parquet(self.wal_path).schema
-            reader = self.spark.readStream.schema(raw_schema)
-        else:
-            reader = self.spark.readStream.schema(wal_schema)
+    def _run_stream(
+        self,
+        handle,
+        checkpoint: str,
+        max_files_per_trigger: int | None,
+        transform=None,
+    ) -> None:
+        """Structured Streaming starter shared by the streaming drives: file
+        source over the WAL directory (the RAW log schema when a per-table
+        projection is set — from_json + filter are streaming-safe column
+        algebra applied inside the query), then ``transform``, then
+        ``handle(df)`` per epoch via foreachBatch under an availableNow
+        trigger, checkpointed in ``<work_dir>/<checkpoint>``.
+
+        An out-of-band pause signal (polled per epoch) or a ``_PauseSignal``
+        raised by ``handle`` stops the query cleanly before the epoch commits;
+        resume = call the drive again. Retriable failures restart the query
+        from its checkpoint (committed epochs never re-run; the failed epoch
+        replays idempotently under the offset guard). Classification is
+        message-based here: a foreachBatch failure crosses the JVM boundary
+        as a StreamingQueryException whose message embeds the Python
+        traceback, so custom_retriable_exception patterns match that text
+        (use '.*pattern.*'-style regexes)."""
+        projection = self._wal_projection
+        raw = self.spark.read.parquet(self.wal_path) if projection else self._wal()
+        reader = self.spark.readStream.schema(raw.schema)
         if max_files_per_trigger:
             reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
         stream = reader.parquet(self.wal_path)
-        if self._wal_projection is not None:
-            stream = self._wal_projection(stream)
-
+        if projection is not None:
+            stream = projection(stream)
+        if transform is not None:
+            stream = transform(stream)
         self._pause_requested = False
 
-        def handle(df: DataFrame, epoch_id: int) -> None:
+        def on_epoch(df: DataFrame, epoch_id: int) -> None:
+            if self._poll_signals()["pause"]:
+                self._pause_requested = True  # flag, not string-matching: a real
+                # failure whose message mentions _PauseSignal must still raise
+                raise _PauseSignal()
+            handle(df)
+
+        def drive() -> None:
+            q = (
+                stream.writeStream.outputMode("update")
+                .foreachBatch(on_epoch)
+                .option("checkpointLocation", os.path.join(self.work_dir, checkpoint))
+                .trigger(availableNow=True)
+                .start()
+            )
+            try:
+                q.awaitTermination()
+            except Exception:  # pause is a clean stop, not a failure
+                if not self._pause_requested:
+                    raise
+
+        self._with_restarts(drive)
+
+    def run_streaming(self, *, max_files_per_trigger: int | None = None) -> None:
+        """Structured Streaming drive: file-source over the WAL directory,
+        foreachBatch -> the same micro-batch core as run(), availableNow
+        trigger, Spark checkpoint for source progress (offset store B3
+        analogue). WAL segments are written in offset order
+        (sources/wal.write_wal), matching binlog segment ordering.
+        """
+        self._resolve_message_key()
+        lake = self.target()
+
+        def handle(df: DataFrame) -> None:
             # No offset pre-filter: the file source may deliver segments in any
             # order, and restart may replay the last epoch. Both are safe — the
             # per-row offset guard + retained delete tombstones make merge
             # idempotent and order-tolerant (plans/lake.py module docstring).
-            if self._poll_signals()["pause"]:
-                self._pause_requested = True  # flag, not string-matching: a real
-                # failure whose message mentions _PauseSignal must still raise
-                raise _PauseSignal()  # surfaces as query stop; resume = restart
             rng = df.agg(
                 F.min("offset").alias("lo"), F.max("offset").alias("hi")
             ).collect()[0]
@@ -1572,76 +1612,15 @@ class CdcEngine:
             while lo < hi_all or pending:
                 sig = pending.pop(0) if pending else None
                 hi = sig[0] if sig is not None else hi_all
-                slice_df = df.where(
-                    (F.col("offset") > lo) & (F.col("offset") <= hi)
-                )
-                bid = lake.committed_batch_id + 1
-                self._publish_side_channels(slice_df, batch_id=bid)
-                # interleave in-flight ad-hoc snapshot chunk windows, exactly
-                # like the batch drive (S5 under streaming — the reference's
-                # incremental snapshot runs WHILE streaming)
-                chunks = self._snapshot_chunk_rows(df.schema, lo)
-                if chunks is not None:
-                    slice_df = slice_df.unionByName(
-                        chunks, allowMissingColumns=True
-                    )
-                self._apply_batch(lake, slice_df, batch_id=bid, lo=lo, hi=hi)
-                if chunks is not None:
-                    self._save_incr_state(self._incr_pending_state)
-                if sig is not None:
-                    pause = self._apply_signal_action(sig[1], at_offset=sig[0])[
-                        "pause"
-                    ]
-                    self._save_inband_marker(sig[0])
-                    if pause:
-                        self._pause_requested = True
-                        raise _PauseSignal()
+                if self._step(lake, df, lo, hi, sig)[1]:
+                    self._pause_requested = True
+                    raise _PauseSignal()
                 lo = hi
-            # epoch boundary: same bounded-storage sweep cadence as run(),
-            # keyed to the committed batch counter (epochs vary in size)
-            self._maybe_expire(lake, lake.committed_batch_id + 1)
 
-        def drive() -> None:
-            q = (
-                stream.writeStream.foreachBatch(handle)
-                .option(
-                    "checkpointLocation", os.path.join(self.work_dir, "stream_ckpt")
-                )
-                .trigger(availableNow=True)
-                .start()
-            )
-            try:
-                q.awaitTermination()
-            except Exception:  # pause is a clean stop, not a failure
-                if not self._pause_requested:
-                    raise
-
-        # Retriable failures restart the query from its checkpoint (committed
-        # epochs never re-run; the failed epoch replays idempotently under the
-        # offset guard). Streaming-side classification is message-based: a
-        # foreachBatch failure crosses the JVM boundary as a
-        # StreamingQueryException whose message embeds the Python traceback,
-        # so custom_retriable_exception patterns match against that text
-        # (use '.*pattern.*'-style regexes).
-        self._with_restarts(drive)
-        # availableNow drained the WAL, but an in-flight ad-hoc snapshot may
-        # still have chunk windows left — keep emitting chunk-only batches
-        # (the streaming twin of run()'s drain tail).
+        self._run_stream(handle, "stream_ckpt", max_files_per_trigger)
         if not self._pause_requested:
-            lo = lake.committed_max_offset
-            while (
-                self._incr_state()["active"]
-                and self.snapshot_source
-                and not self._poll_signals()["pause"]
-            ):
-                chunks = self._snapshot_chunk_rows(wal_schema, lo)
-                if chunks is None:
-                    break
-                self._apply_batch(
-                    lake, chunks, batch_id=lake.committed_batch_id + 1, lo=lo, hi=lo
-                )
-                self._save_incr_state(self._incr_pending_state)
-            self._maybe_expire(lake, None)
+            self._drain_snapshot(lake, [])
+        self._maybe_expire(lake, None)
 
     def run_streaming_stateful(
         self, *, max_files_per_trigger: int | None = None
@@ -1665,7 +1644,10 @@ class CdcEngine:
         query; a replayed epoch re-emits the same transitions, and the lake
         merge's strict ``s._offset > t._offset`` guard makes the re-apply a
         no-op. Re-delivered WAL files lose the all-history ordinal comparison
-        inside the state store and never reach the merge at all.
+        inside the state store and never reach the merge at all. Each trigger
+        commits through the same epilogue as the batch drives (failure
+        handling, lineage, metrics, snapshot expiry); the stream starter is
+        shared with run_streaming (pause, retriable restarts).
 
         Scope: the final schema is fixed for the life of the query (a state
         store's payload schema cannot change mid-stream), so all schema-history
@@ -1690,172 +1672,46 @@ class CdcEngine:
             reg.apply_to_lake(lake, change)
             if change.table_changes != "create":
                 self.history.record(change)
-        key_cols = list(cfg.key_columns)
+        key_cols = cfg.key_columns
 
-        reader = self.spark.readStream.schema(self._wal().schema)
-        if max_files_per_trigger:
-            reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-        stream = reader.parquet(self.wal_path)
-        # stateful_payload_join_back=True slims the Arrow boundary
-        # (emit_payload=False): the state op sees and emits only keys +
-        # ordinals — the at-scale setting when a CDC payload is a whole
-        # source file, where round-tripping it through Python per event
-        # dominates the trigger wall. The winning payload is then recovered
-        # JVM-side per trigger by joining the emitted winner ordinals back
-        # to an offset-pushdown WAL re-scan (O(trigger) read, pure codegen).
-        # Default False: modest payloads ride through Arrow with the
-        # ordinals, skipping the re-scan + join jobs (measured faster below
-        # ~1 KB average payload).
-        join_back = cfg.stateful_payload_join_back
-        changelog = stateful_lww(
-            self._envelope(stream), key_cols=tuple(key_cols),
-            emit_payload=not join_back,
-        )
-        through_cols = [
-            c for c in changelog.columns
-            if c not in (*key_cols, "action", "_ord", "_offset", "_ts_ms")
-        ]
-
-        self._pause_requested = False
-
-        def handle(df: DataFrame, epoch_id: int) -> None:
-            if self._poll_signals()["pause"]:
-                self._pause_requested = True
-                raise _PauseSignal()
+        def handle(df: DataFrame) -> None:
             t0 = time.time()
             df = df.persist()
             try:
-                # ONE pass over the cached changelog collects stats AND the
-                # touched-bucket set (passed to merge so it skips its own
-                # distinct-buckets job — one fewer Spark job per trigger).
-                from debezium_spark.plans.lake import bucket_expr
-
-                agg = df.agg(
-                    F.min("_offset").alias("lo"),
-                    F.max("_offset").alias("hi"),
-                    F.sum(
-                        F.when(F.col("action") == R.ACTION_UPSERT, 1).otherwise(0)
-                    ).alias("ups"),
-                    F.sum(
-                        F.when(F.col("action") == R.ACTION_DELETE, 1).otherwise(0)
-                    ).alias("dels"),
-                    F.collect_set(
-                        bucket_expr(F.col(key_cols[0]), lake.manifest()["n_buckets"])
-                    ).alias("buckets"),
-                ).collect()[0]
-                if agg["hi"] is None:
+                lineage = self._lineage(df, lake.n_buckets)
+                if not lineage:
                     return  # trigger resolved no state transitions
-                if join_back:
-                    # Payload join-back: re-read only the winners' offset
-                    # range (predicate pushed to the parquet scan), align
-                    # envelopes the same way the stream side does, and join
-                    # on (key, _ord) — (offset, seq) is globally unique, so
-                    # the join is exact. Deletes/tombstones are present in
-                    # the slice too; their payload projects to nulls.
-                    wal_slice = self._wal().where(
-                        (F.col("offset") >= int(agg["lo"]))
-                        & (F.col("offset") <= int(agg["hi"]))
-                    )
-                    env_b = self._envelope(wal_slice)
-                    seq_b = (
-                        F.col("seq") if "seq" in env_b.columns else F.lit(0)
-                    ).cast("long")
-                    val_b = F.col("value")
-                    is_del_b = val_b.getField("op").isNull() | (
-                        val_b.getField("op") == "d"
-                    )
-                    payload_t = env_b.schema["value"].dataType["after"].dataType
-                    data_fields = [
-                        f for f in payload_t.fields if f.name not in key_cols
-                    ]
-                    flat_p = env_b.select(
-                        *[F.col("key").getField(c).alias(c) for c in key_cols],
-                        (F.col("offset").cast("long") * 128 + seq_b).alias(
-                            "_ord"
-                        ),
-                        *[
-                            F.when(
-                                ~is_del_b,
-                                val_b.getField("after").getField(f.name),
-                            )
-                            .cast(f.dataType)
-                            .alias(f.name)
-                            for f in data_fields
-                        ],
-                    )
-                    actions = (
-                        df.hint("SHUFFLE_HASH")
-                        .join(flat_p, on=[*key_cols, "_ord"], how="inner")
-                        .select(
+                batch_id = lake.committed_batch_id + 1
+                hi = max(int(r["max_offset"]) for r in lineage)
+                payload = [
+                    c for c in df.columns
+                    if c not in (*key_cols, "action", "_offset", "_ts_ms")
+                ]
+                self._commit_batch(
+                    lake, lineage, batch_id=batch_id, lo=None, hi=hi, t0=t0,
+                    malformed=lambda: df.where(self._key_null()),
+                    commit=lambda stats, touched: lake.merge(
+                        df.where(~self._key_null()).select(
                             *key_cols,
-                            F.col("action"),
-                            F.struct(
-                                *[F.col(f.name) for f in data_fields]
-                            ).alias("after"),
-                            F.col("_offset"),
-                            F.col("_ts_ms"),
-                        )
-                        # the WAL may carry identical re-deliveries of the
-                        # same offset (S8); every join match for a winner is
-                        # such an identical copy, so a key-level dedup
-                        # restores merge's one-row-per-key contract (cheap:
-                        # runs over winners, not the slice)
-                        .dropDuplicates(list(key_cols))
-                    )
-                else:
-                    actions = df.select(
-                        *key_cols,
-                        F.col("action"),
-                        F.struct(
-                            *[F.col(c) for c in through_cols]
-                        ).alias("after"),
-                        F.col("_offset"),
-                        F.col("_ts_ms"),
-                    )
-                stats = {
-                    "rows_applied": int(agg["ups"]), "rows_deleted": int(agg["dels"])
-                }
-                res = lake.merge(
-                    actions,
-                    batch_id=lake.committed_batch_id + 1,
-                    max_offset=int(agg["hi"]),
-                    stats=stats,
-                    touched_buckets=[int(b) for b in agg["buckets"]],
+                            "action",
+                            F.struct(*payload).alias("after"),
+                            "_offset",
+                            "_ts_ms",
+                        ),
+                        batch_id=batch_id, max_offset=hi, stats=stats,
+                        touched_buckets=touched,
+                    ),
                 )
-                if res.get("applied"):
-                    self._append_jsonl(
-                        self._metrics_path,
-                        [
-                            {
-                                "batch_id": res["batch_id"],
-                                "lo": None,
-                                "hi": int(agg["hi"]),
-                                "keys_touched": stats["rows_applied"]
-                                + stats["rows_deleted"],
-                                "rows_applied": stats["rows_applied"],
-                                "rows_deleted": stats["rows_deleted"],
-                                "wall_ms": int((time.time() - t0) * 1000),
-                            }
-                        ],
-                    )
             finally:
                 df.unpersist()
 
-        q = (
-            changelog.writeStream.outputMode("update")
-            .foreachBatch(handle)
-            .option(
-                "checkpointLocation",
-                os.path.join(self.work_dir, "stateful_ckpt"),
-            )
-            .trigger(availableNow=True)
-            .start()
+        self._run_stream(
+            handle,
+            "stateful_ckpt",
+            max_files_per_trigger,
+            transform=lambda s: stateful_lww(self._envelope(s), key_cols=key_cols),
         )
-        try:
-            q.awaitTermination()
-        except Exception:
-            if not self._pause_requested:
-                raise
+        self._maybe_expire(lake, None)
 
     # ------------------------------------------------------------- inspection
     def checkpoints(self) -> DataFrame:

@@ -34,7 +34,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from ..operators.resolver import ACTION_DELETE, ACTION_UPSERT  # same changelog vocabulary
+# same changelog vocabulary and LWW order as the batch resolver
+from ..operators.resolver import ACTION_DELETE, ACTION_UPSERT, lww_rank
 
 
 def _payload_type(env: DataFrame) -> T.StructType:
@@ -45,7 +46,6 @@ def stateful_lww(
     env: DataFrame,
     *,
     key_cols: tuple[str, ...] = ("repo", "path"),
-    emit_payload: bool = True,
 ) -> DataFrame:
     """Envelope stream -> per-key changelog of state transitions.
 
@@ -58,18 +58,9 @@ def stateful_lww(
     history). ``_ts_ms`` is the winning event's source timestamp, so the row
     is directly mergeable by LakeTable.merge (run_streaming_stateful).
 
-    ``emit_payload=False`` is the at-scale variant: the Arrow boundary then
-    carries ONLY ``key_cols*, _ord, _ts, _is_delete`` in and
-    ``key_cols*, action, _ord, _offset, _ts_ms`` out — the winning payload
-    never crosses into Python at all (a CDC payload can be a whole source
-    file; round-tripping it per event through Arrow dominates the stateful
-    path's wall time). The caller joins the winner ordinals back to the
-    batch's envelope slice JVM-side to recover the payload
-    (run_streaming_stateful does this with an offset-pushdown WAL re-scan).
-
-    Ordering key: the same ``offset * 128 + seq`` ordinal as the batch
-    resolver (resolver.py:resolve_lww), so batch and continuous modes resolve
-    identically, including PK-split sub-sequence ties.
+    Ordering key: the batch resolver's ordinal (resolver.lww_rank), so batch
+    and continuous modes resolve identically, including PK-split sub-sequence
+    ties.
 
     Tombstones and deletes both transition the key to deleted; the state row
     is kept (ordinal memory) so late lower-ordinal upserts cannot resurrect a
@@ -77,19 +68,14 @@ def stateful_lww(
     tombstones (plans/lake.py merge guard).
     """
     payload_t = _payload_type(env)
-    data_fields = (
-        [f for f in payload_t.fields if f.name not in key_cols]
-        if emit_payload
-        else []
-    )
+    data_fields = [f for f in payload_t.fields if f.name not in key_cols]
     key_t = env.schema["key"].dataType
 
-    seq = (F.col("seq") if "seq" in env.columns else F.lit(0)).cast("long")
     val = F.col("value")
-    is_del = val.getField("op").isNull() | (val.getField("op") == "d")
+    ordinal, is_del = lww_rank(env)
     flat = env.select(
         *[F.col("key").getField(c).alias(c) for c in key_cols],
-        (F.col("offset").cast("long") * 128 + seq).alias("_ord"),
+        ordinal.alias("_ord"),
         F.coalesce(val.getField("ts_ms").cast("long"), F.lit(0)).alias("_ts"),
         is_del.alias("_is_delete"),
         *[
@@ -111,7 +97,6 @@ def stateful_lww(
             *[T.StructField(c, key_t[c].dataType) for c in key_cols],
             T.StructField("action", T.StringType()),
             *[T.StructField(f.name, f.dataType) for f in data_fields],
-            *([] if emit_payload else [T.StructField("_ord", T.LongType())]),
             T.StructField("_offset", T.LongType()),
             T.StructField("_ts_ms", T.LongType()),
         ]
@@ -119,11 +104,7 @@ def stateful_lww(
     data_names = [f.name for f in data_fields]
     n_keys = len(key_cols)
 
-    out_cols = (
-        [*key_cols, "action", *data_names, "_offset", "_ts_ms"]
-        if emit_payload
-        else [*key_cols, "action", "_ord", "_offset", "_ts_ms"]
-    )
+    out_cols = [*key_cols, "action", *data_names, "_offset", "_ts_ms"]
 
     def resolve(
         key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
@@ -153,12 +134,6 @@ def stateful_lww(
         ts = int(pdf.iat[i, n_keys + 1])
         is_delete = bool(pdf.iat[i, n_keys + 2])
         action = ACTION_DELETE if is_delete else ACTION_UPSERT
-        if not emit_payload:
-            yield pd.DataFrame(
-                [[*key, action, best_ord, best_ord // 128, ts]],
-                columns=out_cols,
-            )
-            return
         vals = [
             v
             if isinstance(v, (list, tuple, np.ndarray))

@@ -5,6 +5,7 @@ signals (P17), tx look-ahead commit filter (S7), vacuum retention.
 import json
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from debezium_spark import CdcEngine, EngineConfig
@@ -61,8 +62,10 @@ def test_truncate_event_clears_prior_state(spark, tmpdir_path):
     assert eng.target().manifest(refresh=True)["truncate_below"] == t_off
 
 
-def test_failure_handling_modes(spark, tmpdir_path):
-    """P18: malformed events (null key) fail/quarantine/skip by mode."""
+@pytest.mark.parametrize("drive", ["run", "run_streaming", "run_streaming_stateful"])
+def test_failure_handling_modes(spark, tmpdir_path, drive):
+    """P18: malformed events (null key) fail/quarantine/skip by mode, in every
+    drive mode (stateful quarantines its null-key changelog rows)."""
     spec = W.WalSpec(n_keys=100, n_events=300, seed=32, schema_changes=False)
     wal = W.wal_events(spark, spec)
     bad = spark.createDataFrame(
@@ -71,39 +74,41 @@ def test_failure_handling_modes(spark, tmpdir_path):
     )
     wal_dir = os.path.join(tmpdir_path, "walb")
     wal.unionByName(bad, allowMissingColumns=True).repartition(2).write.parquet(wal_dir)
-
-    import pytest
-
-    eng = _engine(spark, tmpdir_path, wal_dir, spec, EngineConfig(), sub="f")
-    with pytest.raises(Exception, match="malformed"):
-        eng.run()
-
-    engw = _engine(
-        spark, tmpdir_path, wal_dir, spec,
-        EngineConfig(failure_handling="warn"), sub="w",
-    )
-    engw.run()
-    dlq = os.path.join(tmpdir_path, "ww", "_dlq")
-    assert spark.read.parquet(dlq).count() == 1
-    m = engw.metrics().where(F.col("malformed_skipped").isNotNull()).first()
-    assert m["malformed_skipped"] == 1
-    # good rows all applied despite the bad one
     good = (
         spark.read.parquet(wal_dir)
         .where(F.col("repo").isNotNull())
         .select("offset", "is_tombstone", "op", "repo", "path", "after")
         .toPandas()
     )
-    got = oracle.target_hashes(
-        engw.target().read().select("repo", "path", "content").toPandas()
+    want = oracle.state_hashes(oracle.reduce_wal(good))
+
+    def drive_mode(eng):
+        getattr(eng, drive)()
+        return oracle.target_hashes(
+            eng.target().read().select("repo", "path", "content").toPandas()
+        )
+
+    eng = _engine(spark, tmpdir_path, wal_dir, spec, EngineConfig(), sub="f")
+    with pytest.raises(Exception, match="malformed"):
+        drive_mode(eng)
+    # aborted before the commit: the malformed event's batch never landed
+    assert eng.target().committed_max_offset < 10**9
+
+    engw = _engine(
+        spark, tmpdir_path, wal_dir, spec,
+        EngineConfig(failure_handling="warn"), sub="w",
     )
-    assert got == oracle.state_hashes(oracle.reduce_wal(good))
+    assert drive_mode(engw) == want  # good rows all applied despite the bad one
+    dlq = os.path.join(tmpdir_path, "ww", "_dlq")
+    assert spark.read.parquet(dlq).count() == 1
+    m = engw.metrics().where(F.col("malformed_skipped").isNotNull()).first()
+    assert m["malformed_skipped"] == 1
 
     engs = _engine(
         spark, tmpdir_path, wal_dir, spec,
         EngineConfig(failure_handling="skip"), sub="s",
     )
-    engs.run()
+    assert drive_mode(engs) == want
     assert not os.path.exists(os.path.join(tmpdir_path, "ws", "_dlq"))
 
 

@@ -1424,6 +1424,37 @@ def test_exact_root_pow_q_boundary_proof(spark):
     assert got[27] == 3_000_000 and got[10**12] == 10_000_000_000
 
 
+@pytest.mark.parametrize("m", [1, 2, 3, 4])
+def test_exact_root_pow_q_up_to_documented_bound(spark, m):
+    """Every supported root is exact up to n = 1e14, where n * 10^(6m)
+    outgrows the old DECIMAL(12,0) candidates (m=1 from n=1e6, m=2 from
+    n=1e12), the BIGINT seed (m=1 past ~9.2e12) and, at m=4, DECIMAL(38,0)
+    itself (n * 10^24 = 1e38)."""
+    from debezium_spark.functions.text import _exact_root_pow_q
+
+    ns = [0, 1, 10**6, 10**12, 9_223_372_036_855, 10**14 - 1, 10**14]
+    # perfect powers sit exactly on a rounding boundary
+    ns += [t**m for t in (7, int(10 ** (14 / m)) - 1)]
+    df = spark.createDataFrame([(n,) for n in ns], "n long")
+    got = {
+        r["n"]: r["q"]
+        for r in df.select("n", _exact_root_pow_q(F.col("n"), m).alias("q")).collect()
+    }
+
+    def py_root_q(n):  # floor(n^(1/m) * 1e6) by pure integer search
+        lo, hi = 0, 10**21
+        while lo < hi:
+            mid = (lo + hi + 1) // 2
+            if mid**m <= n * 10 ** (6 * m):
+                lo = mid
+            else:
+                hi = mid - 1
+        return lo
+
+    for n in ns:
+        assert got[n] == py_root_q(n), (m, n)
+
+
 def test_unimax_water_filling_laws(spark, docs):
     """Budget conserved up to division remainder, caps honored, uncapped
     groups share equally, and a lavish budget caps everyone."""

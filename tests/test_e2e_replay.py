@@ -4,7 +4,9 @@ Mirrors the reference's golden-state tests (ConnectorOutputTest replay-and-diff)
 the BASELINE.json invariant: per-row content sha256 equality after full replay.
 """
 
+import glob
 import os
+import shutil
 
 import pytest
 from pyspark.sql import functions as F
@@ -113,3 +115,34 @@ def test_replayed_batch_is_skipped(spark, small_spec, wal_dir, tmpdir_path):
     )
     assert res["applied"] is False
     assert lake.manifest(refresh=True)["version"] == v_before
+
+
+def test_resume_over_grown_wal(spark, small_spec, wal_dir, tmpdir_path):
+    """run() over the first half of the log, segments appended, run() again:
+    the second run applies the appended events. The committed max offset is
+    the resume point, so it must never pass the last offset a run read."""
+    grown = os.path.join(tmpdir_path, "wal")
+    os.makedirs(grown)
+    segments = sorted(glob.glob(os.path.join(wal_dir, "*.parquet")))
+    half = len(segments) // 2
+    kwargs = dict(
+        wal_path=grown,
+        target_path=os.path.join(tmpdir_path, "target"),
+        work_dir=os.path.join(tmpdir_path, "work"),
+    )
+    for seg in segments[:half]:
+        shutil.copy(seg, grown)
+    eng1 = CdcEngine(
+        spark, EngineConfig(), schema_changes=W.schema_history(spark, small_spec), **kwargs
+    )
+    eng1.run()
+    read_hi = spark.read.parquet(grown).agg(F.max("offset")).first()[0]
+    assert eng1.target().committed_max_offset == read_hi
+
+    for seg in segments[half:]:
+        shutil.copy(seg, grown)
+    eng2 = CdcEngine(
+        spark, EngineConfig(), schema_changes=W.schema_history(spark, small_spec), **kwargs
+    )
+    assert eng2.run(), "the appended events must be applied"
+    assert _final_hashes(spark, eng2.target()) == _oracle_hashes(spark, wal_dir)

@@ -235,6 +235,39 @@ def test_retention_bounds_storage_during_replay(spark, tmpdir_path, replayed):
     assert got == want
 
 
+def test_retention_bounds_storage_in_stateful_drive(spark, tmpdir_path, replayed):
+    """The stateful drive commits through the same epilogue as run(), so its
+    triggers sweep expired snapshots too, and the state still equals the
+    batch replay."""
+    eng_ref, spec, _, _ = replayed
+    wal_dir = os.path.join(tmpdir_path, "wal")
+    W.write_wal(spark, spec, wal_dir, n_files=4)
+    eng = CdcEngine(
+        spark,
+        EngineConfig(
+            target_buckets=8,
+            snapshot_retention=1,
+            expire_every_batches=1,
+            expire_grace_seconds=0.0,
+        ),
+        wal_path=wal_dir,
+        target_path=os.path.join(tmpdir_path, "target"),
+        work_dir=os.path.join(tmpdir_path, "work"),
+        schema_changes=W.schema_history(spark, spec),
+    )
+    eng.run_streaming_stateful(max_files_per_trigger=1)
+    lake = eng.target()
+    assert lake.committed_batch_id >= 1  # several triggers committed
+    assert len(lake.snapshots()) == 1
+    got = target_hashes(
+        lake.read().select("repo", "path", "content").toPandas()
+    )
+    want = target_hashes(
+        eng_ref.target().read().select("repo", "path", "content").toPandas()
+    )
+    assert got == want
+
+
 def test_expire_grace_window_protects_fresh_files(spark, tmpdir_path):
     """grace_seconds guards in-flight commits: freshly-written unreferenced
     files survive an expiry with a large grace window."""

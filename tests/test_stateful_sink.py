@@ -43,33 +43,25 @@ def _engine(spark, root, wal_dir, spec, sub, **cfg):
     )
 
 
-def test_stateful_join_back_matches_payload_through(spark, tmpdir_path):
-    """stateful_payload_join_back=True (slim Arrow boundary + offset-pushdown
-    WAL re-scan join) must land the exact same lake state as the default
-    payload-through mode — including over a WAL carrying identical
-    duplicate-offset re-deliveries, which the join-back path must collapse
-    (each re-delivery joins the winner ordinal once; without the key-level
-    dedup the merge would see multiplied rows — the r5 bug this pins)."""
+def test_stateful_redelivered_offsets_land_one_row_per_key(spark, tmpdir_path):
+    """A WAL carrying identical duplicate-offset re-deliveries lands exactly
+    one lake row per key (deleted rows included) and the oracle's state: a
+    re-delivered event ties its original's ordinal, so the state store emits
+    at most one transition per key per trigger."""
     spec = W.WalSpec(n_keys=200, n_events=1100, seed=33)
-    wal_dir = os.path.join(tmpdir_path, "wal_jb")
+    wal_dir = os.path.join(tmpdir_path, "wal_dup")
     W.write_wal(spark, spec, wal_dir, n_files=4)
+    wal = spark.read.parquet(wal_dir)
+    assert wal.groupBy("offset", "is_tombstone").count().where("count > 1").count() > 0
     want = _want(spark, wal_dir)
 
-    ej = _engine(
-        spark, tmpdir_path, wal_dir, spec, "jb",
-        stateful_payload_join_back=True,
-    )
-    ej.run_streaming_stateful(max_files_per_trigger=2)
-    assert _got(ej) == want
-    # one row per key, no join-multiplied duplicates
-    t = ej.target().read(include_deleted=True)
+    es = _engine(spark, tmpdir_path, wal_dir, spec, "dup")
+    es.run_streaming_stateful(max_files_per_trigger=2)
+    assert _got(es) == want
+    t = es.target().read(include_deleted=True)
     assert (
         t.groupBy("repo", "path").count().where("count > 1").count() == 0
     )
-
-    ep = _engine(spark, tmpdir_path, wal_dir, spec, "pt")
-    ep.run_streaming_stateful(max_files_per_trigger=2)
-    assert _got(ep) == want
 
 
 def test_stateful_sink_matches_batch_and_absorbs_redelivery(spark, tmpdir_path):
