@@ -401,11 +401,11 @@ def single(cpus: int) -> dict:
 
     qtimes.update(run_queries(spark, SF_DIR))
     _next_trial()
-    # stateful-streaming leg (applyInPandasWithState continuous LWW) at one
+    # stateful-streaming leg (native streaming-aggregation LWW) at one
     # WAL scale below the headline — steady-state events/s is the statistic
     # and it is size-independent past warm-up; BENCH_STATEFUL=0 skips. The
-    # untimed warm-up two scales down first-compiles the Arrow/state-store
-    # path (codegen + Python worker pool), the same treatment every other
+    # untimed warm-up two scales down first-compiles the state-store path
+    # (codegen), the same treatment every other
     # leg gets — without it the timed leg absorbs first-use compilation.
     if os.environ.get("BENCH_STATEFUL", "1") != "0":
         st_sf = warmup_sf_for(sf)
@@ -699,9 +699,8 @@ def replay_only(cpus: int) -> dict:
 
 def run_replay_stateful(spark, sf: str, *, restart: bool = False) -> dict:
     """Full WAL replay through the CONTINUOUS path (run_streaming_stateful:
-    applyInPandasWithState per-key LWW + changed-keys-only merges) instead of
-    the batch re-resolve. Slower per event by design — the state store pays an
-    Arrow round-trip per trigger — but each trigger's work is O(trigger), so
+    native streaming-aggregation per-key LWW + changed-keys-only merges)
+    instead of the batch re-resolve. Each trigger's work is O(trigger), so
     this is the number that matters for long-running tail-latency ingest.
 
     ``restart=True`` drives it in TWO PHASES: half the WAL segments through a
@@ -783,7 +782,7 @@ def stateful(cpus: int) -> dict:
     sf = os.environ.get("BENCH_STATEFUL_SF") or warmup_sf_for(sf_of(SF_DIR))
     spark = build_spark(cpus)
     spark.sparkContext.setLogLevel("ERROR")
-    run_replay_stateful(spark, warmup_sf_for(sf))  # untimed JIT/Arrow warm-up
+    run_replay_stateful(spark, warmup_sf_for(sf))  # untimed JIT/codegen warm-up
     trials = [
         run_replay_stateful(spark, sf)
         for _ in range(int(os.environ.get("BENCH_TRIALS", "2")))

@@ -128,8 +128,6 @@ class EngineConfig:
     # --- batching / replay (ChangeEventQueue.java:62-106 analogues) ---
     # max offsets pulled into one micro-batch during batch replay
     max_offsets_per_batch: int = 5_000_000
-    # salt fan-out for the two-phase LWW reduce over hot keys (SURVEY.md §4.1)
-    lww_salt_buckets: int = 32
     # LWW physical strategy: "auto" (default) probes the per-batch live-key
     # count (one count over the key-only winner aggregation) and picks
     # "ordinal" — shuffle (key, ordinal) only, broadcast-filter the payload

@@ -167,7 +167,6 @@ def resolve_lww(
     env: DataFrame,
     *,
     key_cols: tuple[str, ...] = ("repo", "path"),
-    salt_buckets: int = 32,
     strategy: str = "auto",
     bucket_into=None,
     winner_source: DataFrame | None = None,
@@ -221,8 +220,7 @@ def resolve_lww(
         to broadcast (10^9+ live keys on small executors): payload moves
         through ONE shuffle, never two, and the map-side combine is the
         hot-key/skew answer — a key with millions of duplicate events still
-        ships at most one row per input partition (no salting needed;
-        ``salt_buckets`` retained for API compatibility only).
+        ships at most one row per input partition (no salting needed).
 
     Phase 1 of the ordinal strategy touches only offset/seq/key columns, so
     Catalyst's nested-schema pruning keeps the payload columns out of that

@@ -257,6 +257,13 @@ _NEUTRAL_STMT = re.compile(
     re.IGNORECASE,
 )
 
+# MySQL table options (ALTER TABLE t ENGINE InnoDB ROW_FORMAT DYNAMIC ...).
+_TABLE_OPTION = (
+    r"(?:engine|auto_increment|comment|row_format|algorithm|lock|"
+    r"tablespace|stats_persistent|checksum|delay_key_write|key_block_size|"
+    r"(?:default\s+)?(?:character\s+set|charset|collate))\b"
+)
+
 # ALTER TABLE actions that touch indexes/constraints/storage, not columns —
 # the registry's shape deltas (add/widen/drop/rename column) are unaffected,
 # so these emit an ALTER_TABLE event with no table_changes. Checked BEFORE
@@ -288,13 +295,11 @@ _NEUTRAL_ACTION = re.compile(
     r"|partition\s+by\b|remove\s+partitioning\b"
     r"|(?:add|drop|truncate|coalesce|reorganize|rebuild|analyze|optimize"
     r"|check|repair|exchange|discard|import)\s+partition\b"
-    # Table options are neutral only as assignments: require `=` or a value
-    # token ending the action, so a shape action on a column named e.g.
-    # `comment` cannot prefix-match its way to neutral.
-    r"|(?:engine|auto_increment|comment|row_format|algorithm|lock|"
-    r"tablespace|stats_persistent|checksum|delay_key_write|"
-    r"key_block_size)\s*(?:=|\s(?:'[^']*'|\S+)\s*$)"
-    r"|(?:default\s+)?(?:character\s+set|charset|collate)\b"
+    # Table options are neutral only as assignments: require `=`, or a value
+    # token that ends the action or is followed by another table option
+    # (`ENGINE InnoDB ROW_FORMAT DYNAMIC`), so a shape action on a column
+    # named e.g. `comment` cannot prefix-match its way to neutral.
+    rf"|{_TABLE_OPTION}\s*(?:=|\s(?:'[^']*'|\S+)(?=\s*$|\s+{_TABLE_OPTION}))"
     r"|convert\s+to\s+character\s+set\b"
     r")",
     re.IGNORECASE,

@@ -38,7 +38,7 @@ import json
 import os
 import re
 import time
-from typing import Any
+from typing import Any, Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -1067,7 +1067,6 @@ class CdcEngine:
         return R.resolve_lww(
             self._envelope(slice_df, upto_offset=upto_offset),
             key_cols=self.config.key_columns,
-            salt_buckets=self.config.lww_salt_buckets,
             strategy=self.config.lww_strategy,
             bucket_into=(
                 (bucket_into, lambda k: bucket_expr(k, bucket_into))
@@ -1519,7 +1518,7 @@ class CdcEngine:
     def _run_stream(
         self,
         handle,
-        checkpoint: str,
+        checkpoint: str | Callable[[DataFrame], str],
         max_files_per_trigger: int | None,
         transform=None,
     ) -> None:
@@ -1528,7 +1527,8 @@ class CdcEngine:
         projection is set — from_json + filter are streaming-safe column
         algebra applied inside the query), then ``transform``, then
         ``handle(df)`` per epoch via foreachBatch under an availableNow
-        trigger, checkpointed in ``<work_dir>/<checkpoint>``.
+        trigger, checkpointed in ``<work_dir>/<checkpoint>`` (a callable
+        names it from the source stream, before ``transform``).
 
         An out-of-band pause signal (polled per epoch) or a ``_PauseSignal``
         raised by ``handle`` stops the query cleanly before the epoch commits;
@@ -1547,6 +1547,8 @@ class CdcEngine:
         stream = reader.parquet(self.wal_path)
         if projection is not None:
             stream = projection(stream)
+        if callable(checkpoint):
+            checkpoint = checkpoint(stream)
         if transform is not None:
             stream = transform(stream)
         self._pause_requested = False
@@ -1627,11 +1629,11 @@ class CdcEngine:
     ) -> None:
         """Continuous-materialization drive: the streaming state store resolves
         per-key LWW winners against ALL history (streaming/stateful.stateful_lww,
-        applyInPandasWithState) and each micro-batch MERGEs only the keys whose
-        winner CHANGED — the Spark-native analogue of consuming a compacted
-        topic (RelationalChangeRecordEmitter -> Kafka log compaction; SURVEY
-        §2.4) straight into the lake, kept incrementally instead of re-resolved
-        per batch like run()/run_streaming().
+        one native streaming aggregation) and each micro-batch MERGEs only the
+        keys whose winner CHANGED — the Spark-native analogue of consuming a
+        compacted topic (RelationalChangeRecordEmitter -> Kafka log compaction;
+        SURVEY §2.4) straight into the lake, kept incrementally instead of
+        re-resolved per batch like run()/run_streaming().
 
         Scale shape: per-key state shards across executors with
         ``spark.sql.shuffle.partitions``; each trigger shuffles only its own
@@ -1641,13 +1643,17 @@ class CdcEngine:
         batch from scratch.
 
         Crash safety / exactly-once: the state store checkpoints with the
-        query; a replayed epoch re-emits the same transitions, and the lake
-        merge's strict ``s._offset > t._offset`` guard makes the re-apply a
-        no-op. Re-delivered WAL files lose the all-history ordinal comparison
-        inside the state store and never reach the merge at all. Each trigger
-        commits through the same epilogue as the batch drives (failure
-        handling, lineage, metrics, snapshot expiry); the stream starter is
-        shared with run_streaming (pause, retriable restarts).
+        query in ``<work_dir>/stateful_ckpt_<layout>``, named after its state
+        layout (stateful.state_layout), which follows the payload schema: when
+        new DDL, a converter setting or a code change alters the layout, the
+        old checkpoint is left alone and the query re-reads the WAL from
+        scratch, which the lake's offset guard makes converge. A replayed epoch re-emits the same transitions,
+        and the lake merge's strict ``s._offset > t._offset`` guard makes the
+        re-apply a no-op. Re-delivered WAL files lose the all-history ordinal
+        comparison inside the state store and never reach the merge at all.
+        Each trigger commits through the same epilogue as the batch drives
+        (failure handling, lineage, metrics, snapshot expiry); the stream
+        starter is shared with run_streaming (pause, retriable restarts).
 
         Scope: the final schema is fixed for the life of the query (a state
         store's payload schema cannot change mid-stream), so all schema-history
@@ -1656,7 +1662,7 @@ class CdcEngine:
         unsupported here (per-tx ranking needs a window over the unbounded
         stream); signals/incremental snapshots remain batch-engine features.
         """
-        from debezium_spark.streaming.stateful import stateful_lww
+        from debezium_spark.streaming.stateful import state_layout, stateful_lww
 
         self._resolve_message_key()
         cfg = self.config
@@ -1707,7 +1713,8 @@ class CdcEngine:
 
         self._run_stream(
             handle,
-            "stateful_ckpt",
+            lambda s: "stateful_ckpt_"
+            + state_layout(self._envelope(s), key_cols=key_cols),
             max_files_per_trigger,
             transform=lambda s: stateful_lww(self._envelope(s), key_cols=key_cols),
         )

@@ -247,6 +247,30 @@ def test_neutral_action_tightening():
     assert e.table_changes == "drop_column:check"
 
 
+def test_multi_option_table_alters_are_neutral():
+    """A table-option value may be followed by more table options; a value
+    followed by anything else (a column definition after a column named
+    `comment`) is still not a table option."""
+    for stmt in (
+        "ALTER TABLE repos ENGINE InnoDB ROW_FORMAT DYNAMIC",
+        "ALTER TABLE repos COMMENT 'x' ENGINE=InnoDB",
+        "ALTER TABLE repos AUTO_INCREMENT 100 COMMENT 'y'",
+        "ALTER TABLE repos CHARACTER SET utf8mb4 COLLATE utf8mb4_bin",
+        "ALTER TABLE repos DEFAULT CHARSET=utf8 ENGINE=InnoDB",
+        "ALTER TABLE repos CONVERT TO CHARACTER SET utf8mb4",
+    ):
+        evs = D.parse_ddl(stmt)
+        assert [(e.event_type, e.table_changes) for e in evs] == [
+            ("ALTER_TABLE", None)
+        ], stmt
+    for stmt in (
+        "ALTER TABLE repos COMMENT int NOT NULL",
+        "ALTER TABLE repos COLLATE utf8_bin ADD COLUMN x int",
+    ):
+        with pytest.raises(ValueError):
+            D.parse_ddl(stmt)
+
+
 def test_mysql_change_column():
     """MySQL CHANGE [COLUMN] old new type — rename AND retype in one action,
     emitted as one event per registry delta (rename, then widen); same-name

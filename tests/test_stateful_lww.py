@@ -1,9 +1,11 @@
-"""Continuous stateful LWW (applyInPandasWithState) vs the batch resolver.
+"""Continuous stateful LWW (native streaming aggregation) vs the batch resolver.
 
 The state-store variant must produce the same final per-key state as
 resolve_lww over the whole log, regardless of how the WAL files are sliced
 into micro-batches (Spark's file source delivers parquet segments in no
 guaranteed order — the state comparison absorbs stale deliveries)."""
+
+import re
 
 import pandas as pd
 import pytest
@@ -80,6 +82,22 @@ def test_streaming_state_matches_batch_resolver(spark, wal_dir, tmpdir_path):
         per_key.setdefault(k, []).append(r["_offset"])
     for k, offs in per_key.items():
         assert offs == sorted(set(offs)), f"non-monotonic emissions for {k}"
+
+
+def test_stateful_plan_has_no_python(spark, wal_dir):
+    """The stateful path is one native streaming aggregation: its plan holds
+    a state store but no pandas state operator and no Python/Arrow
+    evaluation node."""
+    stream = spark.readStream.schema(spark.read.parquet(wal_dir).schema).parquet(
+        wal_dir
+    )
+    out = stateful_lww(E.wrap_wal(stream))
+    plan = spark._jvm.PythonSQLUtils.explainString(
+        out._jdf.queryExecution(), "extended"
+    )
+    assert "StateStoreSave" in plan
+    assert "FlatMapGroupsInPandasWithState" not in plan
+    assert not re.search(r"EvalPython|PythonUDF|Pandas|Arrow", plan), plan
 
 
 def test_redelivery_emits_nothing(spark, wal_dir, tmpdir_path):

@@ -13,6 +13,7 @@ import os
 import shutil
 
 import pytest
+from pyspark.sql import functions as F
 
 from debezium_spark import CdcEngine, EngineConfig
 from debezium_spark.sources import wal as W
@@ -98,6 +99,98 @@ def test_stateful_sink_matches_batch_and_absorbs_redelivery(spark, tmpdir_path):
     eb = _engine(spark, tmpdir_path, src, spec, "batch")
     eb.run()
     assert _got(eb) == want
+
+
+def test_stateful_sink_leaves_other_operator_checkpoint_alone(spark, tmpdir_path):
+    """A stateful checkpoint another operator wrote under the unversioned
+    `stateful_ckpt` name (older engines kept theirs there) is neither resumed
+    nor touched: the drive starts its own checkpoint, named after its state
+    layout, re-reads the WAL from scratch and lands the oracle state."""
+    spec = W.WalSpec(n_keys=120, n_events=600, seed=41)
+    wal_dir = os.path.join(tmpdir_path, "wal")
+    W.write_wal(spark, spec, wal_dir, n_files=3)
+    es = _engine(spark, tmpdir_path, wal_dir, spec, "legacy")
+    legacy = os.path.join(es.work_dir, "stateful_ckpt")
+
+    def _drain(df, _bid):
+        df.write.format("noop").mode("append").save()
+
+    wal = spark.read.parquet(wal_dir)
+    q = (
+        spark.readStream.schema(wal.schema)
+        .parquet(wal_dir)
+        .groupBy("repo", "path")
+        .agg(F.max("offset"))
+        .writeStream.outputMode("update")
+        .foreachBatch(_drain)
+        .option("checkpointLocation", legacy)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(300)
+
+    def listing():
+        paths = [os.path.join(d, f) for d, _, fs in os.walk(legacy) for f in fs]
+        return sorted((os.path.relpath(p, legacy), os.path.getsize(p)) for p in paths)
+
+    before = listing()
+    es.run_streaming_stateful(max_files_per_trigger=2)
+    assert _got(es) == _want(spark, wal_dir)
+    assert listing() == before
+
+
+def test_stateful_sink_resumes_across_drop_column(spark, tmpdir_path):
+    """A DROP COLUMN entering the schema history between two drives narrows
+    the payload the state store holds; the second drive must not try to
+    resume the first one's state (Spark refuses a changed state schema) but
+    start a fresh checkpoint and still land the oracle state."""
+    spec = W.WalSpec(n_keys=150, n_events=800, seed=47)
+    src = os.path.join(tmpdir_path, "wal_src")
+    W.write_wal(spark, spec, src, n_files=4)
+    files = sorted(glob.glob(f"{src}/*.parquet"))
+    wal_dir = os.path.join(tmpdir_path, "wal")
+    os.makedirs(wal_dir)
+    for f in files[:2]:
+        shutil.copy(f, wal_dir)
+    es = _engine(spark, tmpdir_path, wal_dir, spec, "ddl")
+    es.run_streaming_stateful(max_files_per_trigger=2)
+    assert _got(es) == _want(spark, wal_dir)
+
+    history = W.schema_history(spark, spec)
+    hi = spark.read.parquet(wal_dir).agg(F.max("offset")).first()[0]
+    ddl_offset = max(hi, history.agg(F.max("offset")).first()[0]) + 1
+    history = history.union(
+        spark.createDataFrame(
+            [(ddl_offset, 4, "ALTER TABLE repos DROP COLUMN lang", "drop_column:lang")],
+            history.schema,
+        )
+    )
+    for f in files[2:]:
+        shutil.copy(f, wal_dir)
+
+    def resume():
+        eng = CdcEngine(
+            spark,
+            EngineConfig(),
+            wal_path=wal_dir,
+            target_path=es.target_path,
+            work_dir=es.work_dir,
+            schema_changes=history,
+        )
+        eng.run_streaming_stateful(max_files_per_trigger=2)
+        return eng
+
+    es2 = resume()
+    assert "lang" not in es2.target().schema.fieldNames()
+    assert _got(es2) == _want(spark, src)
+    ckpts = sorted(glob.glob(os.path.join(es.work_dir, "stateful_ckpt_*")))
+    assert len(ckpts) == 2
+
+    # an unchanged layout resumes its own checkpoint: nothing new commits
+    committed = es2.target().committed_batch_id
+    resume()
+    assert es2.target().committed_batch_id == committed
+    assert sorted(glob.glob(os.path.join(es.work_dir, "stateful_ckpt_*"))) == ckpts
 
 
 def test_stateful_sink_rejects_tx_metadata(spark, tmpdir_path):
