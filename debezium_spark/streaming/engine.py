@@ -38,7 +38,7 @@ import json
 import os
 import re
 import time
-from typing import Any, Callable
+from typing import Any, Callable, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -130,7 +130,6 @@ class CdcEngine:
         self._metrics_path = os.path.join(work_dir, "_metrics.jsonl")
         self._schema_changes_df = schema_changes
         self._registry: SchemaRegistry | None = None
-        self._truncate_offsets: list[int] | None = None
         self._signal_state_path = os.path.join(work_dir, "_signals_consumed")
         # high-water mark of applied IN-BAND (op='s') signal offsets
         self._inband_state_path = os.path.join(work_dir, "_inband_consumed")
@@ -213,24 +212,16 @@ class CdcEngine:
         return LakeTable(self.spark, self.target_path)
 
     # ------------------------------------------------------------- control ops
-    def _truncates_in(self, lo: int, hi: int) -> int | None:
-        """Max TRUNCATE offset in (lo, hi], or None. The WAL is scanned for 't'
-        rows once per engine (column-pruned offset scan), not once per batch."""
-        if not self.config.handle_truncate:
-            return None
-        if self._truncate_offsets is None:
-            wal = self._wal()
-            if "op" not in wal.columns:
-                # Envelope-only WAL without op codes — nothing to scan. Any other
-                # failure (storage error, bad parquet) must RAISE: caching [] on
-                # a transient error would silently disable TRUNCATE for the
-                # engine's lifetime while data events keep merging.
-                self._truncate_offsets = []
-            else:
-                rows = wal.where(F.col("op") == "t").select("offset").collect()
-                self._truncate_offsets = sorted(int(r["offset"]) for r in rows)
-        hits = [o for o in self._truncate_offsets if lo < o <= hi]
-        return max(hits) if hits else None
+    def _truncate_offsets(self, df: DataFrame) -> F.Column:
+        """Aggregate column ``truncates``: the TRUNCATE ('t') offsets in
+        ``df``. Each drive folds it into the bounds aggregation it already
+        runs, so the offsets always describe the log as read now, not as it
+        was when the engine first looked."""
+        if not self.config.handle_truncate or "op" not in df.columns:
+            return F.array().cast("array<bigint>").alias("truncates")
+        return F.collect_list(
+            F.when(F.col("op") == "t", F.col("offset"))
+        ).alias("truncates")
 
     def _apply_signal_action(
         self, sig: dict[str, Any], *, at_offset: int | None = None
@@ -1201,10 +1192,16 @@ class CdcEngine:
         return {**res, **stats, "wall_ms": wall_ms}
 
     def _apply_batch(
-        self, lake: LakeTable, slice_df: DataFrame, *, batch_id: int, lo: int, hi: int
+        self,
+        lake: LakeTable,
+        slice_df: DataFrame,
+        *,
+        batch_id: int,
+        lo: int,
+        hi: int,
+        truncate_below: int | None = None,
     ) -> dict[str, Any]:
         t0 = time.time()
-        truncate_below = self._truncates_in(lo, hi)
         reg = self.registry()
         for change in reg.pending_upto(hi):
             reg.apply_to_lake(lake, change)      # Iceberg-DDL analogue, idempotent
@@ -1359,6 +1356,7 @@ class CdcEngine:
         lo: int,
         hi: int,
         sig: tuple[int, dict[str, Any]] | None = None,
+        truncates: Sequence[int] = (),
     ) -> tuple[dict[str, Any], bool]:
         """One micro-batch of run() and run_streaming(): the rows of ``src``
         (the whole WAL, or one streaming epoch) in offsets (lo, hi] plus the
@@ -1367,14 +1365,19 @@ class CdcEngine:
         apply + commit -> durable snapshot position -> the in-band signal
         ``sig`` the batch ends at, applied only after the commit (every event
         before the signal is processed pre-action, every event after it
-        post-action). Returns (apply result, pause requested by ``sig``)."""
+        post-action). ``truncates``: TRUNCATE offsets of ``src`` (see
+        :meth:`_truncate_offsets`); the highest one in (lo, hi] clears the
+        lake below it. Returns (apply result, pause requested by ``sig``)."""
         batch_id = lake.committed_batch_id + 1
         slice_df = src.where((F.col("offset") > lo) & (F.col("offset") <= hi))
         self._publish_side_channels(slice_df, batch_id=batch_id)
         chunks = self._snapshot_chunk_rows(src.schema, lo)
         if chunks is not None:
             slice_df = slice_df.unionByName(chunks, allowMissingColumns=True)
-        res = self._apply_batch(lake, slice_df, batch_id=batch_id, lo=lo, hi=hi)
+        res = self._apply_batch(
+            lake, slice_df, batch_id=batch_id, lo=lo, hi=hi,
+            truncate_below=max((o for o in truncates if lo < o <= hi), default=None),
+        )
         if chunks is not None:
             self._save_incr_state(self._incr_pending_state)
         if sig is None:
@@ -1443,7 +1446,10 @@ class CdcEngine:
                 ):
                     self.history.record(c)
         wal = self._wal()
-        wal_hi = wal.agg(F.max("offset")).collect()[0][0]
+        bounds = wal.agg(
+            F.max("offset").alias("hi"), self._truncate_offsets(wal)
+        ).first()
+        wal_hi = bounds["hi"]
         if wal_hi is None:
             return
         lo = lake.committed_max_offset
@@ -1479,7 +1485,7 @@ class CdcEngine:
                     # Exact-offset semantics (Signal.java — signals are totally
                     # ordered with data): the batch ends AT the first signal.
                     hi, sig = sigs[0][0], sigs[0]
-            res, pause = self._step(lake, wal, lo, hi, sig)
+            res, pause = self._step(lake, wal, lo, hi, sig, bounds["truncates"])
             results.append(res)
             lo = hi
             if pause:
@@ -1592,8 +1598,10 @@ class CdcEngine:
             # per-row offset guard + retained delete tombstones make merge
             # idempotent and order-tolerant (plans/lake.py module docstring).
             rng = df.agg(
-                F.min("offset").alias("lo"), F.max("offset").alias("hi")
-            ).collect()[0]
+                F.min("offset").alias("lo"),
+                F.max("offset").alias("hi"),
+                self._truncate_offsets(df),
+            ).first()
             if rng["hi"] is None:
                 return
             lo, hi_all = int(rng["lo"]) - 1, int(rng["hi"])
@@ -1614,7 +1622,7 @@ class CdcEngine:
             while lo < hi_all or pending:
                 sig = pending.pop(0) if pending else None
                 hi = sig[0] if sig is not None else hi_all
-                if self._step(lake, df, lo, hi, sig)[1]:
+                if self._step(lake, df, lo, hi, sig, rng["truncates"])[1]:
                     self._pause_requested = True
                     raise _PauseSignal()
                 lo = hi

@@ -15,24 +15,35 @@ table's topic (EventDispatcher.java:189-196). Spark-first, the same shape is a
     :class:`CdcEngine` pipeline into that table's own lake target.
 
 Scale notes: the per-table filter is pushed to the parquet scan (min/max
-pruning on ``table`` when the WAL is written table-clustered); each per-table
-pipeline is independent — on a cluster they run concurrently (independent
-jobs), here sequentially. Offsets stay globally ordered, so each pipeline's
-resume watermark is per-table and exact.
+pruning on ``table`` when the WAL is written table-clustered). The per-table
+pipelines are independent (own lake, work dir, offset guard and checkpoint),
+so a drive runs them concurrently on a thread pool, one worker per captured
+table up to ``_MAX_WORKERS``: each pipeline is a chain of small Spark jobs,
+and overlapping N chains keeps the task slots busy where one chain at a time
+leaves them idle between jobs. Each worker inherits the caller thread's Spark
+local properties (job group, description, tags). Offsets stay globally
+ordered, so each pipeline's resume watermark is per-table and exact.
 """
 
 from __future__ import annotations
 
 import os
 import re
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, replace
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.util import inheritable_thread_target
 
 from debezium_spark.config import EngineConfig
 from debezium_spark.streaming.engine import CdcEngine
+
+# Cap on concurrently driven per-table pipelines. Not the core count: a
+# pipeline spends most of its wall time between small jobs, so more pipelines
+# than task slots still overlap usefully.
+_MAX_WORKERS = 16
 
 
 @dataclass
@@ -155,8 +166,8 @@ class MultiTableEngine:
         return load
 
     def run(self, **kw) -> dict[str, list[dict[str, Any]]]:
-        """Replay each captured table's pipeline (independent at cluster scale;
-        sequential here). Returns per-table batch results.
+        """Replay every captured table's pipeline, concurrently (see
+        :meth:`_drive`). Returns per-table batch results.
 
         After the pass, the dispatcher's per-partition offset map (one
         partition per captured table — GtidSet.java:36's per-source-UUID shape
@@ -171,10 +182,10 @@ class MultiTableEngine:
         Structured Streaming query (availableNow) over the SHARED WAL
         directory — the raw file stream is narrowed to the table's typed
         shape by the pure projection, so filters/from_json run inside the
-        query. On a cluster the N queries run concurrently (independent
-        sinks + checkpoints, the reference's task-per-connector shape);
-        sequential here. The per-table offset map is containment-checked and
-        persisted exactly like run()."""
+        query. The N queries run concurrently (independent sinks +
+        checkpoints, the reference's task-per-connector shape), driven like
+        run() by :meth:`_drive`; the per-table offset map is
+        containment-checked and persisted exactly like run()."""
         return self._drive(
             lambda eng: eng.run_streaming(
                 max_files_per_trigger=max_files_per_trigger
@@ -182,10 +193,26 @@ class MultiTableEngine:
         )
 
     def _drive(self, drive_one) -> dict[str, Any]:
+        """``drive_one(engine)`` for every captured table on a thread pool (one
+        worker per table, at most ``_MAX_WORKERS``). Each task carries the
+        caller's Spark local properties (job group, description, tags).
+        Every table runs to completion; then the first failure in
+        ``self.engines`` order is re-raised and the offset map is not
+        persisted."""
         from debezium_spark.sources.gtids import PartitionedOffsets
 
         prior = self.offsets(persisted=True)
-        results = {name: drive_one(eng) for name, eng in self.engines.items()}
+        workers = max(1, min(len(self.engines), _MAX_WORKERS))
+        with ThreadPoolExecutor(max_workers=workers) as pool:
+            # one wrap per table: each gets its own copy of the properties
+            futures = {
+                name: pool.submit(
+                    inheritable_thread_target(self.spark)(drive_one), eng
+                )
+                for name, eng in self.engines.items()
+            }
+        # every table has finished; result() re-raises in self.engines order
+        results = {name: fut.result() for name, fut in futures.items()}
         now = self.offsets()
         # Monotonicity is asserted only over CURRENTLY captured tables — a
         # table excluded on restart keeps its persisted watermark (carried

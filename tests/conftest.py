@@ -16,6 +16,10 @@ def spark():
         .config("spark.driver.memory", "8g")
         .config("spark.ui.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
+        # PySpark's per-call origin capture (stack walk + JVM round trips on
+        # every Column/DataFrame call) only enriches error messages; off, the
+        # engine's plan building makes about a quarter of the JVM calls.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .getOrCreate()
     )
     yield s

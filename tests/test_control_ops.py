@@ -25,10 +25,8 @@ def _engine(spark, tmpdir_path, wal_dir, spec, cfg=None, sub=""):
     )
 
 
-def test_truncate_event_clears_prior_state(spark, tmpdir_path):
-    """A TRUNCATE ('t') row at offset T drops every row written before T; later
-    events rebuild state (Envelope.java:363-369: neither before nor after)."""
-    spec = W.WalSpec(n_keys=200, n_events=800, seed=31, schema_changes=False)
+def _with_truncate(spark, spec):
+    """The spec's events plus one TRUNCATE ('t') row mid-log: (events, its offset)."""
     wal = W.wal_events(spark, spec)
     bounds = wal.agg(F.min("offset"), F.max("offset")).first()
     t_off = int((bounds[0] + bounds[1]) // 2)
@@ -39,6 +37,25 @@ def test_truncate_event_clears_prior_state(spark, tmpdir_path):
     full = wal.unionByName(trunc_row, allowMissingColumns=True).withColumn(
         "is_tombstone", F.coalesce(F.col("is_tombstone"), F.lit(False))
     )
+    return full, t_off
+
+
+def _post_truncate_oracle(spark, wal_dir, t_off):
+    """Oracle state hashes over the events after the TRUNCATE at ``t_off``."""
+    post = (
+        spark.read.parquet(wal_dir)
+        .where((F.col("offset") > t_off) & (F.col("op") != "t"))
+        .select("offset", "is_tombstone", "op", "repo", "path", "after")
+        .toPandas()
+    )
+    return oracle.state_hashes(oracle.reduce_wal(post))
+
+
+def test_truncate_event_clears_prior_state(spark, tmpdir_path):
+    """A TRUNCATE ('t') row at offset T drops every row written before T; later
+    events rebuild state (Envelope.java:363-369: neither before nor after)."""
+    spec = W.WalSpec(n_keys=200, n_events=800, seed=31, schema_changes=False)
+    full, t_off = _with_truncate(spark, spec)
     wal_dir = os.path.join(tmpdir_path, "walt")
     full.repartition(2).write.parquet(wal_dir)
 
@@ -48,18 +65,39 @@ def test_truncate_event_clears_prior_state(spark, tmpdir_path):
     # nothing from before the truncate survives
     assert final.where(F.col("_offset") < t_off).count() == 0
     # state equals the oracle reduce over post-truncate events only
-    post = (
-        spark.read.parquet(wal_dir)
-        .where((F.col("offset") > t_off) & (F.col("op") != "t"))
-        .select("offset", "is_tombstone", "op", "repo", "path", "after")
-        .toPandas()
-    )
     got = oracle.target_hashes(final.select("repo", "path", "content").toPandas())
-    assert got == oracle.state_hashes(oracle.reduce_wal(post))
+    assert got == _post_truncate_oracle(spark, wal_dir, t_off)
     # watermark is durable: a fresh engine replaying the same WAL converges too
     eng2 = _engine(spark, tmpdir_path, wal_dir, spec, sub="t")
     eng2.run()
     assert eng.target().manifest(refresh=True)["truncate_below"] == t_off
+
+
+@pytest.mark.parametrize("drive", ["run", "run_streaming"])
+def test_truncate_reaches_a_reused_engine(spark, tmpdir_path, drive):
+    """One engine drives half the log, a segment carrying a TRUNCATE is
+    appended, and the SAME engine drives again: the TRUNCATE must apply, in
+    the drive that reads it, however much log the engine has read before."""
+    spec = W.WalSpec(n_keys=200, n_events=800, seed=31, schema_changes=False)
+    full, t_off = _with_truncate(spark, spec)
+    wal_dir = os.path.join(tmpdir_path, "walr")
+    full.where(F.col("offset") < t_off).repartition(1).write.parquet(wal_dir)
+
+    eng = _engine(spark, tmpdir_path, wal_dir, spec, sub="r")
+    getattr(eng, drive)()
+    assert eng.target().read().where(F.col("_offset") < t_off).count() > 0
+    full.where(F.col("offset") >= t_off).repartition(1).write.mode("append").parquet(
+        wal_dir
+    )
+    getattr(eng, drive)()
+
+    lake = eng.target()
+    assert lake.committed_max_offset >= t_off
+    assert lake.manifest(refresh=True)["truncate_below"] == t_off
+    final = lake.read()
+    assert final.where(F.col("_offset") < t_off).count() == 0
+    got = oracle.target_hashes(final.select("repo", "path", "content").toPandas())
+    assert got == _post_truncate_oracle(spark, wal_dir, t_off)
 
 
 @pytest.mark.parametrize("drive", ["run", "run_streaming", "run_streaming_stateful"])
@@ -185,16 +223,7 @@ def test_truncate_out_of_order_delivery(spark, tmpdir_path):
     import shutil
 
     spec = W.WalSpec(n_keys=150, n_events=600, seed=32, schema_changes=False)
-    wal = W.wal_events(spark, spec)
-    bounds = wal.agg(F.min("offset"), F.max("offset")).first()
-    t_off = int((bounds[0] + bounds[1]) // 2)
-    trunc_row = spark.createDataFrame(
-        [(t_off, 0, "t", None, None)],
-        "offset bigint, ts_ms bigint, op string, repo string, path string",
-    )
-    full = wal.unionByName(trunc_row, allowMissingColumns=True).withColumn(
-        "is_tombstone", F.coalesce(F.col("is_tombstone"), F.lit(False))
-    )
+    full, t_off = _with_truncate(spark, spec)
     staging = os.path.join(tmpdir_path, "stage")
     full.where(F.col("offset") < t_off).repartition(1).write.parquet(
         os.path.join(staging, "pre")
@@ -217,14 +246,8 @@ def test_truncate_out_of_order_delivery(spark, tmpdir_path):
     eng.run_streaming(max_files_per_trigger=1)
     final = eng.target().read()
     assert final.where(F.col("_offset") < t_off).count() == 0
-    post = (
-        spark.read.parquet(live)
-        .where((F.col("offset") > t_off) & (F.col("op") != "t"))
-        .select("offset", "is_tombstone", "op", "repo", "path", "after")
-        .toPandas()
-    )
     got = oracle.target_hashes(final.select("repo", "path", "content").toPandas())
-    assert got == oracle.state_hashes(oracle.reduce_wal(post))
+    assert got == _post_truncate_oracle(spark, live, t_off)
 
 
 def test_message_events_never_reach_merge(spark, tmpdir_path):

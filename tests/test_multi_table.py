@@ -5,6 +5,7 @@ relational/Tables.java registry + EventDispatcher.java:189-196 routing."""
 import json
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from debezium_spark import EngineConfig, MultiTableEngine, TableSpec
@@ -164,3 +165,87 @@ def test_offsets_survive_table_exclusion_on_restart(spark, tmpdir_path):
     # excluded table's watermark retained; captured table stayed monotone
     assert po_after.get("users") == po_full.get("users")
     assert po_after.get("repos") >= po_full.get("repos")
+
+
+def test_job_group_reaches_every_table(spark, tmpdir_path):
+    """The dispatcher drives each table on its own worker thread; a job group
+    the caller set must still reach every job of the run, every table's
+    included."""
+    wal_dir = os.path.join(tmpdir_path, "mwal5")
+    spark.createDataFrame(_wal_rows(), WAL_SCHEMA).repartition(1).write.parquet(wal_dir)
+    sc = spark.sparkContext
+    eng = _mk(spark, tmpdir_path, wal_dir, "e")
+
+    def tag_jobs(real, tag):
+        # runs on the table's worker thread: tags that table's jobs only
+        def run(**kw):
+            sc.addJobTag(tag)
+            try:
+                return real(**kw)
+            finally:
+                sc.removeJobTag(tag)
+
+        return run
+
+    for name, e in eng.engines.items():
+        e.run = tag_jobs(e.run, f"dbz-test-table-{name}")
+
+    sc.setJobGroup("dbz-test-before", "marks the job id before the run")
+    spark.range(1).count()
+    sc.setJobGroup("dbz-test-run", "multi-table run")
+    try:
+        eng.run()
+    finally:
+        sc.setJobGroup("dbz-test-after", "marks the job id after the run")
+        spark.range(1).count()
+        for key in ("spark.jobGroup.id", "spark.job.description",
+                    "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+
+    tracker = sc.statusTracker()
+    before = max(tracker.getJobIdsForGroup("dbz-test-before"))
+    after = min(tracker.getJobIdsForGroup("dbz-test-after"))
+    in_group = set(tracker.getJobIdsForGroup("dbz-test-run"))
+    run_jobs = set(range(before + 1, after))
+    assert run_jobs and run_jobs <= in_group
+    tagged = {
+        name: set(
+            sc._jsc.sc().statusTracker().getJobIdsForTag(f"dbz-test-table-{name}")
+        )
+        for name in eng.engines
+    }
+    for name, table_jobs in tagged.items():
+        assert table_jobs and table_jobs <= in_group, name
+    # each table's threads got their own copy of the properties: a tag added
+    # on one table's thread never reaches another table's jobs
+    assert not tagged["repos"] & tagged["users"]
+
+
+def test_failed_table_does_not_stop_the_others(spark, tmpdir_path):
+    """One table's failure is re-raised only after every table has run, and
+    the dispatcher's persisted offset map stays as it was."""
+    wal_dir = os.path.join(tmpdir_path, "mwal6")
+    spark.createDataFrame(_wal_rows(), WAL_SCHEMA).repartition(1).write.parquet(wal_dir)
+    eng = _mk(spark, tmpdir_path, wal_dir, "f", failure_handling="fail")
+    eng.run()
+    persisted = eng.offsets(persisted=True)
+
+    # 'repos' (driven first) gets a null-key row; 'users' gets a new user
+    more = [
+        (12, 120, "c", "repos", None, None, _j(path="x.py", content="z"), False, 1, 1),
+        (13, 130, "c", "users", _j(user_id=13), None,
+         _j(user_id=13, name="dee", email="dee@x.io"), False, 1, 1),
+    ]
+    spark.createDataFrame(more, WAL_SCHEMA).repartition(1).write.mode("append").parquet(
+        wal_dir
+    )
+    eng2 = _mk(spark, tmpdir_path, wal_dir, "f", failure_handling="fail")
+    assert list(eng2.engines)[0] == "repos"
+    with pytest.raises(ValueError, match="malformed key"):
+        eng2.run()
+
+    users = {r["user_id"]: r["name"] for r in eng2.target("users").read().collect()}
+    assert users == {10: "ann2", 12: "cyd", 13: "dee"}
+    repos = {(r["repo"], r["path"]) for r in eng2.target("repos").read().collect()}
+    assert repos == {("r1", "a.py"), ("r3", "c.rs")}
+    assert eng2.offsets(persisted=True) == persisted

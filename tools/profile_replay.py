@@ -122,8 +122,7 @@ def main():
         bounds = wal.agg(F.min("offset").alias("lo"), F.max("offset").alias("hi")).collect()[0]
     lo, hi = -1, int(bounds["hi"])
     slice_df = wal.where((F.col("offset") > lo) & (F.col("offset") <= hi))
-    with ph("registry+truncates"):
-        eng._truncates_in(lo, hi)
+    with ph("registry"):
         reg = eng.registry()
         for change in reg.pending_upto(hi):
             reg.apply_to_lake(lake, change)
