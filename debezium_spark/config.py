@@ -128,17 +128,13 @@ class EngineConfig:
     # --- batching / replay (ChangeEventQueue.java:62-106 analogues) ---
     # max offsets pulled into one micro-batch during batch replay
     max_offsets_per_batch: int = 5_000_000
-    # LWW physical strategy: "auto" (default) probes the per-batch live-key
-    # count (one count over the key-only winner aggregation) and picks
-    # "ordinal" — shuffle (key, ordinal) only, broadcast-filter the payload
-    # rows (payload shuffle ∝ live keys) — while the winner set fits
-    # lww_broadcast_key_budget, degrading to "aggregate" (the one-shuffle
-    # max_by fallback) by itself when it doesn't. Set "ordinal"/"aggregate"
-    # to pin a plan (see resolver.resolve_lww).
-    lww_strategy: str = "auto"
-    # max live keys per batch whose winning-ordinal set may broadcast
-    # (~8 B/key + LongHashedRelation overhead ≈ 100 MB per 6M keys; 16M keys
-    # ≈ 270 MB — comfortably under a 4 GB executor's broadcast headroom)
+    # max live keys per batch whose winning-ordinal set may broadcast: LWW
+    # picks its plan per batch (resolver.resolve_lww strategy="auto") —
+    # "ordinal" (shuffle key + ordinal only, broadcast-filter the payload
+    # rows) while the live-key count fits, else the one-shuffle max_by
+    # "aggregate". ~8 B/key + LongHashedRelation overhead ≈ 100 MB per 6M
+    # keys; 16M keys ≈ 270 MB — comfortably under a 4 GB executor's
+    # broadcast headroom.
     lww_broadcast_key_budget: int = 16_000_000
 
     # --- target layout ---

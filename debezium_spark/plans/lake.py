@@ -21,6 +21,13 @@ pointer, matching Iceberg's model piece for piece:
     files to the current schema (null-fill new columns, upcast widened ones) —
     exactly Iceberg's add-column / type-widening evolution.
 
+Every write (merge, the staged initial load, vacuum) is one stage step
+(``_stage``: flatten actions to the physical layout, join against the touched
+buckets' committed files if there are any, write partitioned by bucket) and
+one commit step (``_commit``: next manifest -> atomic pointer swap). A row
+with a null key column lands in a quarantine partition that no manifest
+references, on every write, so it is never readable.
+
 Ordering contract (same as a database WAL): batches are applied in offset order —
 the engine slices the log by offset range, so a later batch never carries an offset
 below an applied one. Within a batch, order is resolved by the LWW reducer before
@@ -33,7 +40,7 @@ import json
 import os
 import time
 import uuid
-from typing import Any
+from typing import Any, Iterable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -49,6 +56,15 @@ _DATA_DIR = "data"
 def bucket_expr(repo_col: F.Column, n_buckets: int) -> F.Column:
     """Deterministic bucket id for a key — the bucket(16, repo) transform."""
     return F.pmod(F.xxhash64(repo_col), F.lit(n_buckets)).cast("int")
+
+
+def key_bucket(key_cols, n_buckets: int) -> F.Column:
+    """Bucket of a row's key (first key column); null when any key column is
+    null — a malformed key, bound for the quarantine partition."""
+    key_null = F.lit(False)
+    for c in key_cols:
+        key_null = key_null | F.col(c).isNull()
+    return F.when(~key_null, bucket_expr(F.col(key_cols[0]), n_buckets))
 
 
 class LakeTable:
@@ -382,7 +398,7 @@ class LakeTable:
         m["ts"] = time.time()
         self._commit_manifest(m)
 
-    # ------------------------------------------------------- initial-load path
+    # ------------------------------------------------------------- write path
     def stage_initial(
         self,
         actions: DataFrame,
@@ -400,95 +416,25 @@ class LakeTable:
         ``bucket_into``), the data is already clustered in the write layout and
         no exchange happens here at all.
 
-        Rows whose key has a null column land in the null-bucket partition
-        (``_bucket=__HIVE_DEFAULT_PARTITION__``) — a quarantine lane the caller
-        inspects (cheap narrow scan of the staging files) BEFORE
-        :meth:`commit_staged` makes anything visible. Nothing is committed by
-        this method; a crash leaves only orphan staging files.
+        Rows whose key has a null column land in the quarantine partition
+        (see :meth:`_stage`), which the caller can inspect (a cheap narrow
+        scan of the staging files) BEFORE :meth:`commit_staged` makes
+        anything visible. Nothing is committed by this method; a crash
+        leaves only orphan staging files.
 
-        Returns {"staging", "staging_rel", "new_files", "has_malformed"}, or
-        None if ``batch_id`` was already committed (replay skip).
+        Returns {"staging", "staging_rel", "new_files", "has_malformed",
+        "truncate_below"}, or None if ``batch_id`` was already committed
+        (replay skip).
         """
         m = self.manifest(refresh=True)
         if batch_id <= m["batch_id"]:
             return None
         if m["files"]:
             raise ValueError("stage_initial requires an empty table; use merge()")
-        key_cols = self.key_cols
-        nb = m["n_buckets"]
-        payload = self.schema
-        payload_cols = payload.fieldNames()
-        pre_bucketed = "_bucket" in actions.columns
-        key_null = F.lit(False)
-        for c in key_cols:
-            key_null = key_null | F.col(c).isNull()
-        dflts = m.get("defaults", {})
-        after_fields = set(actions.schema["after"].dataType.fieldNames())
-
-        def _payload_col(c: str) -> F.Column:
-            # same DEFAULT backfill rule as merge() — see its comment
-            dt = payload[c].dataType
-            base = (
-                F.col("after").getField(c).cast(dt)
-                if c in after_fields
-                else F.lit(None).cast(dt)
-            )
-            d = dflts.get(c)
-            if not d:
-                return base
-            backfill = F.when(
-                (F.col("action") != ACTION_DELETE)
-                & (F.col("_offset") < F.lit(d["below_offset"])),
-                F.lit(d["value"]),
-            ).cast(dt)
-            return F.coalesce(base, backfill)
-
-        src = actions.select(
-            *key_cols,
-            *[
-                _payload_col(c).alias(c)
-                for c in payload_cols
-                if c not in key_cols
-            ],
-            F.col("_offset").cast("long"),
-            F.col("_ts_ms").cast("long"),
-            (F.col("action") == ACTION_DELETE).alias("_deleted"),
-            (
-                F.col("_bucket")
-                if pre_bucketed
-                else F.when(~key_null, bucket_expr(F.col(key_cols[0]), nb))
-            ).alias("_bucket"),
+        return self._stage(
+            m, actions, name=f"commit-{batch_id}", truncate_below=truncate_below,
+            partitions=m["n_buckets"],
         )
-        trunc = max(m.get("truncate_below", 0), truncate_below or 0)
-        if trunc > 0:
-            src = src.where(F.col("_offset") >= trunc)
-        staging = f"{_DATA_DIR}/commit-{batch_id}-{uuid.uuid4().hex[:8]}"
-        abs_staging = os.path.join(self.path, staging)
-        if not pre_bucketed:
-            src = src.repartition(nb, "_bucket")
-        src.write.partitionBy("_bucket").mode("overwrite").parquet(abs_staging)
-        new_files, has_malformed = [], False
-        sv = m["schema_version"]
-        for bdir in sorted(os.listdir(abs_staging)):
-            if not bdir.startswith("_bucket="):
-                continue
-            bval = bdir.split("=", 1)[1]
-            if not bval.isdigit():
-                has_malformed = True  # null-bucket quarantine partition
-                continue
-            for fn in sorted(os.listdir(os.path.join(abs_staging, bdir))):
-                if fn.endswith(".parquet"):
-                    new_files.append(
-                        {"path": f"{staging}/{bdir}/{fn}", "bucket": int(bval),
-                         "schema_version": sv}
-                    )
-        return {
-            "staging": abs_staging,
-            "staging_rel": staging,
-            "new_files": new_files,
-            "has_malformed": has_malformed,
-            "truncate_below": trunc,
-        }
 
     def commit_staged(
         self,
@@ -504,26 +450,15 @@ class LakeTable:
         m = self.manifest(refresh=True)
         if batch_id <= m["batch_id"]:
             return {"applied": False, "batch_id": batch_id}
-        new_manifest = dict(m)
-        new_manifest["version"] = m["version"] + 1
-        new_manifest["batch_id"] = batch_id
-        new_manifest["max_offset"] = max(max_offset, m["max_offset"])
-        new_manifest["files"] = list(m["files"]) + staged["new_files"]
-        new_manifest["truncate_below"] = max(
-            m.get("truncate_below", 0), staged.get("truncate_below", 0)
-        )
-        new_manifest["ts"] = time.time()
-        new_manifest["stats"] = stats or {}
-        self._commit_manifest(new_manifest)
-        touched = {fe["bucket"] for fe in staged["new_files"]}
+        self._commit(m, staged, replaced=(), batch_id=batch_id,
+                     max_offset=max(max_offset, m["max_offset"]), stats=stats or {})
         return {
             "applied": True,
             "batch_id": batch_id,
-            "touched_buckets": len(touched),
+            "touched_buckets": len({fe["bucket"] for fe in staged["new_files"]}),
             "new_files": len(staged["new_files"]),
         }
 
-    # ------------------------------------------------------------- MERGE
     def merge(
         self,
         actions: DataFrame,
@@ -540,9 +475,11 @@ class LakeTable:
         struct), _offset, _ts_ms — the output of resolve_lww(). Exactly one row per
         key (the resolver guarantees it).
 
-        Only buckets whose keys appear in the batch are read/rewritten; the offset
-        guard makes replays idempotent. Returns commit stats; ``{"applied": False}``
-        if this batch_id was already committed (exactly-once on replay).
+        Only buckets whose keys appear in the batch are read/rewritten (the
+        ``touched_buckets`` the caller already knows, else one distinct-bucket
+        job); the offset guard makes replays idempotent. Returns commit stats;
+        ``{"applied": False}`` if this batch_id was already committed
+        (exactly-once on replay).
 
         ``truncate_below``: a TRUNCATE event at that offset was observed — every
         target row (incl. tombstones) with ``_offset < truncate_below`` is dropped,
@@ -554,23 +491,105 @@ class LakeTable:
         if batch_id <= m["batch_id"]:
             return {"applied": False, "batch_id": batch_id}
         trunc = max(m.get("truncate_below", 0), truncate_below or 0)
-        truncating = trunc > m.get("truncate_below", 0)
+        if trunc > m.get("truncate_below", 0):
+            touched = set(range(m["n_buckets"]))  # every bucket rewrites under the watermark
+        elif touched_buckets is not None:
+            touched = set(touched_buckets)
+        else:
+            touched = {
+                r[0]
+                for r in actions.where(F.col("_offset") >= trunc)
+                .select(key_bucket(m["key_cols"], m["n_buckets"]))
+                .distinct()
+                .collect()
+            } - {None}
+        # No fixed partitions: the write's partition count comes from
+        # spark.sql.shuffle.partitions and AQE then coalesces it by size — a
+        # small incremental trigger writes with a handful of tasks instead of
+        # one tiny task per bucket (touched can be 128+ while carrying a few
+        # thousand rows), while a bulk merge still fans out.
+        staged = self._stage(
+            m, actions, name=f"commit-{batch_id}", truncate_below=trunc,
+            against=[fe for fe in m["files"] if fe["bucket"] in touched],
+        )
+        self._commit(m, staged, replaced=touched, batch_id=batch_id,
+                     max_offset=max(max_offset, m["max_offset"]), stats=stats or {})
+        return {
+            "applied": True,
+            "batch_id": batch_id,
+            "touched_buckets": len(touched),
+            "new_files": len(staged["new_files"]),
+        }
 
-        key_cols = self.key_cols
-        nb = m["n_buckets"]
+    def vacuum(self, *, upto_offset: int | None = None) -> dict[str, Any]:
+        """Purge delete-tombstone rows with _offset <= watermark (full rewrite).
+
+        Safe once every offset at-or-below the watermark is durably applied — the
+        log-compaction retention analogue. Default watermark: committed_max_offset.
+        """
+        m = self.manifest(refresh=True)
+        wm = upto_offset if upto_offset is not None else m["max_offset"]
+        deleted = F.coalesce(F.col("_deleted"), F.lit(False))
+        kept = self.read(include_deleted=True).where(~deleted | (F.col("_offset") > wm))
+        # The table's own rows, re-expressed as resolved actions.
+        key_cols = m["key_cols"]
+        data_cols = [c for c in self.schema.fieldNames() if c not in key_cols]
+        actions = kept.select(
+            *key_cols,
+            F.when(deleted, F.lit(ACTION_DELETE))
+            .otherwise(F.lit(ACTION_UPSERT))
+            .alias("action"),
+            F.struct(*data_cols).alias("after"),
+            "_offset",
+            "_ts_ms",
+        )
+        staged = self._stage(
+            m, actions, name=f"vacuum-{m['version'] + 1}", partitions=m["n_buckets"]
+        )
+        self._commit(m, staged, replaced=range(m["n_buckets"]))
+        return {"vacuumed_below": wm, "files": len(staged["new_files"])}
+
+    def _stage(
+        self,
+        m: dict[str, Any],
+        actions: DataFrame,
+        *,
+        name: str,
+        truncate_below: int | None = None,
+        against: list[dict[str, Any]] | None = None,
+        partitions: int | None = None,
+    ) -> dict[str, Any]:
+        """The copy-on-write stage step of every write: flatten resolved
+        ``actions`` to the physical layout, merge them against the committed
+        files ``against`` (when there are any), and write the result under a
+        fresh ``data/<name>-<uuid>`` dir partitioned by bucket. Nothing is
+        committed; a crash leaves only orphan files.
+
+        A row whose key has a null column gets a null ``_bucket``: it lands in
+        the quarantine partition (``_bucket=__HIVE_DEFAULT_PARTITION__``),
+        which sets ``has_malformed`` and which no manifest references, so
+        null-key rows are never readable, whichever write staged them.
+
+        The write is clustered by ``_bucket``: actions that already carry it
+        (resolver ``bucket_into``) and need no join are written with no
+        exchange; otherwise into ``partitions`` partitions, or as many as
+        AQE coalesces to when None.
+        """
+        key_cols = m["key_cols"]
         payload = self.schema
-        payload_cols = payload.fieldNames()
-
-        # Flatten actions to the physical layout, aligning after.* to current
-        # schema. Columns with a registered DEFAULT backfill upsert rows whose
-        # _offset predates the ADD COLUMN (the DB materializes defaults into
-        # row images the moment the DDL runs, so a pre-add event merging late
-        # gets what the source would have emitted); pre-add nulls mean 'column
-        # did not exist', post-add nulls are explicit and survive.
+        data_cols = [c for c in payload.fieldNames() if c not in key_cols]
+        trunc = max(m.get("truncate_below", 0), truncate_below or 0)
         dflts = m.get("defaults", {})
         after_fields = set(actions.schema["after"].dataType.fieldNames())
 
-        def _payload_col(c: str) -> F.Column:
+        # after.* aligned to the current schema. Columns with a registered
+        # DEFAULT backfill upsert rows whose _offset predates the ADD COLUMN
+        # (the DB materializes defaults into row images the moment the DDL
+        # runs, so a pre-add event merging late gets what the source would
+        # have emitted); pre-add nulls mean 'column did not exist', post-add
+        # nulls are explicit and survive. Deletes carry a null payload (the
+        # resolver nulls it).
+        def payload_col(c: str) -> F.Column:
             dt = payload[c].dataType
             base = (
                 F.col("after").getField(c).cast(dt)
@@ -587,62 +606,32 @@ class LakeTable:
             ).cast(dt)
             return F.coalesce(base, backfill)
 
-        src = actions.select(
+        rows = actions.select(
             *key_cols,
-            F.col("action"),
-            *[
-                _payload_col(c).alias(c)
-                for c in payload_cols
-                if c not in key_cols
-            ],
+            *[payload_col(c).alias(c) for c in data_cols],
             F.col("_offset").cast("long"),
             F.col("_ts_ms").cast("long"),
-        ).withColumn("_bucket", bucket_expr(F.col(key_cols[0]), nb))
-
+            (F.col("action") == ACTION_DELETE).alias("_deleted"),
+            (
+                F.col("_bucket")
+                if "_bucket" in actions.columns
+                else key_bucket(key_cols, m["n_buckets"])
+            ).alias("_bucket"),
+        )
         if trunc > 0:
-            src = src.where(F.col("_offset") >= trunc)
-        if truncating:
-            touched = list(range(nb))  # every bucket rewrites under the watermark
-        elif touched_buckets is not None:
-            touched = list(touched_buckets)
-        else:
-            touched = [r["_bucket"] for r in src.select("_bucket").distinct().collect()]
-        data_cols = [c for c in payload_cols if c not in key_cols]
-        touched_set = set(touched)
-        target_has_files = any(fe["bucket"] in touched_set for fe in m["files"])
-        if not target_has_files:
-            # Initial-load fast path: none of the touched buckets has committed
-            # files, so every resolved action wins by construction — the
-            # full-outer join (a shuffle + build of BOTH sides; full outer can
-            # never broadcast) degenerates to a projection. This is the bulk of
-            # a whole-log replay into a fresh table and of any batch that only
-            # creates new buckets. Deletes keep their tombstone row (_deleted)
-            # exactly as the join path would.
-            is_src_delete = F.col("action") == ACTION_DELETE
-            result = src.select(
-                *key_cols,
-                *data_cols,  # resolver already nulls the payload for deletes
-                F.col("_offset"),
-                F.col("_ts_ms"),
-                is_src_delete.alias("_deleted"),
-                F.col("_bucket"),
-            )
-        else:
-            target = self.read(buckets=touched, include_deleted=True).withColumn(
-                "_bucket", bucket_expr(F.col(key_cols[0]), nb)
-            )
+            rows = rows.where(F.col("_offset") >= trunc)
+        if against:
+            target = self._read_files(against, m, include_deleted=True)
             if trunc > 0:
                 target = target.where(F.col("_offset") >= trunc)
-
-            t = target.alias("t")
             # Hint the per-key-unique source side as the hash-build side: a
             # shuffled-hash full-outer join (Spark 3.1+) skips the two full
             # sorts a SortMergeJoin would run over payload-width rows. Falls
             # back to SMJ automatically where inapplicable.
-            s = src.hint("SHUFFLE_HASH").alias("s")
-            joined = t.join(s, on=list(key_cols), how="full")
-
-            s_present = F.col("s.action").isNotNull()
+            j = target.alias("t").join(
+                rows.hint("SHUFFLE_HASH").alias("s"), on=list(key_cols), how="full"
+            )
+            s_present = F.col("s._offset").isNotNull()
             t_present = F.col("t._offset").isNotNull()
             # Strict '>' keeps re-delivery of the same event a no-op (idempotence)
             # and makes a stale event lose against both live rows and delete
@@ -650,152 +639,71 @@ class LakeTable:
             s_wins = s_present & (
                 ~t_present | (F.col("s._offset") > F.col("t._offset"))
             )
-            take_src = s_wins
-            is_src_delete = F.col("s.action") == ACTION_DELETE
-
-            result = joined.where(take_src | t_present).select(
+            rows = j.where(s_wins | t_present).select(
                 *key_cols,
                 *[
-                    F.when(take_src & is_src_delete, F.lit(None).cast(payload[c].dataType))
-                    .when(take_src, F.col(f"s.{c}"))
-                    .otherwise(F.col(f"t.{c}"))
-                    .alias(c)
-                    for c in data_cols
+                    F.when(s_wins, F.col(f"s.{c}")).otherwise(F.col(f"t.{c}")).alias(c)
+                    for c in (*data_cols, "_offset", "_ts_ms")
                 ],
-                F.when(take_src, F.col("s._offset")).otherwise(F.col("t._offset")).alias("_offset"),
-                F.when(take_src, F.col("s._ts_ms")).otherwise(F.col("t._ts_ms")).alias("_ts_ms"),
-                F.when(take_src, is_src_delete)
+                F.when(s_wins, F.col("s._deleted"))
                 .otherwise(F.coalesce(F.col("t._deleted"), F.lit(False)))
                 .alias("_deleted"),
-                F.when(take_src, F.col("s._bucket")).otherwise(F.col("t._bucket")).alias("_bucket"),
+                key_bucket(key_cols, m["n_buckets"]).alias("_bucket"),
+            )
+        if against or "_bucket" not in actions.columns:
+            rows = (
+                rows.repartition(partitions, "_bucket")
+                if partitions
+                else rows.repartition("_bucket")
             )
 
-        # Write rewritten buckets to a fresh staging area (copy-on-write).
-        # repartition BY COLUMN without a fixed N: partition count comes from
-        # spark.sql.shuffle.partitions and AQE then coalesces by size — a
-        # small incremental trigger writes with a handful of tasks instead of
-        # one tiny task per bucket (touched can be 128+ while carrying a few
-        # thousand rows), while a bulk merge still fans out to the configured
-        # parallelism. partitionBy keeps the one-dir-per-bucket layout either
-        # way, so the manifest/file contract is unchanged.
-        staging = f"{_DATA_DIR}/commit-{batch_id}-{uuid.uuid4().hex[:8]}"
-        abs_staging = os.path.join(self.path, staging)
-        (
-            result.repartition(F.col("_bucket"))
-            .write.partitionBy("_bucket")
-            .mode("overwrite")
-            .parquet(abs_staging)
-        )
-
-        new_files = []
-        sv = m["schema_version"]
-        for bdir in sorted(os.listdir(abs_staging)):
+        rel = f"{_DATA_DIR}/{name}-{uuid.uuid4().hex[:8]}"
+        staging = os.path.join(self.path, rel)
+        rows.write.partitionBy("_bucket").mode("overwrite").parquet(staging)
+        new_files, has_malformed = [], False
+        for bdir in sorted(os.listdir(staging)):
             if not bdir.startswith("_bucket="):
                 continue
-            b = int(bdir.split("=", 1)[1])
-            for fn in sorted(os.listdir(os.path.join(abs_staging, bdir))):
-                if fn.endswith(".parquet"):
-                    new_files.append(
-                        {"path": f"{staging}/{bdir}/{fn}", "bucket": b, "schema_version": sv}
-                    )
-
-        carried = [fe for fe in m["files"] if fe["bucket"] not in set(touched)]
-        new_manifest = dict(m)
-        new_manifest["version"] = m["version"] + 1
-        new_manifest["batch_id"] = batch_id
-        new_manifest["max_offset"] = max(max_offset, m["max_offset"])
-        new_manifest["files"] = carried + new_files
-        new_manifest["truncate_below"] = trunc
-        new_manifest["ts"] = time.time()
-        new_manifest["stats"] = stats or {}
-        self._commit_manifest(new_manifest)
+            b = bdir.split("=", 1)[1]
+            if not b.isdigit():
+                has_malformed = True  # the null-key quarantine partition
+                continue
+            new_files += [
+                {"path": f"{rel}/{bdir}/{fn}", "bucket": int(b),
+                 "schema_version": m["schema_version"]}
+                for fn in sorted(os.listdir(os.path.join(staging, bdir)))
+                if fn.endswith(".parquet")
+            ]
         return {
-            "applied": True,
-            "batch_id": batch_id,
-            "touched_buckets": len(touched),
-            "new_files": len(new_files),
+            "staging": staging,
+            "staging_rel": rel,
+            "new_files": new_files,
+            "has_malformed": has_malformed,
+            "truncate_below": trunc,
         }
 
-    # ------------------------------------------------------------- maintenance
-    def overwrite_full(self, rows: DataFrame, *, batch_id: int, max_offset: int) -> None:
-        """Bulk seed load (initial snapshot fast path): write all buckets at once.
-
-        ``rows``: payload columns + _offset + _ts_ms. Equivalent to merging every row
-        as an upsert into an empty table, minus the join.
-        """
-        m = self.manifest(refresh=True)
-        nb = m["n_buckets"]
-        key0 = self.key_cols[0]
-        staging = f"{_DATA_DIR}/seed-{batch_id}-{uuid.uuid4().hex[:8]}"
-        abs_staging = os.path.join(self.path, staging)
-        (
-            rows.withColumn("_deleted", F.lit(False))
-            .withColumn("_bucket", bucket_expr(F.col(key0), nb))
-            .repartition(nb, "_bucket")
-            .write.partitionBy("_bucket")
-            .mode("overwrite")
-            .parquet(abs_staging)
-        )
-        new_files = []
-        for bdir in sorted(os.listdir(abs_staging)):
-            if not bdir.startswith("_bucket="):
-                continue
-            b = int(bdir.split("=", 1)[1])
-            for fn in sorted(os.listdir(os.path.join(abs_staging, bdir))):
-                if fn.endswith(".parquet"):
-                    new_files.append(
-                        {"path": f"{staging}/{bdir}/{fn}", "bucket": b,
-                         "schema_version": m["schema_version"]}
-                    )
-        nm = dict(m)
-        nm["version"] = m["version"] + 1
-        nm["batch_id"] = batch_id
-        nm["max_offset"] = max(max_offset, m["max_offset"])
-        nm["files"] = new_files
-        nm["ts"] = time.time()
-        self._commit_manifest(nm)
-
-
-    def vacuum(self, *, upto_offset: int | None = None) -> dict[str, Any]:
-        """Purge delete-tombstone rows with _offset <= watermark (full rewrite).
-
-        Safe once every offset at-or-below the watermark is durably applied — the
-        log-compaction retention analogue. Default watermark: committed_max_offset.
-        """
-        m = self.manifest(refresh=True)
-        wm = upto_offset if upto_offset is not None else m["max_offset"]
-        df = self.read(include_deleted=True)
-        kept = df.where(
-            ~F.coalesce(F.col("_deleted"), F.lit(False)) | (F.col("_offset") > wm)
-        )
-        key0 = self.key_cols[0]
-        nb = m["n_buckets"]
-        staging = f"{_DATA_DIR}/vacuum-{m['version'] + 1}-{uuid.uuid4().hex[:8]}"
-        abs_staging = os.path.join(self.path, staging)
-        (
-            kept.withColumn("_bucket", bucket_expr(F.col(key0), nb))
-            .repartition(nb, "_bucket")
-            .write.partitionBy("_bucket")
-            .mode("overwrite")
-            .parquet(abs_staging)
-        )
-        new_files = []
-        for bdir in sorted(os.listdir(abs_staging)):
-            if not bdir.startswith("_bucket="):
-                continue
-            b = int(bdir.split("=", 1)[1])
-            for fn in sorted(os.listdir(os.path.join(abs_staging, bdir))):
-                if fn.endswith(".parquet"):
-                    new_files.append(
-                        {"path": f"{staging}/{bdir}/{fn}", "bucket": b,
-                         "schema_version": m["schema_version"]}
-                    )
-        nm = dict(m)
-        nm["version"] = m["version"] + 1
-        nm["files"] = new_files
-        nm["ts"] = time.time()
-        self._commit_manifest(nm)
-        return {"vacuumed_below": wm, "files": len(new_files)}
+    def _commit(
+        self,
+        m: dict[str, Any],
+        staged: dict[str, Any],
+        *,
+        replaced: Iterable[int],
+        **fields: Any,
+    ) -> None:
+        """The commit step of every write: the next manifest is ``m`` with
+        the files of the ``replaced`` buckets swapped for the staged files,
+        the staged truncate watermark, and ``fields`` (batch_id, max_offset,
+        stats of a data commit) — then one atomic :meth:`_commit_manifest`."""
+        replaced = set(replaced)
+        self._commit_manifest({
+            **m,
+            **fields,
+            "version": m["version"] + 1,
+            "files": [fe for fe in m["files"] if fe["bucket"] not in replaced]
+            + staged["new_files"],
+            "truncate_below": max(m.get("truncate_below", 0), staged["truncate_below"]),
+            "ts": time.time(),
+        })
 
     def changes_between(
         self, from_version: int, to_version: int | None = None

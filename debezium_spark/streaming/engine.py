@@ -37,6 +37,7 @@ from __future__ import annotations
 import json
 import os
 import re
+import shutil
 import time
 from typing import Any, Callable, Sequence
 
@@ -56,7 +57,7 @@ from debezium_spark.config import (
 from debezium_spark.functions import envelope as E
 from debezium_spark.functions import transforms as X
 from debezium_spark.operators import resolver as R
-from debezium_spark.plans.lake import LakeTable
+from debezium_spark.plans.lake import LakeTable, bucket_expr, key_bucket
 from debezium_spark.plans.registry import SchemaHistoryStore, SchemaRegistry
 
 
@@ -1039,13 +1040,6 @@ class CdcEngine:
         ``2 * span (+ chunk rows)`` bounds the live-key count for free and
         lets strategy='auto' skip its probe job on every batch that cannot
         possibly exceed the broadcast budget."""
-        from debezium_spark.plans.lake import bucket_expr
-
-        winner = (
-            self._winner_env(slice_df)
-            if self.config.lww_strategy in ("ordinal", "auto")
-            else None
-        )
         bound = None
         if offset_span is not None:
             chunk_rows = (
@@ -1058,13 +1052,12 @@ class CdcEngine:
         return R.resolve_lww(
             self._envelope(slice_df, upto_offset=upto_offset),
             key_cols=self.config.key_columns,
-            strategy=self.config.lww_strategy,
             bucket_into=(
                 (bucket_into, lambda k: bucket_expr(k, bucket_into))
                 if bucket_into
                 else None
             ),
-            winner_source=winner,
+            winner_source=self._winner_env(slice_df),
             broadcast_key_budget=self.config.lww_broadcast_key_budget,
             live_key_bound=bound,
         )
@@ -1077,29 +1070,20 @@ class CdcEngine:
             null = null | F.col(c).isNull()
         return null
 
-    def _lineage(self, actions: DataFrame, n_buckets: int) -> list:
-        """Per-lake-bucket lineage of resolved actions in ONE aggregation job:
-        max offset, upserts and deletes per bucket. Actions whose key has a
-        null column land in the null ``_bucket`` row (P18,
+    @staticmethod
+    def _lineage(rows: DataFrame, bucket: F.Column, is_delete: F.Column) -> list:
+        """Per-lake-bucket lineage in ONE aggregation job: max offset, upserts
+        and deletes per ``bucket``. Rows whose key has a null column carry a
+        null bucket and land in the null ``_bucket`` row (P18,
         EventDispatcher.java:244-258), so malformed keys are detected without
         a dedicated scan job."""
-        from debezium_spark.plans.lake import bucket_expr
-
-        first_key = F.col(self.config.key_columns[0])
         return (
-            actions.withColumn(
-                "_bucket",
-                F.when(~self._key_null(), bucket_expr(first_key, n_buckets)),
-            )
+            rows.withColumn("_bucket", bucket)
             .groupBy("_bucket")
             .agg(
                 F.max("_offset").alias("max_offset"),
-                F.sum(F.when(F.col("action") == R.ACTION_UPSERT, 1).otherwise(0)).alias(
-                    "rows_applied"
-                ),
-                F.sum(F.when(F.col("action") == R.ACTION_DELETE, 1).otherwise(0)).alias(
-                    "rows_deleted"
-                ),
+                F.sum(F.when(~is_delete, 1).otherwise(0)).alias("rows_applied"),
+                F.sum(F.when(is_delete, 1).otherwise(0)).alias("rows_deleted"),
             )
             .collect()
         )
@@ -1225,7 +1209,11 @@ class CdcEngine:
         try:
             return self._commit_batch(
                 lake,
-                self._lineage(actions, lake.n_buckets),
+                self._lineage(
+                    actions,
+                    key_bucket(self.config.key_columns, lake.n_buckets),
+                    F.col("action") == R.ACTION_DELETE,
+                ),
                 batch_id=batch_id, lo=lo, hi=hi, t0=t0,
                 malformed=lambda: self._prefilter(slice_df).where(self._key_null()),
                 commit=lambda stats, touched: lake.merge(
@@ -1271,19 +1259,10 @@ class CdcEngine:
         # + the _bucket partition value) yields lineage, batch stats, AND the
         # malformed count — the null-bucket partition rows.
         if staged["new_files"] or staged["has_malformed"]:
-            st = self.spark.read.parquet(staged["staging"])
-            lineage_all = (
-                st.groupBy("_bucket")
-                .agg(
-                    F.max("_offset").alias("max_offset"),
-                    F.sum(F.when(~F.col("_deleted"), 1).otherwise(0)).alias(
-                        "rows_applied"
-                    ),
-                    F.sum(F.when(F.col("_deleted"), 1).otherwise(0)).alias(
-                        "rows_deleted"
-                    ),
-                )
-                .collect()
+            lineage_all = self._lineage(
+                self.spark.read.parquet(staged["staging"]),
+                F.col("_bucket"),
+                F.col("_deleted"),
             )
         else:  # empty batch: nothing staged beyond the _SUCCESS marker
             lineage_all = []
@@ -1527,14 +1506,15 @@ class CdcEngine:
         checkpoint: str | Callable[[DataFrame], str],
         max_files_per_trigger: int | None,
         transform=None,
-    ) -> None:
+    ) -> str:
         """Structured Streaming starter shared by the streaming drives: file
         source over the WAL directory (the RAW log schema when a per-table
         projection is set — from_json + filter are streaming-safe column
         algebra applied inside the query), then ``transform``, then
         ``handle(df)`` per epoch via foreachBatch under an availableNow
         trigger, checkpointed in ``<work_dir>/<checkpoint>`` (a callable
-        names it from the source stream, before ``transform``).
+        names it from the source stream, before ``transform``; the name is
+        returned).
 
         An out-of-band pause signal (polled per epoch) or a ``_PauseSignal``
         raised by ``handle`` stops the query cleanly before the epoch commits;
@@ -1581,6 +1561,7 @@ class CdcEngine:
                     raise
 
         self._with_restarts(drive)
+        return checkpoint
 
     def run_streaming(self, *, max_files_per_trigger: int | None = None) -> None:
         """Structured Streaming drive: file-source over the WAL directory,
@@ -1654,10 +1635,12 @@ class CdcEngine:
         query in ``<work_dir>/stateful_ckpt_<layout>``, named after its state
         layout (stateful.state_layout), which follows the payload schema: when
         new DDL, a converter setting or a code change alters the layout, the
-        old checkpoint is left alone and the query re-reads the WAL from
-        scratch, which the lake's offset guard makes converge. A replayed epoch re-emits the same transitions,
-        and the lake merge's strict ``s._offset > t._offset`` guard makes the
-        re-apply a no-op. Re-delivered WAL files lose the all-history ordinal
+        query starts a fresh checkpoint and re-reads the WAL from scratch,
+        which the lake's offset guard makes converge. A drive that returns
+        without a pause deletes the other layouts' ``stateful_ckpt_<layout>``
+        dirs (any other dir in ``work_dir`` is left alone). A replayed epoch
+        re-emits the same transitions, and the lake merge's strict
+        ``s._offset > t._offset`` guard makes the re-apply a no-op. Re-delivered WAL files lose the all-history ordinal
         comparison inside the state store and never reach the merge at all.
         Each trigger commits through the same epilogue as the batch drives
         (failure handling, lineage, metrics, snapshot expiry); the stream
@@ -1692,7 +1675,11 @@ class CdcEngine:
             t0 = time.time()
             df = df.persist()
             try:
-                lineage = self._lineage(df, lake.n_buckets)
+                lineage = self._lineage(
+                    df,
+                    key_bucket(key_cols, lake.n_buckets),
+                    F.col("action") == R.ACTION_DELETE,
+                )
                 if not lineage:
                     return  # trigger resolved no state transitions
                 batch_id = lake.committed_batch_id + 1
@@ -1719,13 +1706,19 @@ class CdcEngine:
             finally:
                 df.unpersist()
 
-        self._run_stream(
+        ckpt = self._run_stream(
             handle,
             lambda s: "stateful_ckpt_"
             + state_layout(self._envelope(s), key_cols=key_cols),
             max_files_per_trigger,
             transform=lambda s: stateful_lww(self._envelope(s), key_cols=key_cols),
         )
+        if not self._pause_requested:
+            # The current layout's checkpoint has read the whole log: the
+            # checkpoints of superseded layouts are dead weight.
+            for d in os.listdir(self.work_dir):
+                if d != ckpt and re.fullmatch(r"stateful_ckpt_[0-9a-f]{12}", d):
+                    shutil.rmtree(os.path.join(self.work_dir, d), ignore_errors=True)
         self._maybe_expire(lake, None)
 
     # ------------------------------------------------------------- inspection

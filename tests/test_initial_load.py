@@ -216,3 +216,50 @@ def test_initial_path_malformed_warn_quarantines(spark, tmp_path):
     assert tbl.where(F.col("path").isNull()).count() == 0
     mets = eng.metrics().where(F.col("malformed_skipped") > 0)
     assert mets.count() == 1
+
+
+@pytest.mark.parametrize("write", ["merge_empty", "merge_join", "staged"])
+def test_null_key_is_quarantined_on_every_write(spark, tmp_path, write):
+    """A row whose key has a null column goes to the quarantine partition
+    whichever write stages it — a merge into an empty table, a merge whose
+    touched bucket holds files (the join), or stage_initial+commit_staged:
+    it is never readable, and merging the same action again adds no row."""
+    lake = LakeTable.create(
+        spark,
+        str(tmp_path / "t"),
+        spark.createDataFrame([], "repo string, path string, a string").schema,
+        n_buckets=4,
+    )
+
+    def actions(rows):
+        return spark.createDataFrame(
+            rows,
+            "repo string, path string, action string, after struct<a:string>, "
+            "_offset bigint, _ts_ms bigint",
+        )
+
+    batch = actions([("r", "p1", "upsert", ("v1",), 10, 10),
+                     (None, "p2", "upsert", ("v2",), 11, 11)])
+    want = [("r", "p1")]
+    if write == "merge_join":
+        lake.merge(actions([("r", "p0", "upsert", ("v0",), 1, 1)]),
+                   batch_id=0, max_offset=1)
+        want = [("r", "p0"), ("r", "p1")]
+    if write == "staged":
+        staged = lake.stage_initial(batch, batch_id=1)
+        assert staged["has_malformed"]
+        lake.commit_staged(staged, batch_id=1, max_offset=11)
+    else:
+        lake.merge(batch, batch_id=1, max_offset=11)
+
+    def rows():
+        return sorted(
+            (r["repo"], r["path"], r["_offset"])
+            for r in lake.read(include_deleted=True).collect()
+        )
+
+    assert sorted((r["repo"], r["path"]) for r in lake.read().collect()) == want
+    before = rows()
+    assert all(repo is not None for repo, _, _ in before)
+    lake.merge(batch, batch_id=2, max_offset=11)
+    assert rows() == before

@@ -123,11 +123,14 @@ def test_lake_rename_chain_reads_old_files(spark, tmpdir_path):
         spark, os.path.join(tmpdir_path, "lt"), schema, key_cols=("repo", "path"),
         n_buckets=2,
     )
-    rows = spark.createDataFrame(
-        [("r", "p1", "v1", 1, 1), ("r", "p2", "v2", 2, 2)],
-        "repo string, path string, a string, _offset bigint, _ts_ms bigint",
+    actions = spark.createDataFrame(
+        [("r", "p1", "upsert", ("v1",), 1, 1), ("r", "p2", "upsert", ("v2",), 2, 2)],
+        "repo string, path string, action string, after struct<a:string>, "
+        "_offset bigint, _ts_ms bigint",
     )
-    lake.overwrite_full(rows, batch_id=0, max_offset=2)
+    lake.commit_staged(
+        lake.stage_initial(actions, batch_id=0), batch_id=0, max_offset=2
+    )
     lake.rename_column("a", "b")
     got = {r["path"]: r["b"] for r in lake.read().collect()}
     assert got == {"p1": "v1", "p2": "v2"}

@@ -143,7 +143,8 @@ def test_stateful_sink_resumes_across_drop_column(spark, tmpdir_path):
     """A DROP COLUMN entering the schema history between two drives narrows
     the payload the state store holds; the second drive must not try to
     resume the first one's state (Spark refuses a changed state schema) but
-    start a fresh checkpoint and still land the oracle state."""
+    start a fresh checkpoint, still land the oracle state, and sweep the
+    superseded checkpoint."""
     spec = W.WalSpec(n_keys=150, n_events=800, seed=47)
     src = os.path.join(tmpdir_path, "wal_src")
     W.write_wal(spark, spec, src, n_files=4)
@@ -180,11 +181,13 @@ def test_stateful_sink_resumes_across_drop_column(spark, tmpdir_path):
         eng.run_streaming_stateful(max_files_per_trigger=2)
         return eng
 
+    first = glob.glob(os.path.join(es.work_dir, "stateful_ckpt_*"))
     es2 = resume()
     assert "lang" not in es2.target().schema.fieldNames()
     assert _got(es2) == _want(spark, src)
+    # only the new layout's checkpoint remains: the superseded one is swept
     ckpts = sorted(glob.glob(os.path.join(es.work_dir, "stateful_ckpt_*")))
-    assert len(ckpts) == 2
+    assert len(first) == 1 and len(ckpts) == 1 and ckpts != first
 
     # an unchanged layout resumes its own checkpoint: nothing new commits
     committed = es2.target().committed_batch_id
