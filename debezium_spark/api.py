@@ -42,7 +42,8 @@ Pieces mirrored 1:1 (reference file:line cited on each):
 
 Spark-first honesty: the *plan* — capture filters, SMT chain, envelope wrap,
 JSON/CloudEvents serialization — is the engine's usual distributed column
-algebra (``CdcEngine.envelope_stream`` + ``serde.serialize_records``); only
+algebra (``CdcEngine.envelope_stream``'s plan over one WAL read per run +
+``serde.serialize_records``); only
 the final hand-off to the consumer crosses to the driver, one Arrow partition
 at a time via ``toLocalIterator`` (never a whole-frame ``collect``). That
 driver hand-off IS the embedded-engine contract — the reference pumps every
@@ -61,7 +62,7 @@ import time
 from dataclasses import dataclass
 from typing import Any, Callable, Iterator
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from debezium_spark.config import EngineConfig
@@ -453,8 +454,13 @@ class DebeziumEngine:
             out_col, P.frame_confluent_protobuf(F.col(out_col), sid)
         )
 
-    def _record_stream(self, lo: int, hi: int) -> Iterator[ChangeEvent]:
-        env = self._cdc.envelope_stream(lo, hi)
+    def _record_stream(
+        self, wal: DataFrame, lo: int, hi: int
+    ) -> Iterator[ChangeEvent]:
+        env = self._cdc._envelope(
+            wal.where((F.col("offset") > lo) & (F.col("offset") <= hi)),
+            upto_offset=hi,
+        )
         if self._fmt is CloudEvents:
             # key serialization matches the Json path; value is the CE
             # envelope — one projection, the key rides along via `keep`
@@ -505,8 +511,8 @@ class DebeziumEngine:
                 getattr(cb, hook)()
         committer = RecordCommitter(self)
         try:
-            self._cdc._resolve_message_key()
-            wal = self._cdc._wal()
+            wal = self._cdc._wal()  # one read per run
+            self._cdc._resolve_message_key(wal.schema)
             bounds = wal.agg(
                 F.min("offset").alias("lo"), F.max("offset").alias("hi")
             ).collect()[0]
@@ -515,7 +521,7 @@ class DebeziumEngine:
                 step = self._cdc.config.max_offsets_per_batch
                 while lo < bounds["hi"] and not self._stop.is_set():
                     hi = lo + step
-                    batch = list(self._record_stream(lo, hi))
+                    batch = list(self._record_stream(wal, lo, hi))
                     if batch:
                         try:
                             self._consumer.handle_batch(batch, committer)

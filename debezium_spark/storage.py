@@ -44,6 +44,19 @@ _LOG = logging.getLogger(__name__)
 
 from debezium_spark.plans.registry import SchemaChange, SchemaHistoryStore
 
+
+def atomic_write(path: str, text: str) -> None:
+    """Replace ``path``'s content with ``text`` in one step: write a temp file,
+    fsync it and ``os.replace`` it over ``path``. A crash or a failed write
+    leaves the old content whole."""
+    tmp = path + ".tmp"
+    with open(tmp, "w") as f:
+        f.write(text)
+        f.flush()
+        os.fsync(f.fileno())
+    os.replace(tmp, path)
+
+
 # ------------------------------------------------------------ offset stores
 
 
@@ -71,12 +84,7 @@ class FileOffsetBackingStore(OffsetBackingStore):
             return json.load(f)
 
     def save(self, state: dict[str, Any]) -> None:
-        tmp = self.path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(state, f)
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(tmp, self.path)
+        atomic_write(self.path, json.dumps(state))
 
 
 _MEMORY_OFFSETS: dict[str, dict[str, Any]] = {}

@@ -27,9 +27,15 @@ Three drive modes over one micro-batch core:
     foreachBatch + checkpointLocation (the production shape);
   * run_streaming_stateful(): the same stream through a per-key LWW state store,
     merging only the keys whose winner changed.
-run() and run_streaming() slice batches through ``_step`` and drain pending
-snapshot chunks through ``_drain_snapshot``; the two streaming drives share the
-stream starter ``_run_stream``; every drive commits through ``_commit_batch``.
+Each drive reads the WAL once, at its start (``_read_wal``: the raw log through
+the optional ``wal_projection``), and hands that frame down. run() and every
+run_streaming() epoch drive their offset range through one range loop
+(``_run_range``: pause poll, empty-gap jump, in-band signal split) into
+``_step``, and drain pending snapshot chunks through ``_drain_snapshot``; the
+two streaming drives share the stream starter ``_run_stream``; the incremental
+batch and the stateful trigger merge through ``_merge_actions``, schema changes
+reach the lake through ``_apply_ddl``, and every drive commits through
+``_commit_batch``.
 """
 
 from __future__ import annotations
@@ -59,6 +65,7 @@ from debezium_spark.functions import transforms as X
 from debezium_spark.operators import resolver as R
 from debezium_spark.plans.lake import LakeTable, bucket_expr, key_bucket
 from debezium_spark.plans.registry import SchemaHistoryStore, SchemaRegistry
+from debezium_spark.storage import atomic_write
 
 
 def data_collections_match(
@@ -100,22 +107,18 @@ class CdcEngine:
         work_dir: str,
         schema_changes: DataFrame | None = None,
         snapshot_source: str | None = None,
-        wal_loader=None,
         wal_projection=None,
         history_store=None,
     ):
         self.spark = spark
         self.config = config
         self.wal_path = wal_path
-        # optional WAL source override (Callable[[], DataFrame]) — lets a
-        # dispatcher (MultiTableEngine) feed a typed per-table projection of a
-        # heterogeneous log instead of a raw parquet directory
-        self._wal_loader = wal_loader
-        # streaming twin of wal_loader: a PURE projection
-        # (Callable[[DataFrame], DataFrame], no actions, no batch reads)
-        # applied to the raw WAL file stream so run_streaming can drive the
-        # same per-table shape Structured-Streaming-side
-        self._wal_projection = wal_projection
+        # The WAL as this engine sees it: a PURE projection
+        # (Callable[[DataFrame], DataFrame], no actions, no reads) of the raw
+        # log, applied to the batch read and to the streaming file source
+        # alike — a dispatcher (MultiTableEngine) feeds a typed per-table
+        # shape of a heterogeneous log through it. Default: the raw log.
+        self._wal_projection = wal_projection or (lambda df: df)
         self.target_path = target_path
         self.work_dir = work_dir
         # parquet path of the captured table's current state — what an
@@ -144,7 +147,7 @@ class CdcEngine:
         self._snapshot_mode_resolved: str | None = None
         self._msg_key_resolved = False
 
-    def _resolve_message_key(self) -> None:
+    def _resolve_message_key(self, wal_schema: T.StructType) -> None:
         """message.key.columns -> effective key_columns, resolved ONCE against
         the captured table id and the WAL payload columns
         (relational/Key.java:92-148 via transforms.resolve_message_key). The
@@ -157,7 +160,7 @@ class CdcEngine:
             return
         import dataclasses
 
-        cols = [f.name for f in self._wal().schema["after"].dataType.fields]
+        cols = [f.name for f in wal_schema["after"].dataType.fields]
         resolved = X.resolve_message_key(
             cfg.message_key_columns,
             f"{cfg.database}.{cfg.table_name}",
@@ -168,14 +171,18 @@ class CdcEngine:
         self._msg_key_resolved = True
 
     # ------------------------------------------------------------------ setup
-    def _wal(self) -> DataFrame:
-        if self._wal_loader is not None:
-            return self._wal_loader()
-        return self.spark.read.parquet(self.wal_path)
+    def _read_wal(self) -> tuple[DataFrame, DataFrame]:
+        """The raw WAL and its ``wal_projection``: one parquet read (one footer
+        job). Each drive reads once, at its start (a restart reads again)."""
+        raw = self.spark.read.parquet(self.wal_path)
+        return raw, self._wal_projection(raw)
 
-    def _base_payload_schema(self, wal: DataFrame) -> T.StructType:
+    def _wal(self) -> DataFrame:
+        return self._read_wal()[1]
+
+    def _base_payload_schema(self, wal_schema: T.StructType) -> T.StructType:
         """v1 payload schema = WAL payload minus columns introduced by later DDL."""
-        full = wal.schema["after"].dataType
+        full = wal_schema["after"].dataType
         added = set()
         for c in self.registry().changes:
             kind, *args = c.table_changes.split(":")
@@ -200,13 +207,19 @@ class CdcEngine:
         return self._registry
 
     def target(self) -> LakeTable:
+        if LakeTable.exists(self.target_path):
+            return LakeTable(self.spark, self.target_path)
+        return self._open_lake(self._wal().schema)
+
+    def _open_lake(self, wal_schema: T.StructType) -> LakeTable:
+        """Resolve the message key against ``wal_schema``, then open the
+        target lake, created from ``wal_schema`` if it does not exist yet."""
+        self._resolve_message_key(wal_schema)
         if not LakeTable.exists(self.target_path):
-            wal = self._wal()
-            base = self._base_payload_schema(wal)
             LakeTable.create(
                 self.spark,
                 self.target_path,
-                base,
+                self._base_payload_schema(wal_schema),
                 key_cols=self.config.key_columns,
                 n_buckets=self.config.target_buckets,
             )
@@ -251,14 +264,14 @@ class CdcEngine:
             ):
                 return out
         t = sig.get("type")
+        # every action but pause leaves an operator-visible marker in the
+        # metrics stream (Log.java's whole purpose)
+        mark: dict[str, Any] | None = {"signal": t}
         if t == "log":
-            # Log.java — operator-visible marker in the metrics stream.
-            self._append_jsonl(
-                self._metrics_path,
-                [{"signal": "log", "message": sig.get("message", "")}],
-            )
+            mark["message"] = sig.get("message", "")
         elif t == "pause":
             out["pause"] = True
+            mark = None
         elif t == "execute-snapshot":
             # ExecuteSnapshot.java:34 — start a chunked ad-hoc snapshot;
             # durable state => consumed exactly once across restarts and
@@ -287,11 +300,9 @@ class CdcEngine:
                     "source_offset": int(sig.get("source_offset", default_off)),
                 }
             )
-            self._append_jsonl(self._metrics_path, [{"signal": "execute-snapshot"}])
         elif t == "stop-snapshot":
             # StopSnapshot.java — cancel the in-flight ad-hoc snapshot.
             self._save_incr_state({"active": False, "position": 0, "chunk_size": 0})
-            self._append_jsonl(self._metrics_path, [{"signal": "stop-snapshot"}])
         elif t == "pause-snapshot":
             # PauseIncrementalSnapshot.java — durably pause the in-flight
             # chunked snapshot AT its current chunk position; the stream keeps
@@ -300,14 +311,12 @@ class CdcEngine:
             st = self._incr_state()
             if st.get("active"):
                 self._save_incr_state({**st, "paused": True})
-            self._append_jsonl(self._metrics_path, [{"signal": "pause-snapshot"}])
         elif t == "resume-snapshot":
             # ResumeIncrementalSnapshot.java — resume chunk emission exactly
             # where pause-snapshot left it.
             st = self._incr_state()
             if st.get("active"):
                 self._save_incr_state({**st, "paused": False})
-            self._append_jsonl(self._metrics_path, [{"signal": "resume-snapshot"}])
         elif t == "schema-changes":
             # SchemaChanges.java — ad-hoc schema-change injection: apply the
             # payload's TableChanges to the registry + durable history as if
@@ -326,11 +335,11 @@ class CdcEngine:
                     # recover it from history (replay() dedups by version, so
                     # the later batch-crossing record is a no-op)
                     self.history.record(change)
-            self._append_jsonl(
-                self._metrics_path,
-                [{"signal": "schema-changes",
-                  "message": f"{len(sig.get('changes', []))} change(s) injected"}],
-            )
+            mark["message"] = f"{len(sig.get('changes', []))} change(s) injected"
+        else:
+            mark = None
+        if mark is not None:
+            self._append_jsonl(self._metrics_path, [mark])
         return out
 
     def _poll_signals(self) -> dict[str, Any]:
@@ -353,8 +362,7 @@ class CdcEngine:
         for line in lines[consumed:]:
             res = self._apply_signal_action(json.loads(line))
             out["pause"] = out["pause"] or res["pause"]
-        with open(self._signal_state_path, "w") as f:
-            f.write(str(len(lines)))
+        atomic_write(self._signal_state_path, str(len(lines)))
         return out
 
     # --------------------------------------------------- in-band signal channel
@@ -365,12 +373,7 @@ class CdcEngine:
         return -1
 
     def _save_inband_marker(self, off: int) -> None:
-        tmp = self._inband_state_path + ".tmp"
-        with open(tmp, "w") as f:
-            f.write(str(int(off)))
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(tmp, self._inband_state_path)
+        atomic_write(self._inband_state_path, str(int(off)))
 
     def _inband_signals_in(
         self, wal: DataFrame, lo: int, hi: int
@@ -384,21 +387,11 @@ class CdcEngine:
         2-column scan."""
         if "op" not in wal.columns:
             return []
-        after_fields = (
-            set(wal.schema["after"].dataType.fieldNames())
-            if "after" in wal.columns
-            else set()
-        )
-        if "_signal_data" in wal.columns:
-            # Multi-table loader shape: the dispatcher routes every op='s'
-            # row to every per-table engine with the raw signal JSON lifted
-            # into ``_signal_data`` (the per-table payload schema can't carry
-            # it — Signal.java's signal table has its own schema).
-            data_col = F.col("_signal_data")
-        elif "content" in after_fields:
-            data_col = F.col("after").getField("content")
-        else:
-            data_col = F.lit(None).cast("string")
+        # Multi-table shape: the dispatcher routes every op='s' row to every
+        # per-table engine with the raw signal JSON lifted into
+        # ``_signal_data`` (the per-table payload schema can't carry it —
+        # Signal.java's signal table has its own schema).
+        data_col = self._content_col(wal, "_signal_data")
         rows = (
             wal.where(
                 (F.col("op") == "s")
@@ -425,6 +418,16 @@ class CdcEngine:
                 d["type"] = r["sig_type"]
             out.append((int(r["offset"]), d))
         return out
+
+    @staticmethod
+    def _content_col(df: DataFrame, column: str) -> F.Column:
+        """``column`` if ``df`` has it, else the payload's ``after.content``,
+        else null: where a control row (signal, message) keeps its text."""
+        if column in df.columns:
+            return F.col(column)
+        if "after" in df.columns and "content" in df.schema["after"].dataType.names:
+            return F.col("after").getField("content")
+        return F.lit(None).cast("string")
 
     # ------------------------------------------------- programmatic signal API
     def execute_snapshot(
@@ -474,12 +477,7 @@ class CdcEngine:
         return {"active": False, "position": 0, "chunk_size": 0}
 
     def _save_incr_state(self, st: dict[str, Any]) -> None:
-        tmp = self._incr_state_path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(st, f)
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(tmp, self._incr_state_path)
+        atomic_write(self._incr_state_path, json.dumps(st))
 
     def _ensure_chunk_plan(self, st: dict[str, Any]) -> dict[str, Any]:
         """Compute per-chunk key bounds ONCE per execute-snapshot and persist
@@ -514,13 +512,10 @@ class CdcEngine:
                 bounds = [
                     {"chunk": c, "hi": by_chunk[c]} for c in range(n_chunks)
                 ]
-                tmp = self._incr_bounds_path + ".tmp"
-                with open(tmp, "w") as f:
-                    for b in bounds:
-                        f.write(json.dumps(b) + "\n")
-                    f.flush()
-                    os.fsync(f.fileno())
-                os.replace(tmp, self._incr_bounds_path)
+                atomic_write(
+                    self._incr_bounds_path,
+                    "".join(json.dumps(b) + "\n" for b in bounds),
+                )
                 self._bounds_cache = bounds
             else:
                 # big plan: bounds NEVER materialize on the driver — land them
@@ -570,8 +565,7 @@ class CdcEngine:
             lo_key = by_chunk[lo_chunk - 1] if lo_chunk > 0 else None
             return window, lo_key
         if self._bounds_cache is None:
-            with open(self._incr_bounds_path) as f:
-                self._bounds_cache = [json.loads(x) for x in f if x.strip()]
+            self._bounds_cache = self._read_jsonl(self._incr_bounds_path)
         window = self._bounds_cache[lo_chunk:hi_chunk]
         lo_key = self._bounds_cache[lo_chunk - 1]["hi"] if lo_chunk > 0 else None
         return window, lo_key
@@ -805,21 +799,10 @@ class CdcEngine:
             prefix = (
                 F.col("msg_prefix") if "msg_prefix" in cols else F.col("repo")
             )
-            after_fields = (
-                set(slice_df.schema["after"].dataType.fieldNames())
-                if "after" in cols
-                else set()
-            )
-            if "msg_content" in cols:
-                content = F.col("msg_content")
-            elif "content" in after_fields:
-                content = F.col("after").getField("content")
-            else:
-                content = F.lit(None).cast("string")
             msgs = E.wrap_messages(
                 m,
                 prefix=prefix,
-                content=content,
+                content=self._content_col(slice_df, "msg_content"),
                 offset=F.col("offset"),
                 ts_ms=F.col("ts_ms").cast("long") if "ts_ms" in cols else None,
                 prefix_include=cfg.message_prefix_include,
@@ -1186,71 +1169,30 @@ class CdcEngine:
         truncate_below: int | None = None,
     ) -> dict[str, Any]:
         t0 = time.time()
-        reg = self.registry()
-        for change in reg.pending_upto(hi):
-            reg.apply_to_lake(lake, change)      # Iceberg-DDL analogue, idempotent
-            if change.table_changes != "create":
-                # The base CREATE is implicit in the registry's base schema;
-                # durable history (B5) records only lake-mutating deltas.
-                self.history.record(change)
-        if not lake.manifest(refresh=True)["files"]:
-            # Empty target (initial snapshot / whole-log replay / post-truncate):
-            # one pipeline execution, bucket-clustered end-to-end.
-            return self._apply_initial_batch(
-                lake, slice_df, batch_id=batch_id, lo=lo, hi=hi,
-                truncate_below=truncate_below, t0=t0,
-            )
-        # The resolved actions feed the lineage aggregation and the merge join;
-        # persist so the WAL-scan -> envelope -> LWW pipeline runs once, not
-        # twice. The lineage also yields the merge's touched buckets.
-        actions = self._transform(
-            slice_df, upto_offset=hi, offset_span=max(hi - lo, 0)
-        ).persist()
-        try:
-            return self._commit_batch(
-                lake,
-                self._lineage(
-                    actions,
-                    key_bucket(self.config.key_columns, lake.n_buckets),
-                    F.col("action") == R.ACTION_DELETE,
-                ),
-                batch_id=batch_id, lo=lo, hi=hi, t0=t0,
-                malformed=lambda: self._prefilter(slice_df).where(self._key_null()),
-                commit=lambda stats, touched: lake.merge(
-                    actions.where(~self._key_null()),
-                    batch_id=batch_id, max_offset=hi, stats=stats,
-                    touched_buckets=touched, truncate_below=truncate_below,
-                ),
-            )
-        finally:
-            actions.unpersist()
+        self._apply_ddl(lake, hi)
+        span = max(hi - lo, 0)
 
-    def _apply_initial_batch(
-        self,
-        lake: LakeTable,
-        slice_df: DataFrame,
-        *,
-        batch_id: int,
-        lo: int,
-        hi: int,
-        truncate_below: int | None,
-        t0: float,
-    ) -> dict[str, Any]:
-        """Empty-target batch: transform -> stage (one job) -> lineage from a
-        narrow scan of the staged files -> commit epilogue.
+        def malformed() -> DataFrame:
+            return self._prefilter(slice_df).where(self._key_null())
 
-        vs the generic path this runs ONE pipeline execution with ONE payload
-        shuffle (resolver ``bucket_into``), no persist/columnar cache, no
-        merge join — the per-event cost that dominates a 10^10-event replay.
-        """
-        actions = self._transform(
-            slice_df,
-            upto_offset=hi,
-            bucket_into=lake.n_buckets,
-            offset_span=max(hi - lo, 0),
-        )
+        if lake.manifest(refresh=True)["files"]:
+            return self._merge_actions(
+                lake, self._transform(slice_df, upto_offset=hi, offset_span=span),
+                batch_id=batch_id, lo=lo, hi=hi, t0=t0, malformed=malformed,
+                truncate_below=truncate_below,
+            )
+        # Empty target (initial snapshot / whole-log replay / post-truncate):
+        # transform -> stage (one job) -> lineage from a narrow scan of the
+        # staged files -> commit epilogue. vs the merge path this runs ONE
+        # pipeline execution with ONE payload shuffle (resolver
+        # ``bucket_into``), bucket-clustered end-to-end, no persist/columnar
+        # cache, no merge join — the per-event cost that dominates a
+        # 10^10-event replay.
         staged = lake.stage_initial(
-            actions, batch_id=batch_id, truncate_below=truncate_below
+            self._transform(
+                slice_df, upto_offset=hi, bucket_into=lake.n_buckets, offset_span=span
+            ),
+            batch_id=batch_id, truncate_below=truncate_below,
         )
         if staged is None:  # replayed batch (batch_id already committed)
             return {"applied": False, "batch_id": batch_id,
@@ -1268,11 +1210,65 @@ class CdcEngine:
             lineage_all = []
         return self._commit_batch(
             lake, lineage_all, batch_id=batch_id, lo=lo, hi=hi, t0=t0,
-            malformed=lambda: self._prefilter(slice_df).where(self._key_null()),
+            malformed=malformed,
             commit=lambda stats, _touched: lake.commit_staged(
                 staged, batch_id=batch_id, max_offset=hi, stats=stats
             ),
         )
+
+    def _apply_ddl(self, lake: LakeTable, upto: int) -> None:
+        """Apply the schema changes at offsets <= ``upto`` not yet in the lake
+        (Iceberg-DDL analogue, idempotent) and record them in the history."""
+        reg = self.registry()
+        for change in reg.pending_upto(upto):
+            reg.apply_to_lake(lake, change)
+            if change.table_changes != "create":
+                # The base CREATE is implicit in the registry's base schema;
+                # durable history (B5) records only lake-mutating deltas.
+                self.history.record(change)
+
+    def _merge_actions(
+        self, lake: LakeTable, actions: DataFrame, *, batch_id: int,
+        lo: int | None, hi: int | None, t0: float,
+        malformed: Callable[[], DataFrame] | None = None, truncate_below=None,
+    ) -> dict[str, Any] | None:
+        """Merge step of the incremental batch and the stateful trigger:
+        resolved ``actions`` -> per-bucket lineage -> :meth:`_commit_batch`
+        with ``lake.merge``. Persisted, so the pipeline behind the actions
+        runs once for the lineage (which yields the touched buckets) and the
+        merge join. ``hi=None``: the batch ends at its highest offset, and no
+        actions commit nothing (returns None). ``malformed()``: the rows
+        quarantined under failure_handling='warn' (default: the actions'
+        null-key rows)."""
+        actions = actions.persist()
+        try:
+            lineage = self._lineage(
+                actions,
+                key_bucket(self.config.key_columns, lake.n_buckets),
+                F.col("action") == R.ACTION_DELETE,
+            )
+            if hi is None:
+                if not lineage:
+                    return None
+                hi = max(int(r["max_offset"]) for r in lineage)
+            return self._commit_batch(
+                lake, lineage, batch_id=batch_id, lo=lo, hi=hi, t0=t0,
+                malformed=malformed or (lambda: actions.where(self._key_null())),
+                commit=lambda stats, touched: lake.merge(
+                    actions.where(~self._key_null()),
+                    batch_id=batch_id, max_offset=hi, stats=stats,
+                    touched_buckets=touched, truncate_below=truncate_below,
+                ),
+            )
+        finally:
+            actions.unpersist()
+
+    @staticmethod
+    def _read_jsonl(path: str) -> list[dict]:
+        if not os.path.exists(path):
+            return []
+        with open(path) as f:
+            return [json.loads(x) for x in f if x.strip()]
 
     @staticmethod
     def _append_jsonl(path: str, rows: list[dict]) -> None:
@@ -1369,11 +1365,13 @@ class CdcEngine:
         self,
         lake: LakeTable,
         results: list[dict[str, Any]],
+        wal_schema: T.StructType,
         max_batches: int | None = None,
     ) -> None:
         """The log is exhausted but an in-flight ad-hoc snapshot may still
-        have chunk windows left: emit chunk-only batches until it completes,
-        a pause signal arrives or ``results`` reaches ``max_batches``."""
+        have chunk windows left: emit chunk-only batches (WAL-shaped rows of
+        ``wal_schema``) until it completes, a pause signal arrives or
+        ``results`` reaches ``max_batches``."""
         lo = lake.committed_max_offset
         while (
             self._incr_state()["active"]
@@ -1381,7 +1379,7 @@ class CdcEngine:
             and (max_batches is None or len(results) < max_batches)
             and not self._poll_signals()["pause"]
         ):
-            chunks = self._snapshot_chunk_rows(self._wal().schema, lo)
+            chunks = self._snapshot_chunk_rows(wal_schema, lo)
             if chunks is None:
                 break
             results.append(
@@ -1411,8 +1409,8 @@ class CdcEngine:
     def _run_batches(
         self, results: list[dict[str, Any]], max_batches: int | None
     ) -> None:
-        self._resolve_message_key()
-        lake = self.target()
+        wal = self._wal()
+        lake = self._open_lake(wal.schema)
         if self.config.snapshot_mode == SNAPSHOT_SCHEMA_ONLY_RECOVERY:
             # History store was lost/corrupted: re-record every already-crossed
             # schema delta from the schema-change source before streaming
@@ -1424,7 +1422,6 @@ class CdcEngine:
                     and c.table_changes != "create"
                 ):
                     self.history.record(c)
-        wal = self._wal()
         bounds = wal.agg(
             F.max("offset").alias("hi"), self._truncate_offsets(wal)
         ).first()
@@ -1442,36 +1439,54 @@ class CdcEngine:
                 for off, sig in self._inband_signals_in(wal, marker, lo):
                     self._apply_signal_action(sig, at_offset=off)
                     self._save_inband_marker(off)
-        pause = False
-        while lo < wal_hi and (max_batches is None or len(results) < max_batches):
+        # Never past the last offset read: the committed max_offset is the
+        # resume point, so a batch ending beyond the log's end would skip
+        # events appended to the WAL after this run.
+        paused = self._run_range(
+            lake, wal, lo, wal_hi, bounds["truncates"], results,
+            step=self.config.max_offsets_per_batch, max_batches=max_batches,
+        )
+        if not paused:  # P17 pause signal; resume = call run() again
+            self._drain_snapshot(lake, results, wal.schema, max_batches)
+        self._maybe_expire(lake, None)  # bound storage before returning
+
+    def _run_range(
+        self, lake: LakeTable, src: DataFrame, lo: int, hi_all: int,
+        truncates: Sequence[int], results: list[dict[str, Any]], *,
+        step: int | None = None, max_batches: int | None = None,
+    ) -> bool:
+        """Range loop of run() and of each run_streaming epoch: offsets
+        (lo, hi_all] of ``src`` through :meth:`_step`, one result per batch
+        appended to ``results`` (at most ``max_batches``). Per batch: the
+        out-of-band pause poll; after an empty batch of a ``step``-limited
+        loop, a jump over the offset gap; the end ``lo + step`` (else
+        ``hi_all``) pulled back to the first in-band signal above the marker,
+        so the batch ends AT it (Signal.java: signals are totally ordered with
+        the data); the step. Returns True when a signal paused the drive."""
+        pending: list[tuple[int, dict[str, Any]]] = []
+        if self.config.signal_data_collection:
+            marker = self._inband_marker()
+            pending = [
+                s for s in self._inband_signals_in(src, lo, hi_all) if s[0] > marker
+            ]
+        while lo < hi_all and (max_batches is None or len(results) < max_batches):
             if self._poll_signals()["pause"]:
-                pause = True  # P17 pause signal; resume = call run() again
-                break
-            if results and results[-1]["rows_applied"] + results[-1]["rows_deleted"] == 0:
-                # The last batch was empty: jump the offset gap at once rather
-                # than commit one empty batch per max_offsets_per_batch step.
-                nxt = wal.where(F.col("offset") > lo).agg(F.min("offset")).first()[0]
+                return True
+            last = results[-1] if results else None
+            if step and last and last["rows_applied"] + last["rows_deleted"] == 0:
+                nxt = src.where(F.col("offset") > lo).agg(F.min("offset")).first()[0]
                 if nxt is not None:
-                    lo = max(lo, min(int(nxt), wal_hi) - 1)
-            # Never past the last offset read: the committed max_offset is the
-            # resume point, so a batch ending beyond the log's end would skip
-            # events appended to the WAL after this run.
-            hi = min(lo + self.config.max_offsets_per_batch, wal_hi)
-            sig = None
-            if self.config.signal_data_collection:
-                sigs = self._inband_signals_in(wal, lo, hi)
-                if sigs:
-                    # Exact-offset semantics (Signal.java — signals are totally
-                    # ordered with data): the batch ends AT the first signal.
-                    hi, sig = sigs[0][0], sigs[0]
-            res, pause = self._step(lake, wal, lo, hi, sig, bounds["truncates"])
+                    lo = max(lo, min(int(nxt), hi_all) - 1)
+            hi = min(lo + step, hi_all) if step else hi_all
+            sig = pending.pop(0) if pending and pending[0][0] <= hi else None
+            if sig is not None:
+                hi = sig[0]
+            res, pause = self._step(lake, src, lo, hi, sig, truncates)
             results.append(res)
             lo = hi
             if pause:
-                break
-        if not pause:
-            self._drain_snapshot(lake, results, max_batches)
-        self._maybe_expire(lake, None)  # bound storage before returning
+                return True
+        return False
 
     def _maybe_expire(self, lake: LakeTable, n: int | None) -> None:
         """Bounded-storage maintenance inside the drive loops: expire lake
@@ -1505,12 +1520,13 @@ class CdcEngine:
         handle,
         checkpoint: str | Callable[[DataFrame], str],
         max_files_per_trigger: int | None,
+        raw_schema: T.StructType,
         transform=None,
     ) -> str:
         """Structured Streaming starter shared by the streaming drives: file
-        source over the WAL directory (the RAW log schema when a per-table
-        projection is set — from_json + filter are streaming-safe column
-        algebra applied inside the query), then ``transform``, then
+        source over the WAL directory with the raw log's ``raw_schema``,
+        then ``wal_projection`` (streaming-safe column algebra applied inside
+        the query), then ``transform``, then
         ``handle(df)`` per epoch via foreachBatch under an availableNow
         trigger, checkpointed in ``<work_dir>/<checkpoint>`` (a callable
         names it from the source stream, before ``transform``; the name is
@@ -1525,14 +1541,10 @@ class CdcEngine:
         as a StreamingQueryException whose message embeds the Python
         traceback, so custom_retriable_exception patterns match that text
         (use '.*pattern.*'-style regexes)."""
-        projection = self._wal_projection
-        raw = self.spark.read.parquet(self.wal_path) if projection else self._wal()
-        reader = self.spark.readStream.schema(raw.schema)
+        reader = self.spark.readStream.schema(raw_schema)
         if max_files_per_trigger:
             reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-        stream = reader.parquet(self.wal_path)
-        if projection is not None:
-            stream = projection(stream)
+        stream = self._wal_projection(reader.parquet(self.wal_path))
         if callable(checkpoint):
             checkpoint = checkpoint(stream)
         if transform is not None:
@@ -1570,8 +1582,8 @@ class CdcEngine:
         analogue). WAL segments are written in offset order
         (sources/wal.write_wal), matching binlog segment ordering.
         """
-        self._resolve_message_key()
-        lake = self.target()
+        raw, wal = self._read_wal()
+        lake = self._open_lake(wal.schema)
 
         def handle(df: DataFrame) -> None:
             # No offset pre-filter: the file source may deliver segments in any
@@ -1585,32 +1597,18 @@ class CdcEngine:
             ).first()
             if rng["hi"] is None:
                 return
-            lo, hi_all = int(rng["lo"]) - 1, int(rng["hi"])
-            # In-band signals in THIS epoch, same exact-offset rule as run():
-            # the sub-batch ends AT the signal's offset, commits, then the
-            # action applies. Scope caveat mirrors the file source itself —
-            # signals order exactly within the epoch; a signal in a
-            # late-delivered low-offset segment applies when that segment's
-            # epoch arrives (the durable marker dedups epoch replays).
-            pending: list[tuple[int, dict[str, Any]]] = []
-            if self.config.signal_data_collection:
-                marker = self._inband_marker()
-                pending = [
-                    (o, s)
-                    for o, s in self._inband_signals_in(df, lo, hi_all)
-                    if o > marker
-                ]
-            while lo < hi_all or pending:
-                sig = pending.pop(0) if pending else None
-                hi = sig[0] if sig is not None else hi_all
-                if self._step(lake, df, lo, hi, sig, rng["truncates"])[1]:
-                    self._pause_requested = True
-                    raise _PauseSignal()
-                lo = hi
+            # In-band signals order exactly within the epoch, as in run(). A
+            # signal in a late-delivered low-offset segment applies when that
+            # segment's epoch arrives (the durable marker dedups replays).
+            if self._run_range(
+                lake, df, int(rng["lo"]) - 1, int(rng["hi"]), rng["truncates"], []
+            ):
+                self._pause_requested = True
+                raise _PauseSignal()
 
-        self._run_stream(handle, "stream_ckpt", max_files_per_trigger)
+        self._run_stream(handle, "stream_ckpt", max_files_per_trigger, raw.schema)
         if not self._pause_requested:
-            self._drain_snapshot(lake, [])
+            self._drain_snapshot(lake, [], wal.schema)
         self._maybe_expire(lake, None)
 
     def run_streaming_stateful(
@@ -1655,7 +1653,6 @@ class CdcEngine:
         """
         from debezium_spark.streaming.stateful import state_layout, stateful_lww
 
-        self._resolve_message_key()
         cfg = self.config
         if cfg.provide_transaction_metadata:
             raise ValueError(
@@ -1663,54 +1660,24 @@ class CdcEngine:
                 "streaming mode (unbounded per-tx ranking window); use run() "
                 "or run_streaming()"
             )
-        lake = self.target()
-        reg = self.registry()
-        for change in reg.pending_upto(2**62):  # fixed final schema up-front
-            reg.apply_to_lake(lake, change)
-            if change.table_changes != "create":
-                self.history.record(change)
-        key_cols = cfg.key_columns
+        raw, wal = self._read_wal()
+        lake = self._open_lake(wal.schema)
+        self._apply_ddl(lake, 2**62)  # fixed final schema up-front
+        key_cols = self.config.key_columns
 
         def handle(df: DataFrame) -> None:
-            t0 = time.time()
-            df = df.persist()
-            try:
-                lineage = self._lineage(
-                    df,
-                    key_bucket(key_cols, lake.n_buckets),
-                    F.col("action") == R.ACTION_DELETE,
-                )
-                if not lineage:
-                    return  # trigger resolved no state transitions
-                batch_id = lake.committed_batch_id + 1
-                hi = max(int(r["max_offset"]) for r in lineage)
-                payload = [
-                    c for c in df.columns
-                    if c not in (*key_cols, "action", "_offset", "_ts_ms")
-                ]
-                self._commit_batch(
-                    lake, lineage, batch_id=batch_id, lo=None, hi=hi, t0=t0,
-                    malformed=lambda: df.where(self._key_null()),
-                    commit=lambda stats, touched: lake.merge(
-                        df.where(~self._key_null()).select(
-                            *key_cols,
-                            "action",
-                            F.struct(*payload).alias("after"),
-                            "_offset",
-                            "_ts_ms",
-                        ),
-                        batch_id=batch_id, max_offset=hi, stats=stats,
-                        touched_buckets=touched,
-                    ),
-                )
-            finally:
-                df.unpersist()
+            # a trigger that resolved no state transition commits nothing
+            self._merge_actions(
+                lake, df, batch_id=lake.committed_batch_id + 1, lo=None, hi=None,
+                t0=time.time(),
+            )
 
         ckpt = self._run_stream(
             handle,
             lambda s: "stateful_ckpt_"
             + state_layout(self._envelope(s), key_cols=key_cols),
             max_files_per_trigger,
+            raw.schema,
             transform=lambda s: stateful_lww(self._envelope(s), key_cols=key_cols),
         )
         if not self._pause_requested:
@@ -1727,11 +1694,7 @@ class CdcEngine:
             "batch_id bigint, partition_id int, max_offset bigint, "
             "rows_applied bigint, rows_deleted bigint, wall_ms bigint"
         )
-        rows = []
-        if os.path.exists(self._ckpt_path):
-            with open(self._ckpt_path) as f:
-                rows = [json.loads(x) for x in f if x.strip()]
-        return self.spark.createDataFrame(rows, schema)
+        return self.spark.createDataFrame(self._read_jsonl(self._ckpt_path), schema)
 
     def metrics(self) -> DataFrame:
         schema = (
@@ -1740,12 +1703,7 @@ class CdcEngine:
             "malformed_skipped bigint, signal string, message string"
         )
         keys = [f.strip().split(" ")[0] for f in schema.split(",")]
-        rows = []
-        if os.path.exists(self._metrics_path):
-            with open(self._metrics_path) as f:
-                rows = [
-                    {k: json.loads(x).get(k) for k in keys} for x in f if x.strip()
-                ]
+        rows = [{k: r.get(k) for k in keys} for r in self._read_jsonl(self._metrics_path)]
         return self.spark.createDataFrame(rows, schema)
 
     def meters(self, *, per_op_counts: bool = False) -> dict[str, Any]:
@@ -1772,10 +1730,7 @@ class CdcEngine:
         RowsScanned = per-source incremental-snapshot chunk rows
         (SnapshotMeter.rowsScanned); SnapshotAborted = a stop-snapshot signal
         was consumed (StopSnapshot.java)."""
-        raw: list[dict] = []
-        if os.path.exists(self._metrics_path):
-            with open(self._metrics_path) as f:
-                raw = [json.loads(x) for x in f if x.strip()]
+        raw = self._read_jsonl(self._metrics_path)
         batches = [r for r in raw if r.get("hi") is not None]
         chunks = [r for r in raw if "incremental_chunk" in r]
         malformed = sum(int(r.get("malformed_skipped") or 0) for r in raw)

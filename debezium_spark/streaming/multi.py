@@ -12,7 +12,9 @@ table's topic (EventDispatcher.java:189-196). Spark-first, the same shape is a
     (:class:`TableSpec` — the Tables registry analogue);
   * per table, the dispatcher projects the log (filter on ``table``, from_json
     with that table's schema, key columns lifted top-level) and runs a full
-    :class:`CdcEngine` pipeline into that table's own lake target.
+    :class:`CdcEngine` pipeline into that table's own lake target. The
+    projection is the engine's ``wal_projection``: pure column algebra the
+    engine applies to its one WAL read per drive and to its file stream.
 
 Scale notes: the per-table filter is pushed to the parquet scan (min/max
 pruning on ``table`` when the WAL is written table-clustered). The per-table
@@ -22,7 +24,8 @@ table up to ``_MAX_WORKERS``: each pipeline is a chain of small Spark jobs,
 and overlapping N chains keeps the task slots busy where one chain at a time
 leaves them idle between jobs. Each worker inherits the caller thread's Spark
 local properties (job group, description, tags). Offsets stay globally
-ordered, so each pipeline's resume watermark is per-table and exact.
+ordered, so each pipeline's resume watermark is per-table and exact; the
+per-table offset map is replaced atomically and fsync'd after each drive.
 """
 
 from __future__ import annotations
@@ -38,6 +41,7 @@ from pyspark.sql import functions as F
 from pyspark.util import inheritable_thread_target
 
 from debezium_spark.config import EngineConfig
+from debezium_spark.storage import atomic_write
 from debezium_spark.streaming.engine import CdcEngine
 
 # Cap on concurrently driven per-table pipelines. Not the core count: a
@@ -101,7 +105,6 @@ class MultiTableEngine:
                 work_dir=os.path.join(work_root, name),
                 schema_changes=spec.schema_changes,
                 snapshot_source=spec.snapshot_source,
-                wal_loader=self._loader(name, spec),
                 wal_projection=self._projection(name, spec),
             )
 
@@ -115,8 +118,8 @@ class MultiTableEngine:
 
     def _projection(self, name: str, spec: TableSpec):
         """Pure column-algebra projection raw-WAL -> this table's typed shape
-        (no actions, no reads — streaming-safe, shared by the batch loader
-        and run_streaming's file stream).
+        (no actions, no reads — streaming-safe): the engine's
+        ``wal_projection``, applied to its batch read and its file stream.
 
         Signal rows (op='s') are routed to EVERY per-table engine — the
         reference's signal table is one captured collection whose events
@@ -156,14 +159,6 @@ class MultiTableEngine:
             )
 
         return project
-
-    def _loader(self, name: str, spec: TableSpec):
-        project = self._projection(name, spec)
-
-        def load() -> DataFrame:
-            return project(self.spark.read.parquet(self.wal_path))
-
-        return load
 
     def run(self, **kw) -> dict[str, list[dict[str, Any]]]:
         """Replay every captured table's pipeline, concurrently (see
@@ -258,11 +253,8 @@ class MultiTableEngine:
         return po
 
     def _persist_offsets(self, po) -> None:
-        tmp = self._offsets_path + ".tmp"
         os.makedirs(self.work_root, exist_ok=True)
-        with open(tmp, "w") as f:
-            f.write(po.to_json())
-        os.replace(tmp, self._offsets_path)  # atomic, same rule as the manifest
+        atomic_write(self._offsets_path, po.to_json())
 
     # ------------------------------------------- multi-table snapshot signals
     def _matching(self, data_collections) -> list[str]:

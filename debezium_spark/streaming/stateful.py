@@ -36,8 +36,9 @@ def stateful_lww(
 
     Input: a (streaming or batch) envelope frame ``(key, value, offset[, seq])``
     (envelope.wrap_wal schema). Output: one row per key whose winner CHANGED in
-    the trigger — ``key_cols*, action ('upsert'|'delete'), <non-key payload
-    cols>, _offset, _ts_ms``, directly mergeable by LakeTable.merge; a stale
+    the trigger — ``key_cols*, action ('upsert'|'delete'), after (non-key
+    payload struct), _offset, _ts_ms``, the resolver's action shape, directly
+    mergeable by LakeTable.merge; a stale
     re-delivery (lower or equal ordinal) emits nothing, the dedup rule S8
     applied against all history. The ordinal is the batch resolver's
     (resolver.lww_rank), so both modes resolve identically. A deleted key's
@@ -49,13 +50,16 @@ def stateful_lww(
     the payload schema (``state_layout``).
     """
     now = F.current_timestamp()
+    after = [F.col("_w").getField(c).alias(c) for c in _data_names(env, key_cols)]
     return (
         _ranked(env, key_cols)
         .groupBy(*key_cols)
         .agg(F.max_by("_w", "_r").alias("_w"))
         .where(F.col("_w._seen") == now)
-        .select(*key_cols, "_w.*")
-        .drop("_seen")
+        .select(
+            *key_cols, "_w.action", F.struct(*after).alias("after"),
+            "_w._offset", "_w._ts_ms",
+        )
     )
 
 
@@ -72,8 +76,7 @@ def state_layout(env: DataFrame, *, key_cols: tuple[str, ...]) -> str:
 def _ranked(env: DataFrame, key_cols: tuple[str, ...]) -> DataFrame:
     """Envelope -> (key_cols*, _w winner-row struct, _r rank struct): the
     input of stateful_lww's aggregation."""
-    payload_t = env.schema["value"].dataType["after"].dataType
-    data_names = [f.name for f in payload_t.fields if f.name not in key_cols]
+    data_names = _data_names(env, key_cols)
     val = F.col("value")
     ordinal, is_del = lww_rank(env)
     now = F.current_timestamp()
@@ -101,3 +104,9 @@ def _ranked(env: DataFrame, key_cols: tuple[str, ...]) -> DataFrame:
         winner.alias("_w"),
         rank.alias("_r"),
     )
+
+
+def _data_names(env: DataFrame, key_cols: tuple[str, ...]) -> list[str]:
+    """The envelope payload's non-key columns, in payload order."""
+    payload_t = env.schema["value"].dataType["after"].dataType
+    return [f.name for f in payload_t.fields if f.name not in key_cols]

@@ -1,6 +1,6 @@
 """Initial-load fast path: bucket-clustered LWW + staged commit.
 
-Covers the empty-target batch path (engine._apply_initial_batch /
+Covers the empty-target fork of the engine's batch apply (_apply_batch /
 LakeTable.stage_initial+commit_staged) added for the whole-log replay:
 one pipeline execution, one payload shuffle, lineage from the staged files.
 Reference semantics unchanged: RelationalSnapshotChangeEventSource bulk

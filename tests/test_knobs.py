@@ -232,5 +232,5 @@ def test_engine_resolves_message_key_columns(spark, tmpdir_path):
         spark, tmpdir_path, wal_dir, spec,
         EngineConfig(message_key_columns="other\\.table:commit"), "mk2",
     )
-    fallback._resolve_message_key()
+    fallback._resolve_message_key(fallback._wal().schema)
     assert fallback.config.key_columns == ("repo", "path")

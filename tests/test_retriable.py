@@ -37,21 +37,23 @@ def _oracle_hashes(spark, wal_dir):
     return oracle.state_hashes(oracle.reduce_wal(wal_pd))
 
 
-def _flaky_loader(spark, wal_dir, *, fail_on_call: int, exc: Exception):
-    """WAL loader that raises ``exc`` on exactly one call, then heals —
-    the transient-outage shape ErrorHandler classifies as retriable."""
+def _flaky_projection(exc: Exception):
+    """WAL projection that raises ``exc`` on its first call, then heals —
+    the transient-outage shape ErrorHandler classifies as retriable. A drive
+    applies it once, to the WAL read at its start, so ``calls["n"]`` counts
+    the drive's attempts."""
     calls = {"n": 0}
 
-    def load():
+    def project(wal):
         calls["n"] += 1
-        if calls["n"] == fail_on_call:
+        if calls["n"] == 1:
             raise exc
-        return spark.read.parquet(wal_dir)
+        return wal
 
-    return load, calls
+    return project, calls
 
 
-def _engine(spark, wal_dir, d, loader=None, **cfg):
+def _engine(spark, wal_dir, d, projection=None, **cfg):
     cfg.setdefault("max_offsets_per_batch", 200)
     cfg.setdefault("retriable_restart_wait_ms", 0)
     return CdcEngine(
@@ -60,7 +62,7 @@ def _engine(spark, wal_dir, d, loader=None, **cfg):
         wal_path=wal_dir,
         target_path=f"{d}/target",
         work_dir=f"{d}/work",
-        wal_loader=loader,
+        wal_projection=projection,
     )
 
 
@@ -76,16 +78,15 @@ def _restart_lines(eng):
 def test_custom_retriable_pattern_restarts_and_state_matches(
     spark, wal_dir, tmpdir_path
 ):
-    loader, calls = _flaky_loader(
-        spark, wal_dir, fail_on_call=2,
-        exc=RuntimeError("simulated source outage: connection reset"),
+    projection, calls = _flaky_projection(
+        RuntimeError("simulated source outage: connection reset"),
     )
     eng = _engine(
-        spark, wal_dir, tmpdir_path, loader,
+        spark, wal_dir, tmpdir_path, projection,
         custom_retriable_exception=".*source outage.*",
     )
     eng.run()
-    assert calls["n"] > 2  # it failed once and came back
+    assert calls["n"] == 2  # it failed once and came back
     restarts = _restart_lines(eng)
     assert len(restarts) == 1 and "source outage" in restarts[0]["error"]
     lake = LakeTable(spark, f"{tmpdir_path}/target")
@@ -96,11 +97,10 @@ def test_custom_retriable_pattern_restarts_and_state_matches(
 
 
 def test_oserror_is_base_retriable(spark, wal_dir, tmpdir_path):
-    loader, _ = _flaky_loader(
-        spark, wal_dir, fail_on_call=2, exc=OSError("storage blip"),
-    )
-    eng = _engine(spark, wal_dir, tmpdir_path, loader)
+    projection, calls = _flaky_projection(OSError("storage blip"))
+    eng = _engine(spark, wal_dir, tmpdir_path, projection)
     eng.run()
+    assert calls["n"] == 2
     assert len(_restart_lines(eng)) == 1
     lake = LakeTable(spark, f"{tmpdir_path}/target")
     got = oracle.target_hashes(
@@ -119,33 +119,31 @@ def test_wrapped_cause_is_classified_through_the_chain(
     except OSError as root:
         wrapped = RuntimeError("pipeline stage failed")
         wrapped.__cause__ = root
-    loader, _ = _flaky_loader(spark, wal_dir, fail_on_call=2, exc=wrapped)
-    eng = _engine(spark, wal_dir, tmpdir_path, loader)
+    projection, calls = _flaky_projection(wrapped)
+    eng = _engine(spark, wal_dir, tmpdir_path, projection)
     eng.run()
+    assert calls["n"] == 2
     assert len(_restart_lines(eng)) == 1
 
 
 def test_non_retriable_propagates_immediately(spark, wal_dir, tmpdir_path):
-    loader, calls = _flaky_loader(
-        spark, wal_dir, fail_on_call=2, exc=RuntimeError("schema mismatch"),
-    )
+    projection, calls = _flaky_projection(RuntimeError("schema mismatch"))
     eng = _engine(
-        spark, wal_dir, tmpdir_path, loader,
+        spark, wal_dir, tmpdir_path, projection,
         custom_retriable_exception=".*source outage.*",  # does not match
     )
     with pytest.raises(RuntimeError, match="schema mismatch"):
         eng.run()
-    assert calls["n"] == 2  # no second attempt
+    assert calls["n"] == 1  # no second attempt
     assert _restart_lines(eng) == []
 
 
 def test_errors_max_retries_bounds_restarts(spark, wal_dir, tmpdir_path):
-    loader, _ = _flaky_loader(
-        spark, wal_dir, fail_on_call=2, exc=OSError("storage blip"),
-    )
-    eng = _engine(spark, wal_dir, tmpdir_path, loader, errors_max_retries=0)
+    projection, calls = _flaky_projection(OSError("storage blip"))
+    eng = _engine(spark, wal_dir, tmpdir_path, projection, errors_max_retries=0)
     with pytest.raises(OSError, match="storage blip"):
         eng.run()
+    assert calls["n"] == 1
     assert _restart_lines(eng) == []
 
 

@@ -11,6 +11,7 @@ import json
 import os
 
 import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
 from debezium_spark import CdcEngine, EngineConfig
@@ -351,3 +352,61 @@ def test_streaming_drains_chunks_after_wal_exhausted(spark, tmpdir_path):
         eng.target().read().select("repo", "path", "content").toPandas()
     )
     assert got == exp
+
+
+def test_failed_consumed_count_write_reapplies_no_consumed_signal(
+    spark, tmpdir_path, monkeypatch
+):
+    """The out-of-band channel's consumed count is replaced atomically: a
+    write that fails after its file is opened leaves the old count whole, so
+    the next poll re-applies no signal an earlier poll consumed (only the one
+    whose consumption never became durable)."""
+    import builtins
+
+    sig_path = os.path.join(tmpdir_path, "signals.jsonl")
+    eng = CdcEngine(
+        spark, EngineConfig(signal_path=sig_path),
+        wal_path=os.path.join(tmpdir_path, "wal"),
+        target_path=os.path.join(tmpdir_path, "t"),
+        work_dir=os.path.join(tmpdir_path, "w"),
+    )
+
+    def emit(message):
+        with open(sig_path, "a") as f:
+            f.write(json.dumps({"type": "log", "message": message}) + "\n")
+
+    emit("a")
+    eng._poll_signals()
+    emit("b")
+    real_open = builtins.open
+
+    class FailingWrite:
+        def __init__(self, f):
+            self._f = f
+
+        def __enter__(self):
+            return self
+
+        def __exit__(self, *exc):
+            self._f.close()
+
+        def write(self, _):
+            raise OSError("disk full")
+
+        def __getattr__(self, name):
+            return getattr(self._f, name)
+
+    def open_(path, mode="r", *a, **kw):
+        f = real_open(path, mode, *a, **kw)
+        if "w" in mode and os.path.basename(str(path)).startswith("_signals_consumed"):
+            return FailingWrite(f)
+        return f
+
+    monkeypatch.setattr(builtins, "open", open_)
+    with pytest.raises(OSError, match="disk full"):
+        eng._poll_signals()
+    monkeypatch.undo()
+    eng._poll_signals()
+    with open(eng._metrics_path) as f:
+        logged = [r["message"] for r in map(json.loads, f) if r.get("signal") == "log"]
+    assert logged == ["a", "b", "b"]

@@ -70,9 +70,9 @@ def test_streaming_state_matches_batch_resolver(spark, wal_dir, tmpdir_path):
         assert g["_offset"] == e["_offset"], k
         if e["action"] == R.ACTION_UPSERT:
             for f in ("commit", "lang", "content"):
-                assert g[f] == e["after"][f], (k, f)
+                assert g["after"][f] == e["after"][f], (k, f)
         else:
-            assert g["commit"] is None and g["content"] is None
+            assert g["after"]["commit"] is None and g["after"]["content"] is None
 
     # changelog emits at most one transition per (key, micro-batch), and
     # per-key ordinals are strictly increasing (stale deliveries absorbed)
