@@ -255,7 +255,13 @@ def wrap_wal(
     # Semantics identical: delete keys come from before; otherwise after when
     # the after image exists (even if its field is null — same as selecting
     # the after struct), else before; top-level repo/path as the last resort.
+    # A key column the payload does not carry (a multi-table frame's table
+    # column) is the top-level column itself.
+    payload_names = set(wal.schema["after"].dataType.names)
+
     def _key_field(c: str) -> Column:
+        if c not in payload_names:
+            return F.col(c)
         b, a = F.col("before").getField(c), F.col("after").getField(c)
         src = F.when(F.col("op") == OP_DELETE, b).otherwise(
             F.when(F.col("after").isNotNull(), a).otherwise(b)

@@ -76,8 +76,11 @@ def split_pk_changes(
     #      attribute, so the array is aliased before the explode.
     # Result: the LWW winner aggregation (key+ordinal only) reads just the
     # key/op/offset columns — not `content` — from the WAL (PLANS.md §CDC).
+    # A key column the payload does not carry (a multi-table frame's table
+    # column) is the same in both images: it is read from the key.
+    in_payload = [c for c in key_cols if c in payload_t.names]
     slim = {"_op": v.getField("op")}
-    for c in key_cols:
+    for c in in_payload:
         slim[f"_bk_{c}"] = v.getField("before").getField(c)
         slim[f"_ak_{c}"] = v.getField("after").getField(c)
     extra0 = [c for c in env.columns if c not in ("key", "value", "offset")]
@@ -85,11 +88,18 @@ def split_pk_changes(
         "offset", *extra0, "key", "value",
         *[e.alias(n) for n, e in slim.items()],
     )
-    before_key = F.struct(*[F.col(f"_bk_{c}").alias(c) for c in key_cols])
-    after_key = F.struct(*[F.col(f"_ak_{c}").alias(c) for c in key_cols])
+
+    def image_key(side: str) -> Column:
+        return F.struct(*[
+            (F.col(f"{side}{c}") if c in in_payload else F.col("key").getField(c))
+            .alias(c)
+            for c in key_cols
+        ])
+
+    before_key, after_key = image_key("_bk_"), image_key("_ak_")
     bk_some = F.lit(False)
     ak_some = F.lit(False)
-    for c in key_cols:
+    for c in in_payload:
         bk_some = bk_some | F.col(f"_bk_{c}").isNotNull()
         ak_some = ak_some | F.col(f"_ak_{c}").isNotNull()
     # op=='u' already implies the value is present; an image participates in a

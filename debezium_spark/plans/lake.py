@@ -38,9 +38,11 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import time
 import uuid
 from typing import Any, Iterable
+from urllib.parse import unquote
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -90,8 +92,6 @@ class LakeTable:
         if os.path.exists(os.path.join(path, _CURRENT)):
             if not overwrite:
                 raise FileExistsError(f"table exists at {path}")
-            import shutil
-
             shutil.rmtree(path)
         os.makedirs(os.path.join(path, _MANIFEST_DIR), exist_ok=True)
         os.makedirs(os.path.join(path, _DATA_DIR), exist_ok=True)
@@ -405,6 +405,7 @@ class LakeTable:
         *,
         batch_id: int,
         truncate_below: int | None = None,
+        by: str | None = None,
     ) -> dict[str, Any] | None:
         """Stage a batch into an EMPTY table (no committed files): write only.
 
@@ -425,6 +426,13 @@ class LakeTable:
         Returns {"staging", "staging_rel", "new_files", "has_malformed",
         "truncate_below"}, or None if ``batch_id`` was already committed
         (replay skip).
+
+        ``by``: a column of ``actions`` naming each row's table, for several
+        empty tables laid out like this one (schema, key columns, buckets,
+        defaults, truncate watermark). All their rows go out in ONE write
+        partitioned by (``by``, bucket); :meth:`split_staged` then hands each
+        table its part. Returns {"staging", "tables" (table -> its partition
+        dir), "truncate_below"} then.
         """
         m = self.manifest(refresh=True)
         if batch_id <= m["batch_id"]:
@@ -433,8 +441,28 @@ class LakeTable:
             raise ValueError("stage_initial requires an empty table; use merge()")
         return self._stage(
             m, actions, name=f"commit-{batch_id}", truncate_below=truncate_below,
-            partitions=m["n_buckets"],
+            partitions=m["n_buckets"], by=by,
         )
+
+    def split_staged(
+        self, staged: dict[str, Any], tables: dict[str, tuple["LakeTable", int]]
+    ) -> dict[str, dict[str, Any]]:
+        """Parts of a ``by`` staging (:meth:`stage_initial`) -> one staged
+        dict per table of ``tables`` ({name: (lake, batch_id)}), each part
+        moved under its table's ``data/`` dir and ready for that table's
+        :meth:`commit_staged`. A table with no rows gets an empty part."""
+        root, trunc = staged["staging"], staged["truncate_below"]
+        out = {
+            name: {"new_files": [], "has_malformed": False, "truncate_below": trunc}
+            for name in tables
+        }
+        for name, d in staged["tables"].items():
+            lake, batch_id = tables[name]
+            rel = f"{_DATA_DIR}/commit-{batch_id}-{uuid.uuid4().hex[:8]}"
+            shutil.move(os.path.join(root, d), os.path.join(lake.path, rel))
+            out[name] = lake._staged(lake.manifest(), rel, trunc)
+        shutil.rmtree(root, ignore_errors=True)
+        return out
 
     def commit_staged(
         self,
@@ -507,11 +535,12 @@ class LakeTable:
         # spark.sql.shuffle.partitions and AQE then coalesces it by size — a
         # small incremental trigger writes with a handful of tasks instead of
         # one tiny task per bucket (touched can be 128+ while carrying a few
-        # thousand rows), while a bulk merge still fans out.
+        # thousand rows), while a bulk merge still fans out. No touched
+        # bucket: nothing to write, the batch commits its offset alone.
         staged = self._stage(
             m, actions, name=f"commit-{batch_id}", truncate_below=trunc,
             against=[fe for fe in m["files"] if fe["bucket"] in touched],
-        )
+        ) if touched else {"new_files": [], "truncate_below": trunc}
         self._commit(m, staged, replaced=touched, batch_id=batch_id,
                      max_offset=max(max_offset, m["max_offset"]), stats=stats or {})
         return {
@@ -558,6 +587,7 @@ class LakeTable:
         truncate_below: int | None = None,
         against: list[dict[str, Any]] | None = None,
         partitions: int | None = None,
+        by: str | None = None,
     ) -> dict[str, Any]:
         """The copy-on-write stage step of every write: flatten resolved
         ``actions`` to the physical layout, merge them against the committed
@@ -573,7 +603,8 @@ class LakeTable:
         The write is clustered by ``_bucket``: actions that already carry it
         (resolver ``bucket_into``) and need no join are written with no
         exchange; otherwise into ``partitions`` partitions, or as many as
-        AQE coalesces to when None.
+        AQE coalesces to when None. ``by``: a table column kept as the outer
+        partition level (:meth:`stage_initial`).
         """
         key_cols = m["key_cols"]
         payload = self.schema
@@ -617,6 +648,7 @@ class LakeTable:
                 if "_bucket" in actions.columns
                 else key_bucket(key_cols, m["n_buckets"])
             ).alias("_bucket"),
+            *([by] if by else []),
         )
         if trunc > 0:
             rows = rows.where(F.col("_offset") >= trunc)
@@ -659,7 +691,22 @@ class LakeTable:
 
         rel = f"{_DATA_DIR}/{name}-{uuid.uuid4().hex[:8]}"
         staging = os.path.join(self.path, rel)
-        rows.write.partitionBy("_bucket").mode("overwrite").parquet(staging)
+        rows.write.partitionBy(*([by] if by else []), "_bucket").mode(
+            "overwrite"
+        ).parquet(staging)
+        if by:
+            tables = {
+                unquote(d.split("=", 1)[1]): d
+                for d in os.listdir(staging) if d.startswith(by + "=")
+            }
+            return {"staging": staging, "tables": tables, "truncate_below": trunc}
+        return self._staged(m, rel, trunc)
+
+    def _staged(self, m: dict[str, Any], rel: str, trunc: int) -> dict[str, Any]:
+        """The staged dict of the bucket partitions under ``rel``: its data
+        files as manifest entries, and whether the null-key quarantine
+        partition is among them."""
+        staging = os.path.join(self.path, rel)
         new_files, has_malformed = [], False
         for bdir in sorted(os.listdir(staging)):
             if not bdir.startswith("_bucket="):

@@ -35,7 +35,10 @@ run_streaming() epoch drive their offset range through one range loop
 two streaming drives share the stream starter ``_run_stream``; the incremental
 batch and the stateful trigger merge through ``_merge_actions``, schema changes
 reach the lake through ``_apply_ddl``, and every drive commits through
-``_commit_batch``.
+``_commit_batch``. The core takes a list of *members*, each one lake with its
+engine: a plain engine is the one-member case, and a multi-table dispatcher
+drives the tables of one payload shape as the members of one ``run()``
+(``_run_group``) over a frame whose ``TABLE`` column names each row's table.
 """
 
 from __future__ import annotations
@@ -45,7 +48,8 @@ import os
 import re
 import shutil
 import time
-from typing import Any, Callable, Sequence
+from dataclasses import dataclass, field
+from typing import Any, Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -66,6 +70,12 @@ from debezium_spark.operators import resolver as R
 from debezium_spark.plans.lake import LakeTable, bucket_expr, key_bucket
 from debezium_spark.plans.registry import SchemaHistoryStore, SchemaRegistry
 from debezium_spark.storage import atomic_write
+
+# The column naming each row's captured table in a multi-table frame (one LWW
+# pipeline for the lakes of several tables, MultiTableEngine): it keys the
+# LWW after the table's own key columns and routes every resolved row to its
+# table's lake. A single-table frame has no such column.
+TABLE = "_table"
 
 
 def data_collections_match(
@@ -227,15 +237,40 @@ class CdcEngine:
 
     # ------------------------------------------------------------- control ops
     def _truncate_offsets(self, df: DataFrame) -> F.Column:
-        """Aggregate column ``truncates``: the TRUNCATE ('t') offsets in
-        ``df``. Each drive folds it into the bounds aggregation it already
-        runs, so the offsets always describe the log as read now, not as it
-        was when the engine first looked."""
+        """Aggregate column ``truncates``: (offset, table) of each TRUNCATE
+        ('t') row in ``df``, the table null in a single-table frame. Each
+        drive folds it into the bounds aggregation it already runs, so the
+        offsets always describe the log as read now, not as it was when the
+        engine first looked."""
         if not self.config.handle_truncate or "op" not in df.columns:
-            return F.array().cast("array<bigint>").alias("truncates")
+            return (
+                F.array().cast("array<struct<offset:bigint,table:string>>")
+                .alias("truncates")
+            )
+        table = F.col(TABLE) if TABLE in df.columns else F.lit(None).cast("string")
         return F.collect_list(
-            F.when(F.col("op") == "t", F.col("offset"))
+            F.when(
+                F.col("op") == "t",
+                F.struct(F.col("offset").alias("offset"), table.alias("table")),
+            )
         ).alias("truncates")
+
+    def _bounds(self, wal: DataFrame, names: list[str] = ()) -> dict[str, Any]:
+        """The bounds pass of a drive: ``hi`` (the highest offset),
+        ``truncates`` and, of a multi-table frame, ``ends``: for each table
+        of ``names`` the highest offset of its own rows and the signal rows,
+        where its drive ends. One aggregation."""
+        own = [] if TABLE not in wal.columns else [
+            F.max(F.when((F.col(TABLE) == n) | (F.col("op") == "s"), F.col("offset")))
+            .alias(f"_end{i}")
+            for i, n in enumerate(names)
+        ]
+        row = wal.agg(F.max("offset").alias("hi"), self._truncate_offsets(wal), *own).first()
+        return {
+            "hi": row["hi"],
+            "truncates": row["truncates"],
+            "ends": {n: row[f"_end{i}"] for i, n in enumerate(names) if own},
+        }
 
     def _apply_signal_action(
         self, sig: dict[str, Any], *, at_offset: int | None = None
@@ -685,6 +720,10 @@ class CdcEngine:
             F.lit(0).cast("long").alias("tx_id"),
             F.lit(self.registry().version_at_offset(src_off)).alias("schema_version"),
             F.lit(True).alias("_adhoc"),
+            *(
+                [F.lit(cfg.table_name).alias(TABLE)]
+                if TABLE in wal_schema.names else []
+            ),
         )
         return rows
 
@@ -864,9 +903,10 @@ class CdcEngine:
         # the per-key max_by((offset,seq)) reduce is invariant to them, so the LWW
         # phase subsumes dedup-by-offset (S8) without its full-width shuffle.
         # dedup_by_offset stays available for consumers of raw envelope streams.
+        key_cols = self._keys(slice_df)
         env = E.wrap_wal(
             df,
-            key_cols=cfg.key_columns,
+            key_cols=key_cols,
             connector=cfg.connector,
             server_name=cfg.server_name,
             db=cfg.database,
@@ -895,7 +935,7 @@ class CdcEngine:
             # unaffected — the delete itself still resolves to ACTION_DELETE.
             env = env.where(F.col("value").isNotNull())
         env = X.op_skip_filter(env, cfg.skipped_operations)
-        env = R.split_pk_changes(env, cfg.key_columns)
+        env = R.split_pk_changes(env, key_cols)
         chain = list(cfg.custom_converters)
         if (
             cfg.decimal_handling_mode
@@ -944,6 +984,13 @@ class CdcEngine:
             env = R.transaction_metadata(env)
         return env
 
+    def _keys(self, df: DataFrame) -> tuple[str, ...]:
+        """The LWW key of ``df``'s rows: the table's key columns, then the
+        table column of a multi-table frame (the lake bucket stays a function
+        of the first key column)."""
+        keys = tuple(self.config.key_columns)
+        return (*keys, TABLE) if TABLE in df.columns else keys
+
     def envelope_stream(
         self, lo: int | None = None, hi: int | None = None
     ) -> DataFrame:
@@ -977,13 +1024,15 @@ class CdcEngine:
         phase 2 of the full pipeline.
         """
         cfg = self.config
-        key_cols = cfg.key_columns
+        key_cols = self._keys(slice_df)
         df = self._prefilter(slice_df)
         if not {"before", "after"}.issubset(set(df.columns)):
             return None  # non-standard WAL shape: fall back to the full env
 
         def slim(col: str) -> F.Column:
-            return F.struct(*[F.col(col).getField(c).alias(c) for c in key_cols])
+            return F.struct(
+                *[F.col(col).getField(c).alias(c) for c in cfg.key_columns]
+            )
 
         cols = [
             F.col("offset"), F.col("ts_ms"), F.col("op"),
@@ -1034,7 +1083,7 @@ class CdcEngine:
             bound = 2 * offset_span + chunk_rows
         return R.resolve_lww(
             self._envelope(slice_df, upto_offset=upto_offset),
-            key_cols=self.config.key_columns,
+            key_cols=self._keys(slice_df),
             bucket_into=(
                 (bucket_into, lambda k: bucket_expr(k, bucket_into))
                 if bucket_into
@@ -1054,167 +1103,211 @@ class CdcEngine:
         return null
 
     @staticmethod
+    def _own(df: DataFrame, members: list[_Member]) -> DataFrame:
+        """The rows of ``df`` that belong to ``members``: every row of a
+        single-table frame."""
+        if TABLE not in df.columns:
+            return df
+        return df.where(F.col(TABLE).isin([m.name for m in members]))
+
+    @staticmethod
     def _lineage(rows: DataFrame, bucket: F.Column, is_delete: F.Column) -> list:
         """Per-lake-bucket lineage in ONE aggregation job: max offset, upserts
-        and deletes per ``bucket``. Rows whose key has a null column carry a
-        null bucket and land in the null ``_bucket`` row (P18,
-        EventDispatcher.java:244-258), so malformed keys are detected without
-        a dedicated scan job."""
-        return (
-            rows.withColumn("_bucket", bucket)
-            .groupBy("_bucket")
+        and deletes per ``bucket`` (and per table of a multi-table frame).
+        Rows whose key has a null column carry a null bucket and land in the
+        null ``_bucket`` row (P18, EventDispatcher.java:244-258), so malformed
+        keys are detected without a dedicated scan job."""
+        return [
+            r.asDict()
+            for r in rows.withColumn("_bucket", bucket)
+            .groupBy(*([TABLE] if TABLE in rows.columns else []), "_bucket")
             .agg(
                 F.max("_offset").alias("max_offset"),
                 F.sum(F.when(~is_delete, 1).otherwise(0)).alias("rows_applied"),
                 F.sum(F.when(is_delete, 1).otherwise(0)).alias("rows_deleted"),
             )
             .collect()
-        )
+        ]
 
     def _commit_batch(
         self,
-        lake: LakeTable,
+        members: list[_Member],
         lineage_all: list,
         *,
-        batch_id: int,
-        lo: int | None,
         hi: int,
         t0: float,
-        malformed,
-        commit,
-    ) -> dict[str, Any]:
-        """Commit epilogue of every drive mode.
+        malformed: Callable[[_Member], DataFrame],
+        commit: Callable[[_Member, dict, list[int]], dict[str, Any]],
+    ) -> None:
+        """Commit epilogue of every drive mode, one member at a time.
 
         ``lineage_all``: per-bucket rows (``_bucket``, max_offset,
-        rows_applied, rows_deleted) whose null-``_bucket`` row counts the
-        malformed keys; ``malformed()``: the rows quarantined under
-        failure_handling='warn'; ``commit(stats, touched_buckets)``: the lake
-        commit of the well-keyed rows (a merge, or the staged-file commit).
+        rows_applied, rows_deleted, and the table of a multi-table frame)
+        whose null-``_bucket`` rows count the malformed keys;
+        ``malformed(m)``: the rows quarantined under failure_handling='warn';
+        ``commit(m, stats, touched_buckets)``: the lake commit of the
+        member's well-keyed rows (a merge, or the staged-file commit).
 
-        The malformed-key policy runs BEFORE the commit: 'fail' leaves the
-        table unchanged (staged files stay orphaned, the same crash contract
-        as a mid-write failure) and the 'warn' DLQ is written before the
-        batch becomes visible. A committed batch then appends its
-        ``_checkpoints`` lineage and ``_metrics`` rows and runs the
-        bounded-storage sweep."""
-        cfg = self.config
-        lineage = [r for r in lineage_all if r["_bucket"] is not None]
-        n_bad = sum(
-            r["rows_applied"] + r["rows_deleted"]
-            for r in lineage_all
-            if r["_bucket"] is None
-        )
-        if n_bad:
-            if cfg.failure_handling == "fail":
-                raise ValueError(
-                    f"batch {batch_id}: {n_bad} malformed key(s) (null key column); "
-                    "set failure_handling='warn'|'skip' to quarantine/drop"
+        Per member, under its own engine's settings: the malformed-key policy
+        runs BEFORE the commit ('fail' leaves the table unchanged, staged
+        files stay orphaned, the same crash contract as a mid-write failure;
+        the 'warn' DLQ is written before the batch becomes visible); a
+        committed batch then appends its ``_checkpoints`` lineage and
+        ``_metrics`` rows and runs the bounded-storage sweep; the result is
+        appended to ``m.results``. A member that fails keeps the error in
+        ``m.error`` and the others still commit."""
+        for m in members:
+            eng = m.eng
+            cfg = eng.config
+            rows = [r for r in lineage_all if r.get(TABLE, m.name) == m.name]
+            lineage = [r for r in rows if r["_bucket"] is not None]
+            n_bad = sum(
+                r["rows_applied"] + r["rows_deleted"]
+                for r in rows
+                if r["_bucket"] is None
+            )
+            try:
+                if n_bad:
+                    if cfg.failure_handling == "fail":
+                        raise ValueError(
+                            f"batch {m.batch_id}: {n_bad} malformed key(s) (null "
+                            "key column); set failure_handling='warn'|'skip' to "
+                            "quarantine/drop"
+                        )
+                    if cfg.failure_handling == "warn":
+                        # Batch-scoped overwrite => replaying a crashed batch
+                        # rewrites (not duplicates) its quarantine.
+                        malformed(m).write.mode("overwrite").parquet(
+                            os.path.join(eng.work_dir, "_dlq", f"batch_id={m.batch_id}")
+                        )
+                    eng._append_jsonl(
+                        eng._metrics_path,
+                        [{"batch_id": m.batch_id, "malformed_skipped": int(n_bad)}],
+                    )
+                stats = {
+                    "rows_applied": int(sum(r["rows_applied"] for r in lineage)),
+                    "rows_deleted": int(sum(r["rows_deleted"] for r in lineage)),
+                }
+                res = commit(m, stats, [int(r["_bucket"]) for r in lineage])
+            except Exception as e:  # noqa: BLE001 — the other members go on
+                m.error = e
+                continue
+            wall_ms = int((time.time() - t0) * 1000)
+            if res.get("applied"):
+                eng._append_jsonl(
+                    eng._ckpt_path,
+                    [
+                        {
+                            "batch_id": m.batch_id,
+                            "partition_id": int(r["_bucket"]),
+                            "max_offset": int(r["max_offset"]),
+                            "rows_applied": int(r["rows_applied"]),
+                            "rows_deleted": int(r["rows_deleted"]),
+                            "wall_ms": wall_ms,
+                        }
+                        for r in lineage
+                    ],
                 )
-            if cfg.failure_handling == "warn":
-                # Batch-scoped overwrite => replaying a crashed batch rewrites
-                # (not duplicates) its quarantine.
-                malformed().write.mode("overwrite").parquet(
-                    os.path.join(self.work_dir, "_dlq", f"batch_id={batch_id}")
+                eng._append_jsonl(
+                    eng._metrics_path,
+                    [
+                        {
+                            "batch_id": m.batch_id,
+                            "lo": m.lo,
+                            "hi": hi,
+                            "keys_touched": stats["rows_applied"] + stats["rows_deleted"],
+                            "rows_applied": stats["rows_applied"],
+                            "rows_deleted": stats["rows_deleted"],
+                            "wall_ms": wall_ms,
+                        }
+                    ],
                 )
-            self._append_jsonl(
-                self._metrics_path,
-                [{"batch_id": batch_id, "malformed_skipped": int(n_bad)}],
-            )
-        stats = {
-            "rows_applied": int(sum(r["rows_applied"] for r in lineage)),
-            "rows_deleted": int(sum(r["rows_deleted"] for r in lineage)),
-        }
-        res = commit(stats, [int(r["_bucket"]) for r in lineage])
-        wall_ms = int((time.time() - t0) * 1000)
-        if res.get("applied"):
-            self._append_jsonl(
-                self._ckpt_path,
-                [
-                    {
-                        "batch_id": batch_id,
-                        "partition_id": int(r["_bucket"]),
-                        "max_offset": int(r["max_offset"]),
-                        "rows_applied": int(r["rows_applied"]),
-                        "rows_deleted": int(r["rows_deleted"]),
-                        "wall_ms": wall_ms,
-                    }
-                    for r in lineage
-                ],
-            )
-            self._append_jsonl(
-                self._metrics_path,
-                [
-                    {
-                        "batch_id": batch_id,
-                        "lo": lo,
-                        "hi": hi,
-                        "keys_touched": stats["rows_applied"] + stats["rows_deleted"],
-                        "rows_applied": stats["rows_applied"],
-                        "rows_deleted": stats["rows_deleted"],
-                        "wall_ms": wall_ms,
-                    }
-                ],
-            )
-            self._maybe_expire(lake, batch_id + 1)
-        return {**res, **stats, "wall_ms": wall_ms}
+                eng._maybe_expire(m.lake, m.batch_id + 1)
+            m.results.append({**res, **stats, "wall_ms": wall_ms})
 
     def _apply_batch(
-        self,
-        lake: LakeTable,
-        slice_df: DataFrame,
-        *,
-        batch_id: int,
-        lo: int,
-        hi: int,
-        truncate_below: int | None = None,
-    ) -> dict[str, Any]:
+        self, members: list[_Member], slice_df: DataFrame, hi: int
+    ) -> None:
+        """Apply one batch, the rows of ``slice_df`` up to ``hi``, to the
+        lakes of ``members`` (their ``batch_id``, ``lo`` and ``trunc`` set):
+        schema DDL, then one LWW pipeline for all of them. Results and
+        failures land on the members (:meth:`_commit_batch`)."""
         t0 = time.time()
-        self._apply_ddl(lake, hi)
-        span = max(hi - lo, 0)
+        for m in members:
+            m.eng._apply_ddl(m.lake, hi)
+        span = max(hi - min(m.lo for m in members), 0)
 
-        def malformed() -> DataFrame:
-            return self._prefilter(slice_df).where(self._key_null())
+        def malformed(m: _Member) -> DataFrame:
+            return self._own(self._prefilter(slice_df), [m]).where(self._key_null())
 
-        if lake.manifest(refresh=True)["files"]:
-            return self._merge_actions(
-                lake, self._transform(slice_df, upto_offset=hi, offset_span=span),
-                batch_id=batch_id, lo=lo, hi=hi, t0=t0, malformed=malformed,
-                truncate_below=truncate_below,
+        if not self._stageable(members):
+            self._merge_actions(
+                members, self._transform(slice_df, upto_offset=hi, offset_span=span),
+                hi=hi, t0=t0, malformed=malformed,
             )
-        # Empty target (initial snapshot / whole-log replay / post-truncate):
+            return
+        # Empty targets (initial snapshot / whole-log replay / post-truncate):
         # transform -> stage (one job) -> lineage from a narrow scan of the
         # staged files -> commit epilogue. vs the merge path this runs ONE
         # pipeline execution with ONE payload shuffle (resolver
         # ``bucket_into``), bucket-clustered end-to-end, no persist/columnar
         # cache, no merge join — the per-event cost that dominates a
-        # 10^10-event replay.
+        # 10^10-event replay. A multi-table frame stages every member's rows
+        # in the same write and hands each lake its part.
+        lake, by = members[0].lake, TABLE if TABLE in slice_df.columns else None
         staged = lake.stage_initial(
             self._transform(
                 slice_df, upto_offset=hi, bucket_into=lake.n_buckets, offset_span=span
             ),
-            batch_id=batch_id, truncate_below=truncate_below,
+            batch_id=members[0].batch_id, truncate_below=members[0].trunc, by=by,
         )
         if staged is None:  # replayed batch (batch_id already committed)
-            return {"applied": False, "batch_id": batch_id,
-                    "rows_applied": 0, "rows_deleted": 0, "wall_ms": 0}
+            for m in members:
+                m.results.append({"applied": False, "batch_id": m.batch_id,
+                                  "rows_applied": 0, "rows_deleted": 0, "wall_ms": 0})
+            return
         # One narrow aggregation over the staged files (offset/_deleted columns
-        # + the _bucket partition value) yields lineage, batch stats, AND the
+        # + the partition values) yields lineage, batch stats, AND the
         # malformed count — the null-bucket partition rows.
-        if staged["new_files"] or staged["has_malformed"]:
+        lineage_all = []
+        if staged.get("tables") or staged.get("new_files") or staged.get("has_malformed"):
             lineage_all = self._lineage(
-                self.spark.read.parquet(staged["staging"]),
+                self.spark.read.schema(
+                    f"_offset bigint, _deleted boolean, {by + ' string, ' if by else ''}"
+                    "_bucket int"
+                ).parquet(staged["staging"]),
                 F.col("_bucket"),
                 F.col("_deleted"),
             )
-        else:  # empty batch: nothing staged beyond the _SUCCESS marker
-            lineage_all = []
-        return self._commit_batch(
-            lake, lineage_all, batch_id=batch_id, lo=lo, hi=hi, t0=t0,
-            malformed=malformed,
-            commit=lambda stats, _touched: lake.commit_staged(
-                staged, batch_id=batch_id, max_offset=hi, stats=stats
+        parts = (
+            lake.split_staged(staged, {m.name: (m.lake, m.batch_id) for m in members})
+            if by else {members[0].name: staged}
+        )
+        self._commit_batch(
+            members, lineage_all, hi=hi, t0=t0, malformed=malformed,
+            commit=lambda m, stats, _touched: m.lake.commit_staged(
+                parts[m.name], batch_id=m.batch_id, max_offset=hi, stats=stats
             ),
         )
+
+    @staticmethod
+    def _stageable(members: list[_Member]) -> bool:
+        """Whether the batch can go out in one staged write: every member's
+        lake is empty and laid out like the others (schema, key columns,
+        buckets, defaults, truncate watermark). Otherwise every member
+        merges its own rows."""
+        def layout(m: _Member):
+            mf = m.lake.manifest(refresh=True)
+            if mf["files"]:
+                return None
+            return (
+                mf["schemas"][str(mf["schema_version"])], mf["key_cols"],
+                mf["n_buckets"], mf.get("defaults"),
+                max(mf.get("truncate_below", 0), m.trunc or 0),
+            )
+
+        layouts = [layout(m) for m in members]
+        return layouts[0] is not None and all(x == layouts[0] for x in layouts)
 
     def _apply_ddl(self, lake: LakeTable, upto: int) -> None:
         """Apply the schema changes at offsets <= ``upto`` not yet in the lake
@@ -1228,36 +1321,36 @@ class CdcEngine:
                 self.history.record(change)
 
     def _merge_actions(
-        self, lake: LakeTable, actions: DataFrame, *, batch_id: int,
-        lo: int | None, hi: int | None, t0: float,
-        malformed: Callable[[], DataFrame] | None = None, truncate_below=None,
-    ) -> dict[str, Any] | None:
+        self, members: list[_Member], actions: DataFrame, *, hi: int | None,
+        t0: float, malformed: Callable[[_Member], DataFrame] | None = None,
+    ) -> None:
         """Merge step of the incremental batch and the stateful trigger:
         resolved ``actions`` -> per-bucket lineage -> :meth:`_commit_batch`
-        with ``lake.merge``. Persisted, so the pipeline behind the actions
-        runs once for the lineage (which yields the touched buckets) and the
-        merge join. ``hi=None``: the batch ends at its highest offset, and no
-        actions commit nothing (returns None). ``malformed()``: the rows
-        quarantined under failure_handling='warn' (default: the actions'
-        null-key rows)."""
+        with each member's ``lake.merge`` of its own rows. Persisted, so the
+        pipeline behind the actions runs once for the lineage (which yields
+        the touched buckets) and every merge join. ``hi=None``: the batch
+        ends at its highest offset, and no actions commit nothing.
+        ``malformed(m)``: the rows quarantined under failure_handling='warn'
+        (default: the actions' null-key rows)."""
         actions = actions.persist()
         try:
             lineage = self._lineage(
                 actions,
-                key_bucket(self.config.key_columns, lake.n_buckets),
+                key_bucket(self.config.key_columns, members[0].lake.n_buckets),
                 F.col("action") == R.ACTION_DELETE,
             )
             if hi is None:
                 if not lineage:
-                    return None
+                    return
                 hi = max(int(r["max_offset"]) for r in lineage)
-            return self._commit_batch(
-                lake, lineage, batch_id=batch_id, lo=lo, hi=hi, t0=t0,
-                malformed=malformed or (lambda: actions.where(self._key_null())),
-                commit=lambda stats, touched: lake.merge(
-                    actions.where(~self._key_null()),
-                    batch_id=batch_id, max_offset=hi, stats=stats,
-                    touched_buckets=touched, truncate_below=truncate_below,
+            well_keyed = actions.where(~self._key_null())
+            self._commit_batch(
+                members, lineage, hi=hi, t0=t0,
+                malformed=malformed
+                or (lambda m: self._own(actions, [m]).where(self._key_null())),
+                commit=lambda m, stats, touched: m.lake.merge(
+                    self._own(well_keyed, [m]), batch_id=m.batch_id, max_offset=hi,
+                    stats=stats, touched_buckets=touched, truncate_below=m.trunc,
                 ),
             )
         finally:
@@ -1324,70 +1417,89 @@ class CdcEngine:
                 time.sleep(self.config.retriable_restart_wait_ms / 1000.0)
 
     # ------------------------------------------------------- micro-batch core
-    def _step(
-        self,
-        lake: LakeTable,
-        src: DataFrame,
-        lo: int,
-        hi: int,
-        sig: tuple[int, dict[str, Any]] | None = None,
-        truncates: Sequence[int] = (),
-    ) -> tuple[dict[str, Any], bool]:
-        """One micro-batch of run() and run_streaming(): the rows of ``src``
-        (the whole WAL, or one streaming epoch) in offsets (lo, hi] plus the
-        next window of an in-flight ad-hoc snapshot (the reference's
-        incremental snapshot runs WHILE streaming) -> side-channel topics ->
-        apply + commit -> durable snapshot position -> the in-band signal
-        ``sig`` the batch ends at, applied only after the commit (every event
-        before the signal is processed pre-action, every event after it
-        post-action). ``truncates``: TRUNCATE offsets of ``src`` (see
-        :meth:`_truncate_offsets`); the highest one in (lo, hi] clears the
-        lake below it. Returns (apply result, pause requested by ``sig``)."""
-        batch_id = lake.committed_batch_id + 1
-        slice_df = src.where((F.col("offset") > lo) & (F.col("offset") <= hi))
-        self._publish_side_channels(slice_df, batch_id=batch_id)
-        chunks = self._snapshot_chunk_rows(src.schema, lo)
-        if chunks is not None:
-            slice_df = slice_df.unionByName(chunks, allowMissingColumns=True)
-        res = self._apply_batch(
-            lake, slice_df, batch_id=batch_id, lo=lo, hi=hi,
-            truncate_below=max((o for o in truncates if lo < o <= hi), default=None),
+    @staticmethod
+    def _slice(src: DataFrame, members: list[_Member], hi: int) -> DataFrame:
+        """The rows of ``src`` in (lo, hi] of each member, ``lo`` its own: a
+        multi-table frame keeps each table's rows above its table's offset."""
+        df = src.where(
+            (F.col("offset") > min(m.lo for m in members)) & (F.col("offset") <= hi)
         )
-        if chunks is not None:
-            self._save_incr_state(self._incr_pending_state)
-        if sig is None:
-            return res, False
-        pause = self._apply_signal_action(sig[1], at_offset=sig[0])["pause"]
-        self._save_inband_marker(sig[0])
-        return res, pause
+        if TABLE not in src.columns:
+            return df
+        own = F.lit(False)
+        for m in members:
+            own = own | ((F.col(TABLE) == m.name) & (F.col("offset") > m.lo))
+        return df.where(own)
+
+    def _step(self, members: list[_Member], src: DataFrame, hi: int) -> None:
+        """One micro-batch of run() and run_streaming() for ``members``, the
+        lakes whose ``lo`` is below ``hi``: each member's rows of ``src`` (the
+        whole WAL, or one streaming epoch) in offsets (lo, hi] plus the next
+        window of its in-flight ad-hoc snapshot (the reference's incremental
+        snapshot runs WHILE streaming) -> side-channel topics -> apply +
+        commit (:meth:`_apply_batch`) -> durable snapshot position -> the
+        in-band signal the batch ends at (the member's next pending signal,
+        at ``hi``), applied only after the commit: every event before the
+        signal is processed pre-action, every event after it post-action; a
+        pause sets ``m.paused``. The highest of a member's TRUNCATE offsets in
+        (lo, hi] clears its lake below it. A failure in the batch's shared
+        steps (DDL, the LWW pipeline, the staged write, the lineage read)
+        becomes ``m.error`` of every member of the batch that has no result
+        yet, so the drive's other members go on."""
+        for m in members:
+            m.batch_id = m.lake.committed_batch_id + 1
+            m.trunc = max((o for o in m.truncates if m.lo < o <= hi), default=None)
+        slice_df = self._slice(src, members, hi)
+        chunked = []
+        for m in members:
+            m.eng._publish_side_channels(self._own(slice_df, [m]), batch_id=m.batch_id)
+            chunks = m.eng._snapshot_chunk_rows(src.schema, m.lo)
+            if chunks is not None:
+                slice_df = slice_df.unionByName(chunks, allowMissingColumns=True)
+                chunked.append(m)
+        done = [len(m.results) for m in members]
+        try:
+            self._apply_batch(members, slice_df, hi)
+        except Exception as e:  # noqa: BLE001 — a shared step failed
+            # every member without a result of this batch fails with it; the
+            # members outside the batch go on (a failure is raised at the end)
+            for m, n in zip(members, done):
+                if m.error is None and len(m.results) == n:
+                    m.error = e
+        for m in members:
+            if m.error is not None:
+                continue
+            if m in chunked:
+                m.eng._save_incr_state(m.eng._incr_pending_state)
+            m.lo = hi
+            if m.pending and m.pending[0][0] == hi:
+                off, sig = m.pending.pop(0)
+                m.paused = m.eng._apply_signal_action(sig, at_offset=off)["pause"]
+                m.eng._save_inband_marker(off)
 
     def _drain_snapshot(
-        self,
-        lake: LakeTable,
-        results: list[dict[str, Any]],
-        wal_schema: T.StructType,
-        max_batches: int | None = None,
+        self, m: _Member, wal_schema: T.StructType, max_batches: int | None = None
     ) -> None:
-        """The log is exhausted but an in-flight ad-hoc snapshot may still
-        have chunk windows left: emit chunk-only batches (WAL-shaped rows of
-        ``wal_schema``) until it completes, a pause signal arrives or
-        ``results`` reaches ``max_batches``."""
-        lo = lake.committed_max_offset
+        """The log is exhausted but this engine's in-flight ad-hoc snapshot
+        may still have chunk windows left: emit chunk-only batches
+        (WAL-shaped rows of ``wal_schema``) into member ``m``'s lake until it
+        completes, a pause signal arrives, the member fails or its results
+        reach ``max_batches``."""
+        m.lo = m.lake.committed_max_offset
         while (
             self._incr_state()["active"]
             and self.snapshot_source
-            and (max_batches is None or len(results) < max_batches)
+            and m.error is None
+            and (max_batches is None or len(m.results) < max_batches)
             and not self._poll_signals()["pause"]
         ):
-            chunks = self._snapshot_chunk_rows(wal_schema, lo)
+            chunks = self._snapshot_chunk_rows(wal_schema, m.lo)
             if chunks is None:
                 break
-            results.append(
-                self._apply_batch(
-                    lake, chunks, batch_id=lake.committed_batch_id + 1, lo=lo, hi=lo
-                )
-            )
-            self._save_incr_state(self._incr_pending_state)
+            m.batch_id, m.trunc = m.lake.committed_batch_id + 1, None
+            self._apply_batch([m], chunks, m.lo)
+            if m.error is None:
+                self._save_incr_state(self._incr_pending_state)
 
     # -------------------------------------------------------------- run modes
     def run(self, *, max_batches: int | None = None) -> list[dict[str, Any]]:
@@ -1402,91 +1514,146 @@ class CdcEngine:
         (``results`` accumulates across restarts), uncommitted work re-runs
         idempotently under the offset guard.
         """
-        results: list[dict[str, Any]] = []
-        self._with_restarts(lambda: self._run_batches(results, max_batches))
-        return results
+        return self._run_group([self], max_batches=max_batches)[0]
+
+    def _run_group(
+        self,
+        engines: list["CdcEngine"],
+        *,
+        projection: Callable[[DataFrame], DataFrame] | None = None,
+        scan: tuple[DataFrame, Any] | None = None,
+        max_batches: int | None = None,
+    ) -> list[list[dict[str, Any]]]:
+        """run() for the lakes of ``engines`` (this engine first: its settings
+        drive the shared steps) over one WAL frame: ``projection`` of the raw
+        log, by default this engine's ``wal_projection``. Each attempt reads
+        the WAL once and runs one bounds pass; ``scan`` is the (frame,
+        bounds) of a read already made for the first attempt. Returns each
+        engine's batch results.
+
+        A member that fails stops and the others run to the end; then the
+        first failure is raised, and a retriable one restarts the drive, each
+        member from its own committed offset."""
+        members = [_Member(e) for e in engines]
+
+        def attempt() -> None:
+            nonlocal scan
+            if scan is None:
+                wal = (
+                    self._wal() if projection is None
+                    else projection(self.spark.read.parquet(self.wal_path))
+                )
+                scan = (wal, self._bounds(wal, [m.name for m in members]))
+            (wal, bounds), scan = scan, None  # a restart reads again
+            self._run_batches(members, wal, bounds, max_batches)
+
+        self._with_restarts(attempt)
+        return [m.results for m in members]
 
     def _run_batches(
-        self, results: list[dict[str, Any]], max_batches: int | None
+        self, members: list[_Member], wal: DataFrame, bounds, max_batches: int | None
     ) -> None:
-        wal = self._wal()
-        lake = self._open_lake(wal.schema)
-        if self.config.snapshot_mode == SNAPSHOT_SCHEMA_ONLY_RECOVERY:
-            # History store was lost/corrupted: re-record every already-crossed
-            # schema delta from the schema-change source before streaming
-            # (MySqlConnectorConfig schema_only_recovery; replay() dedups by
-            # version, so recovery is idempotent).
-            for c in self.registry().changes:
-                if (
-                    c.offset <= lake.committed_max_offset
-                    and c.table_changes != "create"
-                ):
-                    self.history.record(c)
-        bounds = wal.agg(
-            F.max("offset").alias("hi"), self._truncate_offsets(wal)
-        ).first()
+        for m in members:
+            m.error, m.paused = None, False
+            m.lake = m.eng._open_lake(wal.schema)
+            if m.eng.config.snapshot_mode == SNAPSHOT_SCHEMA_ONLY_RECOVERY:
+                # History store was lost/corrupted: re-record every
+                # already-crossed schema delta from the schema-change source
+                # before streaming (MySqlConnectorConfig schema_only_recovery;
+                # replay() dedups by version, so recovery is idempotent).
+                for c in m.eng.registry().changes:
+                    if (
+                        c.offset <= m.lake.committed_max_offset
+                        and c.table_changes != "create"
+                    ):
+                        m.eng.history.record(c)
         wal_hi = bounds["hi"]
         if wal_hi is None:
             return
-        lo = lake.committed_max_offset
+        for m in members:
+            m.lo = m.lake.committed_max_offset
+            end = bounds["ends"].get(m.name, wal_hi)
+            m.end = m.lo if end is None else end  # None: no row of its table
+            m.truncates = m.own_truncates(bounds["truncates"])
         if self.config.signal_data_collection:
             # Crash-window recovery: in-band signals whose batch committed but
             # whose action never applied (crash between commit and marker
             # save) re-apply here — at-least-once for the action, exact for
             # the data (actions are idempotent or restart-safe).
-            marker = self._inband_marker()
-            if lo > marker:
-                for off, sig in self._inband_signals_in(wal, marker, lo):
-                    self._apply_signal_action(sig, at_offset=off)
-                    self._save_inband_marker(off)
+            behind = [(m, m.eng._inband_marker()) for m in members]
+            behind = [(m, k) for m, k in behind if m.lo > k]
+            if behind:
+                sigs = self._inband_signals_in(
+                    wal, min(k for _, k in behind), max(m.lo for m, _ in behind)
+                )
+                for m, k in behind:
+                    for off, sig in sigs:
+                        if k < off <= m.lo:
+                            m.eng._apply_signal_action(sig, at_offset=off)
+                            m.eng._save_inband_marker(off)
         # Never past the last offset read: the committed max_offset is the
         # resume point, so a batch ending beyond the log's end would skip
         # events appended to the WAL after this run.
-        paused = self._run_range(
-            lake, wal, lo, wal_hi, bounds["truncates"], results,
-            step=self.config.max_offsets_per_batch, max_batches=max_batches,
+        self._run_range(
+            members, wal, step=self.config.max_offsets_per_batch, max_batches=max_batches
         )
-        if not paused:  # P17 pause signal; resume = call run() again
-            self._drain_snapshot(lake, results, wal.schema, max_batches)
-        self._maybe_expire(lake, None)  # bound storage before returning
+        for m in members:
+            if m.error is None and not m.paused:  # P17 pause: call run() again
+                m.eng._drain_snapshot(m, wal.schema, max_batches)
+            if m.error is None:
+                m.eng._maybe_expire(m.lake, None)  # bound storage before returning
+        failed = [m.error for m in members if m.error is not None]
+        if failed:
+            raise failed[0]
 
     def _run_range(
-        self, lake: LakeTable, src: DataFrame, lo: int, hi_all: int,
-        truncates: Sequence[int], results: list[dict[str, Any]], *,
+        self, members: list[_Member], src: DataFrame, *,
         step: int | None = None, max_batches: int | None = None,
-    ) -> bool:
-        """Range loop of run() and of each run_streaming epoch: offsets
-        (lo, hi_all] of ``src`` through :meth:`_step`, one result per batch
-        appended to ``results`` (at most ``max_batches``). Per batch: the
-        out-of-band pause poll; after an empty batch of a ``step``-limited
-        loop, a jump over the offset gap; the end ``lo + step`` (else
-        ``hi_all``) pulled back to the first in-band signal above the marker,
-        so the batch ends AT it (Signal.java: signals are totally ordered with
-        the data); the step. Returns True when a signal paused the drive."""
-        pending: list[tuple[int, dict[str, Any]]] = []
+    ) -> None:
+        """Range loop of run() and of each run_streaming epoch: each member's
+        offsets (lo, end] of ``src`` through :meth:`_step`, one result per
+        batch appended to its ``results``. Per batch: every member's
+        out-of-band pause poll; after a batch that applied nothing, in a
+        ``step``-limited loop, a jump over the offset gap; the end
+        ``lo + step`` (else the highest member ``end``) from the lowest
+        member ``lo``, pulled back to the first in-band signal a member has
+        pending above its marker, so the batch ends AT it (Signal.java:
+        signals are totally ordered with the data); the step, for the members
+        below the batch's end. A member leaves the loop once it reaches its
+        ``end``, is paused, fails or has ``max_batches`` results."""
         if self.config.signal_data_collection:
-            marker = self._inband_marker()
-            pending = [
-                s for s in self._inband_signals_in(src, lo, hi_all) if s[0] > marker
+            sigs = self._inband_signals_in(
+                src, min(m.lo for m in members), max(m.end for m in members)
+            )
+            for m in members:
+                floor = max(m.lo, m.eng._inband_marker())
+                m.pending = [s for s in sigs if s[0] > floor]
+        idle = False
+        while True:
+            live = [
+                m for m in members
+                if m.lo < m.end and not m.paused and m.error is None
+                and (max_batches is None or len(m.results) < max_batches)
             ]
-        while lo < hi_all and (max_batches is None or len(results) < max_batches):
-            if self._poll_signals()["pause"]:
-                return True
-            last = results[-1] if results else None
-            if step and last and last["rows_applied"] + last["rows_deleted"] == 0:
+            for m in live:
+                m.paused = m.eng._poll_signals()["pause"]
+            live = [m for m in live if not m.paused]
+            if not live:
+                return
+            lo, end = min(m.lo for m in live), max(m.end for m in live)
+            if step and idle:
                 nxt = src.where(F.col("offset") > lo).agg(F.min("offset")).first()[0]
-                if nxt is not None:
-                    lo = max(lo, min(int(nxt), hi_all) - 1)
-            hi = min(lo + step, hi_all) if step else hi_all
-            sig = pending.pop(0) if pending and pending[0][0] <= hi else None
-            if sig is not None:
-                hi = sig[0]
-            res, pause = self._step(lake, src, lo, hi, sig, truncates)
-            results.append(res)
-            lo = hi
-            if pause:
-                return True
-        return False
+                lo = max(lo, min(end if nxt is None else int(nxt), end) - 1)
+                for m in live:
+                    m.lo = max(m.lo, lo)
+            hi = min(lo + step, end) if step else end
+            hi = min([hi] + [m.pending[0][0] for m in live if m.pending])
+            batch = [m for m in live if m.lo < hi]
+            self._step(batch, src, hi)
+            idle = all(
+                m.results[-1]["rows_applied"] + m.results[-1]["rows_deleted"] == 0
+                for m in batch if m.error is None
+            )
 
     def _maybe_expire(self, lake: LakeTable, n: int | None) -> None:
         """Bounded-storage maintenance inside the drive loops: expire lake
@@ -1518,18 +1685,16 @@ class CdcEngine:
     def _run_stream(
         self,
         handle,
-        checkpoint: str | Callable[[DataFrame], str],
+        plan: Callable[[DataFrame], tuple[str, DataFrame]],
         max_files_per_trigger: int | None,
         raw_schema: T.StructType,
-        transform=None,
     ) -> str:
         """Structured Streaming starter shared by the streaming drives: file
         source over the WAL directory with the raw log's ``raw_schema``,
         then ``wal_projection`` (streaming-safe column algebra applied inside
-        the query), then ``transform``, then
+        the query), then ``plan(stream) -> (checkpoint, query frame)``, then
         ``handle(df)`` per epoch via foreachBatch under an availableNow
-        trigger, checkpointed in ``<work_dir>/<checkpoint>`` (a callable
-        names it from the source stream, before ``transform``; the name is
+        trigger, checkpointed in ``<work_dir>/<checkpoint>`` (the name is
         returned).
 
         An out-of-band pause signal (polled per epoch) or a ``_PauseSignal``
@@ -1544,11 +1709,7 @@ class CdcEngine:
         reader = self.spark.readStream.schema(raw_schema)
         if max_files_per_trigger:
             reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-        stream = self._wal_projection(reader.parquet(self.wal_path))
-        if callable(checkpoint):
-            checkpoint = checkpoint(stream)
-        if transform is not None:
-            stream = transform(stream)
+        checkpoint, stream = plan(self._wal_projection(reader.parquet(self.wal_path)))
         self._pause_requested = False
 
         def on_epoch(df: DataFrame, epoch_id: int) -> None:
@@ -1600,15 +1761,23 @@ class CdcEngine:
             # In-band signals order exactly within the epoch, as in run(). A
             # signal in a late-delivered low-offset segment applies when that
             # segment's epoch arrives (the durable marker dedups replays).
-            if self._run_range(
-                lake, df, int(rng["lo"]) - 1, int(rng["hi"]), rng["truncates"], []
-            ):
+            m = _Member(self, lake=lake, lo=int(rng["lo"]) - 1, end=int(rng["hi"]))
+            m.truncates = m.own_truncates(rng["truncates"])
+            self._run_range([m], df)
+            if m.error is not None:
+                raise m.error
+            if m.paused:
                 self._pause_requested = True
                 raise _PauseSignal()
 
-        self._run_stream(handle, "stream_ckpt", max_files_per_trigger, raw.schema)
+        self._run_stream(
+            handle, lambda s: ("stream_ckpt", s), max_files_per_trigger, raw.schema
+        )
         if not self._pause_requested:
-            self._drain_snapshot(lake, [], wal.schema)
+            m = _Member(self, lake=lake)
+            self._drain_snapshot(m, wal.schema)
+            if m.error is not None:
+                raise m.error
         self._maybe_expire(lake, None)
 
     def run_streaming_stateful(
@@ -1631,7 +1800,7 @@ class CdcEngine:
 
         Crash safety / exactly-once: the state store checkpoints with the
         query in ``<work_dir>/stateful_ckpt_<layout>``, named after its state
-        layout (stateful.state_layout), which follows the payload schema: when
+        layout (stateful.stateful_lww_plan), which follows the payload schema: when
         new DDL, a converter setting or a code change alters the layout, the
         query starts a fresh checkpoint and re-reads the WAL from scratch,
         which the lake's offset guard makes converge. A drive that returns
@@ -1651,7 +1820,7 @@ class CdcEngine:
         unsupported here (per-tx ranking needs a window over the unbounded
         stream); signals/incremental snapshots remain batch-engine features.
         """
-        from debezium_spark.streaming.stateful import state_layout, stateful_lww
+        from debezium_spark.streaming.stateful import stateful_lww_plan
 
         cfg = self.config
         if cfg.provide_transaction_metadata:
@@ -1667,19 +1836,19 @@ class CdcEngine:
 
         def handle(df: DataFrame) -> None:
             # a trigger that resolved no state transition commits nothing
-            self._merge_actions(
-                lake, df, batch_id=lake.committed_batch_id + 1, lo=None, hi=None,
-                t0=time.time(),
-            )
+            m = _Member(self, lake=lake, lo=None, batch_id=lake.committed_batch_id + 1)
+            self._merge_actions([m], df, hi=None, t0=time.time())
+            if m.error is not None:
+                raise m.error
 
-        ckpt = self._run_stream(
-            handle,
-            lambda s: "stateful_ckpt_"
-            + state_layout(self._envelope(s), key_cols=key_cols),
-            max_files_per_trigger,
-            raw.schema,
-            transform=lambda s: stateful_lww(self._envelope(s), key_cols=key_cols),
-        )
+        def plan(stream: DataFrame) -> tuple[str, DataFrame]:
+            # one envelope per drive, for the layout hash and the query alike
+            layout, changelog = stateful_lww_plan(
+                self._envelope(stream), key_cols=key_cols
+            )
+            return "stateful_ckpt_" + layout, changelog
+
+        ckpt = self._run_stream(handle, plan, max_files_per_trigger, raw.schema)
         if not self._pause_requested:
             # The current layout's checkpoint has read the whole log: the
             # checkpoints of superseded layouts are dead weight.
@@ -1796,6 +1965,36 @@ class CdcEngine:
                 {"offset": str(last["hi"])} if last else {}
             ),
         }
+
+
+@dataclass(eq=False)
+class _Member:
+    """One lake of a drive: the engine that owns it and the drive's state
+    for it — the offset its next batch starts after (``lo``), the offset
+    its drive ends at (``end``), its TRUNCATE offsets and pending in-band
+    signals, the current batch's id and truncate watermark, its batch
+    results, and whether it paused or failed."""
+
+    eng: CdcEngine
+    lake: LakeTable | None = None
+    lo: int | None = -1
+    end: int = -1
+    batch_id: int = 0
+    trunc: int | None = None
+    truncates: list[int] = field(default_factory=list)
+    pending: list[tuple[int, dict[str, Any]]] = field(default_factory=list)
+    results: list[dict[str, Any]] = field(default_factory=list)
+    paused: bool = False
+    error: Exception | None = None
+
+    @property
+    def name(self) -> str | None:
+        return self.eng.config.table_name
+
+    def own_truncates(self, truncates) -> list[int]:
+        """This member's offsets among bounds ``truncates`` rows (a
+        single-table frame's rows name no table)."""
+        return [int(t["offset"]) for t in truncates if t["table"] in (None, self.name)]
 
 
 class _PauseSignal(Exception):

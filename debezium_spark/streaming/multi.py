@@ -1,31 +1,30 @@
-"""Multi-table capture: one heterogeneous WAL stream -> N per-table pipelines.
+"""Multi-table capture: one heterogeneous WAL stream -> per-table lakes.
 
 The reference dispatches every change event through a per-table schema registry
 (relational/Tables.java:1, TableSchemaBuilder.java:122-165) and routes it to its
 table's topic (EventDispatcher.java:189-196). Spark-first, the same shape is a
-*dispatcher* over typed per-table projections of one log:
+*dispatcher* over typed projections of one log:
 
   * the shared WAL carries a ``table`` column and schema-opaque JSON payloads
     (``before_json`` / ``after_json``) — exactly what a binlog is: one ordered
     byte stream of heterogeneous row events;
   * each captured table declares its payload schema + key columns
-    (:class:`TableSpec` — the Tables registry analogue);
-  * per table, the dispatcher projects the log (filter on ``table``, from_json
-    with that table's schema, key columns lifted top-level) and runs a full
-    :class:`CdcEngine` pipeline into that table's own lake target. The
-    projection is the engine's ``wal_projection``: pure column algebra the
-    engine applies to its one WAL read per drive and to its file stream.
+    (:class:`TableSpec` — the Tables registry analogue) and owns a
+    :class:`CdcEngine`: lake, work dir, registry, signals, metrics;
+  * ``run`` reads the log once, runs one bounds pass for every table, then one
+    LWW pipeline per *payload shape* (tables sharing ``payload_ddl`` and key
+    columns, see :meth:`MultiTableEngine._groups`): a ``CdcEngine`` drive over
+    the group's projection (pushed ``table`` filter, one from_json, keys
+    lifted top-level, the table as the ``TABLE`` column that keys the LWW)
+    whose members are the tables' engines, each committing to its own lake.
 
-Scale notes: the per-table filter is pushed to the parquet scan (min/max
-pruning on ``table`` when the WAL is written table-clustered). The per-table
-pipelines are independent (own lake, work dir, offset guard and checkpoint),
-so a drive runs them concurrently on a thread pool, one worker per captured
-table up to ``_MAX_WORKERS``: each pipeline is a chain of small Spark jobs,
-and overlapping N chains keeps the task slots busy where one chain at a time
-leaves them idle between jobs. Each worker inherits the caller thread's Spark
-local properties (job group, description, tags). Offsets stay globally
-ordered, so each pipeline's resume watermark is per-table and exact; the
-per-table offset map is replaced atomically and fsync'd after each drive.
+The groups run concurrently on a thread pool, one worker per group; each
+worker inherits the caller thread's Spark local properties (job group,
+description, tags) and tags its jobs ``dbz-table-<name>`` per member. Offsets
+stay globally ordered, so each table's resume watermark is exact even when
+the tables of a group stand at different offsets; the per-table offset map is
+replaced atomically and fsync'd after each drive. ``run_streaming`` keeps one
+query per table.
 """
 
 from __future__ import annotations
@@ -41,12 +40,13 @@ from pyspark.sql import functions as F
 from pyspark.util import inheritable_thread_target
 
 from debezium_spark.config import EngineConfig
+from debezium_spark.plans.lake import LakeTable
 from debezium_spark.storage import atomic_write
-from debezium_spark.streaming.engine import CdcEngine
+from debezium_spark.streaming.engine import TABLE, CdcEngine
 
-# Cap on concurrently driven per-table pipelines. Not the core count: a
-# pipeline spends most of its wall time between small jobs, so more pipelines
-# than task slots still overlap usefully.
+# Cap on concurrently driven groups. Not the core count: a drive spends much
+# of its wall time between small jobs, so more drives than task slots still
+# overlap usefully.
 _MAX_WORKERS = 16
 
 
@@ -61,7 +61,7 @@ class TableSpec:
 
 
 class MultiTableEngine:
-    """Dispatcher: one WAL directory, one CdcEngine pipeline per captured table.
+    """Dispatcher: one WAL directory, one lake per captured table.
 
     ``table_include`` / ``table_exclude`` regexes select captured tables at the
     dispatcher level (EventDispatcher.java:189-196) — an excluded table's
@@ -105,7 +105,9 @@ class MultiTableEngine:
                 work_dir=os.path.join(work_root, name),
                 schema_changes=spec.schema_changes,
                 snapshot_source=spec.snapshot_source,
-                wal_projection=self._projection(name, spec),
+                wal_projection=lambda wal, p=self._projection([name]): (
+                    p(wal).drop(TABLE)
+                ),
             )
 
     @staticmethod
@@ -116,10 +118,12 @@ class MultiTableEngine:
             return False
         return True
 
-    def _projection(self, name: str, spec: TableSpec):
-        """Pure column-algebra projection raw-WAL -> this table's typed shape
-        (no actions, no reads — streaming-safe): the engine's
-        ``wal_projection``, applied to its batch read and its file stream.
+    def _projection(self, names: list[str]):
+        """Pure column-algebra projection raw-WAL -> the typed rows of the
+        tables ``names``, which share one payload shape (no actions, no
+        reads — streaming-safe), plus the ``TABLE`` column naming each row's
+        table: the frame of their group's drive. Without that column it is a
+        table's ``wal_projection``, applied to its own reads and file stream.
 
         Signal rows (op='s') are routed to EVERY per-table engine — the
         reference's signal table is one captured collection whose events
@@ -130,10 +134,11 @@ class MultiTableEngine:
         in ``_signal_data`` because the per-table payload schema can't
         represent it. The OR filter still pushes to the scan; signal
         rows are rare so pruning stays effective."""
+        spec = self.tables[names[0]]
 
         def project(wal: DataFrame) -> DataFrame:
             is_sig = F.col("op") == "s"
-            wal = wal.where((F.col("table") == name) | is_sig)
+            wal = wal.where(F.col("table").isin(*names) | is_sig)
             before = F.from_json(F.col("before_json"), spec.payload_ddl)
             after = F.from_json(F.col("after_json"), spec.payload_ddl)
             # key resolution: after-image, else before-image (deletes), else
@@ -156,13 +161,47 @@ class MultiTableEngine:
                 "tx_id",
                 "schema_version",
                 F.when(is_sig, F.col("after_json")).alias("_signal_data"),
+                F.col("table").alias(TABLE),
             )
 
         return project
 
+    def _groups(self) -> list[list[str]]:
+        """Captured tables by payload shape: tables whose specs share
+        ``payload_ddl`` and key columns, with no schema history or snapshot
+        source of their own, the same snapshot mode and lake bucket count,
+        share one drive. A table with its own DDL or snapshot source drives
+        alone, and so does every table under settings that act per table id
+        (converters, message key columns) or per transaction."""
+        groups: dict[Any, list[str]] = {}
+        for name, eng in self.engines.items():
+            spec, cfg = self.tables[name], eng.config
+            key: Any = name
+            if (
+                spec.schema_changes is None
+                and not spec.snapshot_source
+                and not (cfg.custom_converters or cfg.message_key_columns
+                         or cfg.provide_transaction_metadata)
+                and not eng.registry().changes
+            ):
+                n_buckets = (
+                    LakeTable(self.spark, eng.target_path).n_buckets
+                    if LakeTable.exists(eng.target_path)
+                    else cfg.target_buckets
+                )
+                key = (spec.payload_ddl, tuple(spec.key_columns),
+                       eng._effective_snapshot_mode(), n_buckets)
+            groups.setdefault(key, []).append(name)
+        return list(groups.values())
+
     def run(self, **kw) -> dict[str, list[dict[str, Any]]]:
-        """Replay every captured table's pipeline, concurrently (see
-        :meth:`_drive`). Returns per-table batch results.
+        """Replay every captured table into its lake: one WAL read and one
+        bounds pass for all tables (each table's last offset among them),
+        then one ``CdcEngine`` drive per payload-shape group over its
+        projection of that read, concurrently (:meth:`_drive`). Each table
+        keeps its own batch ids, lineage, failure handling and committed
+        offset, and its drive ends at its own last row: a quiet table gets no
+        batch. Returns per-table batch results.
 
         After the pass, the dispatcher's per-partition offset map (one
         partition per captured table — GtidSet.java:36's per-source-UUID shape
@@ -170,7 +209,23 @@ class MultiTableEngine:
         and re-persisted: a resumed dispatcher can never move any table's
         committed offset backwards, even though each table commits
         independently."""
-        return self._drive(lambda eng: eng.run(**kw))
+        if not self.engines:
+            return self._drive([], None)
+        raw = self.spark.read.parquet(self.wal_path)
+        captured = list(self.engines)
+        bounds = self.engines[captured[0]]._bounds(
+            self._projection(captured)(raw), captured
+        )
+
+        def drive(names: list[str]) -> dict[str, list[dict[str, Any]]]:
+            engines = [self.engines[n] for n in names]
+            project = self._projection(names)
+            out = engines[0]._run_group(
+                engines, projection=project, scan=(project(raw), bounds), **kw
+            )
+            return dict(zip(names, out))
+
+        return self._drive(self._groups(), drive)
 
     def run_streaming(self, *, max_files_per_trigger: int | None = None):
         """Streaming drive parity: each per-table pipeline runs its own
@@ -182,32 +237,50 @@ class MultiTableEngine:
         run() by :meth:`_drive`; the per-table offset map is
         containment-checked and persisted exactly like run()."""
         return self._drive(
-            lambda eng: eng.run_streaming(
-                max_files_per_trigger=max_files_per_trigger
-            )
+            [[n] for n in self.engines],
+            lambda names: {
+                n: self.engines[n].run_streaming(
+                    max_files_per_trigger=max_files_per_trigger
+                )
+                for n in names
+            },
         )
 
-    def _drive(self, drive_one) -> dict[str, Any]:
-        """``drive_one(engine)`` for every captured table on a thread pool (one
-        worker per table, at most ``_MAX_WORKERS``). Each task carries the
-        caller's Spark local properties (job group, description, tags).
-        Every table runs to completion; then the first failure in
-        ``self.engines`` order is re-raised and the offset map is not
-        persisted."""
+    def _drive(self, groups: list[list[str]], drive_group) -> dict[str, Any]:
+        """``drive_group(names) -> {name: result}`` for every group of
+        captured tables on a thread pool (one worker per group, at most
+        ``_MAX_WORKERS``). Each task carries the caller's Spark local
+        properties (job group, description, tags) plus one
+        ``dbz-table-<name>`` job tag per member (Spark refuses a comma in a
+        tag, so the tags stay separate). Every group runs to completion; then
+        the first failure in group order is re-raised and the offset map is
+        not persisted."""
         from debezium_spark.sources.gtids import PartitionedOffsets
 
         prior = self.offsets(persisted=True)
-        workers = max(1, min(len(self.engines), _MAX_WORKERS))
+        sc = self.spark.sparkContext
+
+        def task(names: list[str]) -> dict[str, Any]:
+            tags = [f"dbz-table-{n}".replace(",", "_") for n in names]
+            for t in tags:
+                sc.addJobTag(t)
+            try:
+                return drive_group(names)
+            finally:
+                for t in tags:
+                    sc.removeJobTag(t)
+
+        workers = max(1, min(len(groups), _MAX_WORKERS))
         with ThreadPoolExecutor(max_workers=workers) as pool:
-            # one wrap per table: each gets its own copy of the properties
-            futures = {
-                name: pool.submit(
-                    inheritable_thread_target(self.spark)(drive_one), eng
-                )
-                for name, eng in self.engines.items()
-            }
-        # every table has finished; result() re-raises in self.engines order
-        results = {name: fut.result() for name, fut in futures.items()}
+            # one wrap per group: each gets its own copy of the properties
+            futures = [
+                pool.submit(inheritable_thread_target(self.spark)(task), names)
+                for names in groups
+            ]
+        # every group has finished; result() re-raises in group order
+        results: dict[str, Any] = {}
+        for fut in futures:
+            results.update(fut.result())
         now = self.offsets()
         # Monotonicity is asserted only over CURRENTLY captured tables — a
         # table excluded on restart keeps its persisted watermark (carried
@@ -221,7 +294,7 @@ class MultiTableEngine:
                 f"offset regression: persisted {captured_prior} not contained in {now}"
             )
         self._persist_offsets(now.merge(prior))
-        return results
+        return {n: results[n] for n in self.engines}
 
     # ------------------------------------------------- per-partition offsets
     @property
@@ -244,10 +317,9 @@ class MultiTableEngine:
                 return PartitionedOffsets()
         po = PartitionedOffsets()
         for name, eng in self.engines.items():
-            try:
-                off = eng.target().committed_max_offset
-            except FileNotFoundError:
+            if not LakeTable.exists(eng.target_path):
                 continue  # lake not created yet (no batch committed)
+            off = LakeTable(self.spark, eng.target_path).committed_max_offset
             if off >= 0:
                 po = po.advance(name, off)
         return po

@@ -47,13 +47,27 @@ def stateful_lww(
     Trade-off: the state holds each live key's whole winning row, like a
     compacted topic, not just its 8-byte ordinal: memory grows with payload
     width, in exchange for a plan Catalyst runs natively. Its layout follows
-    the payload schema (``state_layout``).
+    the payload schema (``stateful_lww_plan``).
     """
+    return stateful_lww_plan(env, key_cols=key_cols)[1]
+
+
+def stateful_lww_plan(
+    env: DataFrame, *, key_cols: tuple[str, ...]
+) -> tuple[str, DataFrame]:
+    """(state layout, :func:`stateful_lww` changelog) of ``env``, from one
+    build of the aggregation's input. The layout is a short hash of the
+    state the changelog keeps: the keys plus the ``max_by`` buffer (winner
+    row, rank), so DDL or a converter setting changes it as surely as a code
+    change. Spark refuses to resume a state store under another layout; a
+    checkpoint named by this hash is only resumed by a query that can read
+    it."""
+    ranked = _ranked(env, key_cols)
+    layout = hashlib.sha256(ranked.schema.json().encode()).hexdigest()[:12]
     now = F.current_timestamp()
     after = [F.col("_w").getField(c).alias(c) for c in _data_names(env, key_cols)]
-    return (
-        _ranked(env, key_cols)
-        .groupBy(*key_cols)
+    changelog = (
+        ranked.groupBy(*key_cols)
         .agg(F.max_by("_w", "_r").alias("_w"))
         .where(F.col("_w._seen") == now)
         .select(
@@ -61,16 +75,7 @@ def stateful_lww(
             "_w._offset", "_w._ts_ms",
         )
     )
-
-
-def state_layout(env: DataFrame, *, key_cols: tuple[str, ...]) -> str:
-    """Short hash of the state ``stateful_lww`` keeps over ``env``: the keys
-    plus the ``max_by`` buffer (winner row, rank), so DDL or a converter
-    setting changes it as surely as a code change. Spark refuses to resume a
-    state store under another layout; a checkpoint named by this hash is only
-    resumed by a query that can read it."""
-    schema = _ranked(env, key_cols).schema.json()
-    return hashlib.sha256(schema.encode()).hexdigest()[:12]
+    return layout, changelog
 
 
 def _ranked(env: DataFrame, key_cols: tuple[str, ...]) -> DataFrame:

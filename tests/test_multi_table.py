@@ -4,6 +4,7 @@ relational/Tables.java registry + EventDispatcher.java:189-196 routing."""
 
 import json
 import os
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -168,27 +169,14 @@ def test_offsets_survive_table_exclusion_on_restart(spark, tmpdir_path):
 
 
 def test_job_group_reaches_every_table(spark, tmpdir_path):
-    """The dispatcher drives each table on its own worker thread; a job group
-    the caller set must still reach every job of the run, every table's
-    included."""
+    """The dispatcher drives each payload-shape group on its own worker
+    thread; a job group the caller set must still reach every job of the
+    run, and the engine tags every table's jobs ``dbz-table-<name>`` on its
+    group's thread only."""
     wal_dir = os.path.join(tmpdir_path, "mwal5")
     spark.createDataFrame(_wal_rows(), WAL_SCHEMA).repartition(1).write.parquet(wal_dir)
     sc = spark.sparkContext
     eng = _mk(spark, tmpdir_path, wal_dir, "e")
-
-    def tag_jobs(real, tag):
-        # runs on the table's worker thread: tags that table's jobs only
-        def run(**kw):
-            sc.addJobTag(tag)
-            try:
-                return real(**kw)
-            finally:
-                sc.removeJobTag(tag)
-
-        return run
-
-    for name, e in eng.engines.items():
-        e.run = tag_jobs(e.run, f"dbz-test-table-{name}")
 
     sc.setJobGroup("dbz-test-before", "marks the job id before the run")
     spark.range(1).count()
@@ -209,15 +197,14 @@ def test_job_group_reaches_every_table(spark, tmpdir_path):
     run_jobs = set(range(before + 1, after))
     assert run_jobs and run_jobs <= in_group
     tagged = {
-        name: set(
-            sc._jsc.sc().statusTracker().getJobIdsForTag(f"dbz-test-table-{name}")
-        )
+        name: set(sc._jsc.sc().statusTracker().getJobIdsForTag(f"dbz-table-{name}"))
+        & run_jobs
         for name in eng.engines
     }
     for name, table_jobs in tagged.items():
-        assert table_jobs and table_jobs <= in_group, name
-    # each table's threads got their own copy of the properties: a tag added
-    # on one table's thread never reaches another table's jobs
+        assert table_jobs, name
+    # repos and users differ in shape, so they run on different threads: a
+    # tag added on one group's thread never reaches the other's jobs
     assert not tagged["repos"] & tagged["users"]
 
 
@@ -249,3 +236,234 @@ def test_failed_table_does_not_stop_the_others(spark, tmpdir_path):
     repos = {(r["repo"], r["path"]) for r in eng2.target("repos").read().collect()}
     assert repos == {("r1", "a.py"), ("r3", "c.rs")}
     assert eng2.offsets(persisted=True) == persisted
+
+
+# -- tables of one payload shape: one LWW pipeline, per-table lakes ----------
+
+SHAPE = ("a", "b", "c")
+
+
+def _shape_rows(offsets, tables=SHAPE):
+    """Same-DDL tables writing the SAME keys: creates, updates, deletes and
+    key-changing updates, round-robin over ``tables``."""
+    rows = []
+    for o in offsets:
+        t = tables[o % len(tables)]
+        key = dict(repo=f"r{o % 4}", path=f"p{o % 2}.py")
+        img = dict(key, commit=f"c{o}", content=f"{t}{o}")
+        kind = o % 6
+        if kind == 4:
+            op, before, after = "d", img, None
+        elif kind == 5:  # key change: the row moves to repo r?x
+            op, before, after = "u", img, dict(img, repo=key["repo"] + "x")
+            key = dict(key, repo=after["repo"])
+        elif kind >= 2:
+            op, before, after = "u", img, img
+        else:
+            op, before, after = "c", None, img
+        rows.append((
+            o, o * 10, op, t, _j(**key), before and _j(**before),
+            after and _j(**after), False, o // 8, 1,
+        ))
+    return rows
+
+
+def _append(spark, wal_dir, rows):
+    spark.createDataFrame(rows, WAL_SCHEMA).repartition(1).write.mode(
+        "append"
+    ).parquet(wal_dir)
+
+
+def _mk_shape(spark, tmpdir_path, wal_dir, sub, tables=SHAPE, **cfg):
+    return MultiTableEngine(
+        spark,
+        EngineConfig(**cfg),
+        wal_path=wal_dir,
+        target_root=os.path.join(tmpdir_path, "targets" + sub),
+        work_root=os.path.join(tmpdir_path, "work" + sub),
+        tables={
+            t: TableSpec(payload_ddl=REPOS_DDL, key_columns=("repo", "path"))
+            for t in tables
+        },
+    )
+
+
+def _state(lake):
+    return sorted(tuple(r) for r in lake.read().select(
+        "repo", "path", "commit", "content", "_offset").collect())
+
+
+def test_same_shape_group_matches_single_table_runs(spark, tmpdir_path):
+    """Same-DDL tables run as one group, fresh over several batches and then
+    resumed in one batch from unequal per-table offsets with one table still
+    empty, land exactly the lakes a single-table run of each table lands."""
+    wal = os.path.join(tmpdir_path, "swal")
+    _append(spark, wal, _shape_rows(range(1, 31)))
+    _mk_shape(spark, tmpdir_path, wal, "g", tables=("a", "b"),
+              max_offsets_per_batch=12).run()
+    _append(spark, wal, _shape_rows(range(31, 46)))
+    _mk_shape(spark, tmpdir_path, wal, "g", tables=("a",)).run()
+    _append(spark, wal, _shape_rows(range(46, 61)))
+
+    eng = _mk_shape(spark, tmpdir_path, wal, "g")
+    assert eng._groups() == [list(SHAPE)]
+    assert eng.offsets().get("a") == 45 and eng.offsets().get("b") == 30
+    assert eng.offsets().get("c") == -1  # no lake yet
+    eng.run()
+    for t in SHAPE:
+        solo = _mk_shape(spark, tmpdir_path, wal, "s" + t, tables=(t,))
+        solo.run()
+        assert _state(eng.target(t)) == _state(solo.target(t)), t
+        assert eng.target(t).committed_max_offset == 60
+    assert {r["content"][0] for r in eng.target("b").read().collect()} == {"b"}
+
+
+def test_group_member_failure_leaves_the_others_committed(spark, tmpdir_path):
+    """A null key in one table of a group under failure_handling='fail': the
+    other tables commit, the error is raised after them and the offset map
+    is not persisted."""
+    wal = os.path.join(tmpdir_path, "fwal")
+    _append(spark, wal, _shape_rows(range(1, 13)))
+    eng = _mk_shape(spark, tmpdir_path, wal, "f", failure_handling="fail")
+    eng.run()
+    persisted = eng.offsets(persisted=True)
+    more = [
+        (13, 130, "c", "b", None, None, _j(path="x.py", content="z"), False, 1, 1),
+    ] + [
+        (o, o * 10, "c", t, _j(repo="new", path="n.py"), None,
+         _j(repo="new", path="n.py", commit="c", content=t), False, 1, 1)
+        for o, t in ((14, "a"), (15, "c"))
+    ]
+    _append(spark, wal, more)
+    eng2 = _mk_shape(spark, tmpdir_path, wal, "f", failure_handling="fail")
+    with pytest.raises(ValueError, match="malformed key"):
+        eng2.run()
+    for t in ("a", "c"):
+        assert ("new", "n.py") in {
+            (r["repo"], r["path"]) for r in eng2.target(t).read().collect()
+        }, t
+        assert eng2.target(t).committed_max_offset == 15
+    assert eng2.target("b").committed_max_offset == persisted.get("b")
+    assert eng2.offsets(persisted=True) == persisted
+
+
+def _jobs_of(spark, fn, group):
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description",
+                    "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_group_jobs_grow_at_most_two_per_table(spark, tmpdir_path):
+    wal = os.path.join(tmpdir_path, "jwal")
+    _append(spark, wal, _shape_rows(range(1, 25)))
+    one = _jobs_of(
+        spark, _mk_shape(spark, tmpdir_path, wal, "j1", tables=("a",)).run,
+        "dbz-test-jobs-1",
+    )
+    three = _jobs_of(
+        spark, _mk_shape(spark, tmpdir_path, wal, "j3").run, "dbz-test-jobs-3"
+    )
+    assert one > 0 and three <= one + 2 * 2, (one, three)
+
+
+def test_group_projection_is_one_pushed_scan(spark, tmpdir_path):
+    """The group's projection of the shared WAL: the table filter reaches
+    the parquet scan, payloads are typed by one from_json, no Exchange and
+    no Python in the row path."""
+    wal = os.path.join(tmpdir_path, "pwal")
+    _append(spark, wal, _shape_rows(range(1, 7)))
+    eng = _mk_shape(spark, tmpdir_path, wal, "p")
+    frame = eng._projection(list(SHAPE))(spark.read.parquet(wal))
+    plan = frame._jdf.queryExecution().executedPlan().toString()
+    assert re.search(r"PushedFilters: \[[^\]]*In\(table", plan), plan
+    assert "from_json" in plan
+    assert "Exchange" not in plan and "EvalPython" not in plan
+
+
+def test_offsets_of_a_fresh_dispatcher_read_no_data(spark, tmpdir_path):
+    """offsets() reads manifests only: on a fresh dispatcher it is empty,
+    creates no lake and runs no Spark job."""
+    from debezium_spark.sources.gtids import PartitionedOffsets
+
+    wal = os.path.join(tmpdir_path, "owal")
+    _append(spark, wal, _shape_rows(range(1, 4)))
+    eng = _mk(spark, tmpdir_path, wal, "o")
+    got = {}
+    assert _jobs_of(spark, lambda: got.update(po=eng.offsets()), "dbz-test-offsets") == 0
+    assert got["po"] == PartitionedOffsets()
+    assert not os.path.exists(os.path.join(tmpdir_path, "targetso"))
+
+
+def test_quiet_tables_end_at_their_own_last_row(spark, tmpdir_path):
+    """Each table's drive ends at its own last row: in a step-limited run, a
+    table of a group that ends far below its group mate, and a table of
+    another shape, take only the batches their own rows need, and a later
+    run that only another table advanced commits nothing to them."""
+    wal = os.path.join(tmpdir_path, "qwal")
+    users = [
+        (o, o * 10, "c", "u", _j(user_id=o), None,
+         _j(user_id=o, name=f"n{o}", email="e"), False, 1, 1)
+        for o in (13, 14)
+    ]
+    _append(spark, wal, _shape_rows(range(1, 13), tables=("a", "b")) + users
+            + _shape_rows(range(15, 61), tables=("b",)))
+
+    def mk():
+        return MultiTableEngine(
+            spark, EngineConfig(max_offsets_per_batch=6), wal_path=wal,
+            target_root=os.path.join(tmpdir_path, "targetsq"),
+            work_root=os.path.join(tmpdir_path, "workq"),
+            tables={
+                "a": TableSpec(payload_ddl=REPOS_DDL, key_columns=("repo", "path")),
+                "b": TableSpec(payload_ddl=REPOS_DDL, key_columns=("repo", "path")),
+                "u": TableSpec(payload_ddl=USERS_DDL, key_columns=("user_id",)),
+            },
+        )
+
+    res = mk().run()
+    # a: (-1, 5], (5, 11], (11, 17]; u: one empty batch, then a jump to 14
+    assert len(res["a"]) == 3 and len(res["u"]) == 2, res
+    assert len(res["b"]) == 11
+    eng = mk()
+    assert {r["user_id"] for r in eng.target("u").read().collect()} == {13, 14}
+    ids = {t: eng.target(t).committed_batch_id for t in ("a", "u")}
+    _append(spark, wal, _shape_rows(range(61, 64), tables=("b",)))
+    res = eng.run()
+    assert res["a"] == [] and res["u"] == [] and len(res["b"]) == 1
+    assert {t: eng.target(t).committed_batch_id for t in ("a", "u")} == ids
+
+
+def test_group_stage_failure_spares_the_members_outside_the_batch(
+    spark, tmpdir_path, monkeypatch
+):
+    """A failure in the shared stage of a group's batch fails the members of
+    that batch only: a member whose lake is ahead of the failed batch still
+    runs to the end, then the error is raised and the offset map is not
+    persisted."""
+    from debezium_spark.plans.lake import LakeTable
+
+    wal = os.path.join(tmpdir_path, "xwal")
+    _append(spark, wal, _shape_rows(range(1, 31)))
+    _mk_shape(spark, tmpdir_path, wal, "x", tables=("a",)).run()
+    _append(spark, wal, _shape_rows(range(31, 46)))
+    eng = _mk_shape(spark, tmpdir_path, wal, "x", tables=("a", "b"),
+                    max_offsets_per_batch=10)
+    persisted = eng.offsets(persisted=True)
+
+    def boom(self, *a, **kw):
+        raise RuntimeError("injected staged-write failure")
+
+    # b's lake is empty, so its batches stage; a's lake is not, so a merges
+    monkeypatch.setattr(LakeTable, "stage_initial", boom)
+    with pytest.raises(RuntimeError, match="injected"):
+        eng.run()
+    assert eng.target("a").committed_max_offset == 45
+    assert "a45" in {r["content"] for r in eng.target("a").read().collect()}
+    assert eng.target("b").committed_max_offset == -1
+    assert eng.offsets(persisted=True) == persisted

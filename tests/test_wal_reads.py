@@ -1,6 +1,7 @@
 """Each drive reads the WAL once, at its start: one ``spark.read.parquet`` of
 the WAL path (one parquet footer job), whose frame every later step reuses —
-bounds, batches, signals, lake creation and snapshot chunks alike."""
+bounds, batches, signals, lake creation and snapshot chunks alike. A
+multi-table run reads it once for all of its tables."""
 
 import os
 
@@ -59,12 +60,30 @@ def test_streaming_drives_read_the_wal_once(spark, wal_dir, tmpdir_path, reads, 
     assert reads.count(wal_dir) == 1
 
 
-def test_multi_table_run_reads_the_wal_once_per_table(spark, tmpdir_path, reads):
+def test_stateful_drive_builds_the_envelope_once(
+    spark, wal_dir, tmpdir_path, monkeypatch
+):
+    # one envelope names the checkpoint (state layout) and feeds the query
+    calls = []
+    envelope = CdcEngine._envelope
+
+    def counted(self, *a, **kw):
+        calls.append(1)
+        return envelope(self, *a, **kw)
+
+    monkeypatch.setattr(CdcEngine, "_envelope", counted)
+    eng = _engine(spark, wal_dir, tmpdir_path)
+    eng.run_streaming_stateful()
+    assert eng.target().committed_batch_id >= 0 and len(calls) == 1
+
+
+def test_multi_table_run_reads_the_wal_once(spark, tmpdir_path, reads):
+    # one read for the dispatcher run, whatever the number of tables
     wal = os.path.join(tmpdir_path, "wal")
     spark.createDataFrame(_wal_rows(), WAL_SCHEMA).repartition(1).write.parquet(wal)
     meng = _mk(spark, tmpdir_path, wal, "")
     meng.run()
-    assert reads.count(wal) == len(meng.engines) == 2
+    assert len(meng.engines) == 2 and reads.count(wal) == 1
 
 
 def test_debezium_engine_run_reads_the_wal_once(spark, wal_dir, tmpdir_path, reads):

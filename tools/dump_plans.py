@@ -149,41 +149,6 @@ def main() -> None:
         p,
     ))
 
-    # --- multi-table dispatcher: per-table typed projection of the shared WAL
-    from debezium_spark.streaming.multi import MultiTableEngine, TableSpec
-
-    d3 = tempfile.mkdtemp(prefix="plans-multi-")
-    spark.createDataFrame(
-        [(1, 10, "c", "users", '{"uid": 1}', None, '{"uid": 1, "val": "x"}',
-          False, 0, 1),
-         (2, 20, "c", "items", '{"k": 9}', None, '{"k": 9, "val": "y"}',
-          False, 0, 1)],
-        "offset bigint, ts_ms bigint, op string, table string, key_json string,"
-        " before_json string, after_json string, is_tombstone boolean,"
-        " tx_id bigint, schema_version int",
-    ).write.parquet(os.path.join(d3, "wal"))
-    meng = MultiTableEngine(
-        spark, EngineConfig(),
-        wal_path=os.path.join(d3, "wal"),
-        target_root=os.path.join(d3, "t"), work_root=os.path.join(d3, "w"),
-        tables={"users": TableSpec(payload_ddl="uid bigint, val string",
-                                   key_columns=("uid",))},
-    )
-    p = formatted(meng.engines["users"]._wal())
-    sections.append((
-        "Multi-table dispatch: per-table typed projection of the shared WAL",
-        checks(p, {
-            # the table-or-signal filter reaches the parquet scan: an excluded
-            # table's segments prune on (table) min/max, signal rows survive
-            "table filter pushed": "PushedFilters" in p and "Or(EqualTo(table"
-            in p.replace("\n", " "),
-            "typed payloads (from_json, codegen)": "from_json" in p,
-            "no Exchange (pure scan+project)": "Exchange" not in p,
-            "no Python in row path": "EvalPython" not in p,
-        }),
-        p,
-    ))
-
     def add(name: str, want_fn) -> None:
         df = qs[name](spark, sf)
         p = formatted(df)
